@@ -17,8 +17,9 @@ dropped from the stdout copy (never from the detail file). Round 3
 lost its entire bench signal to this window — the line grew past the
 tail and the driver recorded "parsed": null.
 
-The N-vs-4N scaling study (local[8] vs local[32]) is a separate,
-longer run: tools/bench_scaling.py → BENCH.md.
+The N-vs-4N scaling study (local[8] vs local[32]) was a separate,
+longer run; its results are in BENCH.md and its scripts in the git
+history (tools/bench_scaling*.py, removed after commit ded8e5f).
 """
 
 from __future__ import annotations

@@ -1,5 +1,7 @@
 """Embedding near-dup LSH recall + stateful streaming sessionization."""
 
+import time
+
 import numpy as np
 import pandas as pd
 import pytest
@@ -92,7 +94,19 @@ def test_sessionize_stateful_streaming(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    # a processing-time timeout keeps scheduling no-data batches, so an
+    # availableNow query over this operator never terminates (and
+    # processAllAvailable never returns): wait until the batches have
+    # consumed every input row, then stop it rather than leak it
+    try:
+        deadline = time.monotonic() + 120
+        while (
+            sum(p["numInputRows"] for p in q.recentProgress) < len(pdf)
+            and time.monotonic() < deadline
+        ):
+            q.awaitTermination(0.5)
+    finally:
+        q.stop()
     rows = spark.table("sessions_out").collect()
     # closed sessions emitted: user 1's first session (2 events) closed
     # by its third event; user 2's session stays open in state

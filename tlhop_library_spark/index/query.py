@@ -37,6 +37,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     DoubleType,
+    IntegerType,
     LongType,
     StructField,
     StructType,
@@ -54,6 +55,16 @@ _EPS = 2.0 * 10.0 ** (-bm25.ROUND_DIGITS)
 _SCORE_SCHEMA = StructType(
     [StructField("doc_id", LongType()), StructField("score", DoubleType())]
 )
+
+
+def _empty_frame(spark: SparkSession, schema: StructType) -> DataFrame:
+    """Typed empty frame the optimizer can see is empty (an empty
+    Range — ``createDataFrame([])`` is an RDD scan of unknown size), so
+    a plan over a zero-match hit stream collapses to an empty local
+    scan instead of shuffling the other side of its joins."""
+    return spark.range(0).select(
+        *[F.lit(None).cast(f.dataType).alias(f.name) for f in schema.fields]
+    )
 
 
 # ---------------------------------------------------------------------
@@ -699,7 +710,8 @@ def group_topk_hits(
 ) -> DataFrame:
     """Shared top_hits grouping over a (doc_id, score) hit stream —
     used by :meth:`IndexReader.search_group_topk` and its sharded
-    federation. NULL group keys form no bucket."""
+    federation (a group may span shards; the post-union window
+    handles it exactly). NULL group keys form no bucket."""
     j = hits.join(
         docs.select("doc_id", group_field).where(
             F.col(group_field).isNotNull()
@@ -779,12 +791,13 @@ def counted_range_scorer(weight_of: dict,
     return score_range
 
 
-_COUNTED_SCHEMA = "doc_id long, score double, n_matched int"
+_COUNTED_SCHEMA = StructType(
+    _SCORE_SCHEMA.fields + [StructField("n_matched", IntegerType())]
+)
 
 
 def boosting_rank_hits(
-    pos: DataFrame, neg: "DataFrame | None", k: int,
-    negative_boost: float,
+    pos: DataFrame, neg: DataFrame, k: int, negative_boost: float,
 ) -> DataFrame:
     """Shared ES ``boosting`` query re-rank over hit streams: docs
     matching the positive query keep their BM25 score, demoted by
@@ -794,22 +807,17 @@ def boosting_rank_hits(
     ``ranked_topk`` (TakeOrderedAndProject)."""
     if not (0.0 <= negative_boost <= 1.0):
         raise ValueError("negative_boost must be in [0, 1]")
-    if neg is None:
-        demoted = pos.select("doc_id", "score")
-    else:
-        flags = neg.select("doc_id").distinct().withColumn(
-            "__neg", F.lit(1)
-        )
-        demoted = pos.join(flags, "doc_id", "left").select(
-            "doc_id",
-            F.round(
-                F.when(
-                    F.col("__neg").isNotNull(),
-                    F.col("score") * F.lit(float(negative_boost)),
-                ).otherwise(F.col("score")),
-                bm25.ROUND_DIGITS,
-            ).alias("score"),
-        )
+    flags = neg.select("doc_id").distinct().withColumn("__neg", F.lit(1))
+    demoted = pos.join(flags, "doc_id", "left").select(
+        "doc_id",
+        F.round(
+            F.when(
+                F.col("__neg").isNotNull(),
+                F.col("score") * F.lit(float(negative_boost)),
+            ).otherwise(F.col("score")),
+            bm25.ROUND_DIGITS,
+        ).alias("score"),
+    )
     from tlhop_library_spark.operators.relational import ranked_topk
 
     return ranked_topk(
@@ -839,7 +847,9 @@ def random_rank_hits(hits: DataFrame, k: int, seed: int) -> DataFrame:
     intermediate stays < 2^62: a raw ``doc_id * _RND_A`` overflows
     int64 for doc_id > ~8.36e9, where non-ANSI Spark wraps silently
     while the DuckDB oracle errors — at the advertised 10^12-doc
-    scale the engines would diverge (round-3 ADVICE)."""
+    scale the engines would diverge (round-3 ADVICE). The score is a
+    pure function of (doc_id, seed), so shard layout cannot change
+    it."""
     h0 = F.pmod(F.col("doc_id"), F.lit(_RND_M))
     h1 = F.pmod(
         h0 * F.lit(_RND_A) + F.lit(int(seed)),
@@ -1299,7 +1309,8 @@ def percentiles_agg_hits(
       Greenwald-Khanna summary (the same reason ES serves this agg
       from TDigest). Memory is O(accuracy · log n) per partial
       regardless of cardinality; guaranteed rank error ≤
-      1/accuracy. All requested percentiles share ONE sketch."""
+      1/accuracy. All requested percentiles share ONE sketch, whose
+      partials merge across shards like any other partial agg."""
     ps = [0.25, 0.5, 0.75] if percentiles is None else list(percentiles)
     if not ps or not all(0.0 <= p <= 1.0 for p in ps):
         raise ValueError("percentiles must be within [0, 1]")
@@ -1338,14 +1349,16 @@ def percentile_ranks_agg_hits(
     count_if per requested value over one pass — ES serves this from
     the same TDigest as percentiles; exactness is what makes the
     result engine-reproducible), rendered relationally as one row per
-    requested value, ascending: (value, pct), pct rounded to 4.
+    distinct requested value, ascending: (value, pct), pct rounded
+    to 4 — repeated values collapse to one row, and an empty matching
+    set gives NULL pct, as in the SQL oracle.
 
     One semi-join + ONE single-row aggregation computing every
     requested value's count simultaneously — |values| is the only
     growth axis, never the corpus."""
     if not values:
         raise ValueError("values must be non-empty")
-    vs = [float(x) for x in values]
+    vs = sorted({float(x) for x in values})
     v = F.col(field).cast("double")
     j = (
         docs.join(hits.select("doc_id"), "doc_id", "left_semi")
@@ -1369,7 +1382,8 @@ def percentile_ranks_agg_hits(
         rows.crossJoin(F.broadcast(agg))
         .select(
             "value",
-            F.round(cases * 100.0 / F.col("_n"), 4).alias("pct"),
+            F.round(F.try_divide(cases * 100.0, F.col("_n")), 4)
+            .alias("pct"),
         )
         .orderBy("value")
     )
@@ -1387,7 +1401,14 @@ def mad_agg_hits(
     the exact two-phase algorithm; each pass is one shuffle of the
     matching set's values. The exact-percentile scale ceiling of
     :func:`percentiles_agg_hits` applies — for continuous fields at
-    10^12 docs use ``approx_percentile`` percentiles instead."""
+    10^12 docs use ``approx_percentile`` percentiles instead.
+
+    The first median is collected EAGERLY (one Spark job at call
+    time, before the returned frame is used). An empty matching set
+    gives one row (mad NULL, n_used 0), like the SQL oracle. Both
+    medians run over the whole (for a federation: unioned) matching
+    set — exactness, not TDigest, is what makes a federated MAD equal
+    the single-index one."""
     v = F.col(field).cast("double")
     j = (
         docs.join(hits.select("doc_id"), "doc_id", "left_semi")
@@ -1396,8 +1417,9 @@ def mad_agg_hits(
     )
     med_row = j.agg(F.percentile("v", F.lit(0.5)).alias("m")).collect()[0]
     if med_row["m"] is None:
-        return docs.sparkSession.createDataFrame(
-            [], "mad double, n_used long"
+        return j.agg(
+            F.lit(None).cast("double").alias("mad"),
+            F.count("*").cast("long").alias("n_used"),
         )
     med = float(med_row["m"])
     return j.select(F.abs(F.col("v") - F.lit(med)).alias("d")).agg(
@@ -1444,7 +1466,9 @@ def string_stats_agg_hits(
     first), never corpus-sized. Per-character p·log2(p) terms sum in
     double precision (relative error ~1e-15 against the 4-decimal
     round, so summation order cannot flip the result across
-    engines)."""
+    engines). The character counts reduce over the whole (for a
+    federation: unioned) matching set BEFORE the entropy sum — a
+    per-shard entropy would not merge."""
     j = docs.join(hits.select("doc_id"), "doc_id", "left_semi").where(
         F.col(field).isNotNull()
     )
@@ -2162,7 +2186,8 @@ def composite_agg_hits(
 ) -> DataFrame:
     """Shared ES ``composite`` aggregation (paginated terms buckets)
     over a hit stream — used by :meth:`IndexReader.facet_composite`
-    and its sharded federation.
+    and its sharded federation (a bucket may span shards; the
+    post-union groupBy merges it exactly).
 
     Buckets of ``field`` among matching docs, key-ordered ascending,
     strictly AFTER the resume key, first ``size`` buckets — ES
@@ -2265,7 +2290,10 @@ def pipeline_aggs_hits(
     as :func:`date_histogram_hits`; the pipeline windows then run over
     the BUCKET LIST, whose cardinality is time-range/interval — a
     single-partition window over that list is the same bounded
-    coordinator-side reduction ES performs, never corpus-sized."""
+    coordinator-side reduction ES performs, never corpus-sized. For a
+    federation the parent buckets merge across shards BEFORE the
+    window pass — a per-shard cumulative sum would be wrong for any
+    bucket spanning shards."""
     allowed = {"hour", "day", "week", "month", "quarter", "year"}
     if interval not in allowed:
         raise ValueError(f"interval must be one of {sorted(allowed)}")
@@ -2346,7 +2374,9 @@ def auto_date_histogram_hits(
     distinct-bucket count simultaneously (6 countDistincts over the
     semi-joined scan — a single pass); the choice itself is a
     driver-side scalar, then the parent histogram runs at the chosen
-    interval exactly as :func:`date_histogram_hits`."""
+    interval exactly as :func:`date_histogram_hits`. The ladder runs
+    on the merged (for a federation: cross-shard) bucket counts —
+    per-shard choices could disagree."""
     if max_buckets < 1:
         raise ValueError("max_buckets must be >= 1")
     j = (
@@ -3732,7 +3762,455 @@ def _range_scorer(idf_map: dict[str, float], k: int, mode: str,
     return score_range
 
 
-class IndexReader:
+class HitStreamModes:
+    """Every mode that consumes the matching set as a hit stream —
+    facets/aggregations and hit-stream re-rankers — defined once for
+    :class:`IndexReader` and the federated
+    :class:`~tlhop_library_spark.index.sharded.ShardedIndexReader`.
+
+    A reader supplies two primitives, both with global statistics and
+    both returning a typed empty frame (never ``None``) on zero
+    matches, so each mode's zero-match result carries the non-empty
+    path's schema by construction:
+
+    - ``_matching_scores(query_text)`` → ``(doc_id long, score
+      double)`` for every doc matching the OR query;
+    - ``_counted_matching(query_text)`` → ``(doc_id, score,
+      n_matched)``, the counted stream ``terms_set`` consumes.
+
+    Shards hold disjoint doc_id spaces, so the federated stream is the
+    union index's stream and every mode here is shard-layout-
+    independent."""
+
+    def facet_cardinality(
+        self, query_text: str, docs: DataFrame, field: str,
+        k: "int | None" = None,
+    ) -> DataFrame:
+        """Cardinality aggregation over the matching set (ES
+        ``cardinality``): the number of distinct ``field`` values among
+        docs matching any query term (NULLs ignored, ES missing-value
+        semantics). One row ``(cardinality bigint)``.
+
+        ``k=None`` → exact ``countDistinct`` (one shuffle of distinct
+        values; fine up to huge-but-bounded cardinalities). ``k=int``
+        → the KMV sketch (``corpus_stats.kmv_distinct`` — mergeable,
+        O(k·partitions) reduce regardless of cardinality, exactly
+        reproducible across engines unlike HLL++ registers; the k
+        smallest hashes merge across shards exactly like across
+        partitions); returns its ``(kmv_estimate, k_used)`` row
+        instead."""
+        hits = self._matching_scores(query_text).select("doc_id")
+        # NULLs ignored up front (ES missing-value semantics) — also
+        # keeps the KMV path from hashing NULL into a phantom value
+        j = (
+            docs.join(hits, "doc_id", "left_semi")
+            .select(field)
+            .where(F.col(field).isNotNull())
+        )
+        if k is None:
+            return j.agg(
+                F.countDistinct(field).cast("long").alias("cardinality")
+            )
+        from tlhop_library_spark.operators.corpus_stats import (
+            kmv_distinct,
+        )
+
+        return kmv_distinct(j, field, k=k)
+
+    def search_boosting(
+        self, positive: str, negative: str, k: int = 10,
+        negative_boost: float = 0.5,
+    ) -> DataFrame:
+        """ES ``boosting`` query: positive-query BM25 ranking with
+        docs also matching the negative query demoted by
+        ``negative_boost`` (never filtered). Semantics + scale shape
+        in :func:`boosting_rank_hits`."""
+        pos = self._matching_scores(positive)
+        neg = self._matching_scores(negative)
+        return boosting_rank_hits(pos, neg, k, negative_boost)
+
+    def search_random(
+        self, query_text: str, k: int = 10, seed: int = 42,
+    ) -> DataFrame:
+        """ES ``function_score.random_score``: seeded deterministic
+        uniform re-ranking of the matching set (reproducible sampling
+        of matches — e.g. eyeballing a random page of hits at 10^12
+        docs without a global sort by anything data-dependent).
+        Semantics in :func:`random_rank_hits`."""
+        return random_rank_hits(
+            self._matching_scores(query_text), k, seed
+        )
+
+    def search_terms_set(
+        self, query_text: str, docs: DataFrame, msm_field: str,
+        k: int = 10,
+    ) -> DataFrame:
+        """ES ``terms_set`` query: docs qualify iff their DISTINCT
+        matched-term count ≥ their own ``msm_field`` value
+        (``minimum_should_match_field``). Semantics + scale shape in
+        :func:`terms_set_rank_hits`."""
+        return terms_set_rank_hits(
+            self._counted_matching(query_text), docs, msm_field, k
+        )
+
+    def facet_stats(
+        self, query_text: str, docs: DataFrame, field: str,
+        extended: bool = False,
+    ) -> DataFrame:
+        """ES ``stats`` / ``extended_stats`` aggregation over the
+        matching set: one row of (cnt, min_v, max_v, sum_v, avg_v
+        [, sum_sq, variance, std_dev]) for a numeric metadata field
+        of docs matching any query term. Semantics + scale shape in
+        :func:`stats_agg_hits`."""
+        hits = self._matching_scores(query_text).select("doc_id")
+        return stats_agg_hits(hits, docs, field, extended=extended)
+
+    def facet_composite(
+        self, query_text: str, docs: DataFrame, field: str,
+        size: int = 10, after: "str | None" = None,
+    ) -> DataFrame:
+        """ES ``composite`` aggregation — paginated terms buckets over
+        the matching set, key-ascending, resuming strictly after the
+        ``after`` key. Semantics + the sargable-resume scale shape in
+        :func:`composite_agg_hits`."""
+        hits = self._matching_scores(query_text).select("doc_id")
+        return composite_agg_hits(hits, docs, field, size, after=after)
+
+    def search_diversified(
+        self, query_text: str, docs: DataFrame, field: str,
+        max_per_key: int = 1, k: int = 10,
+    ) -> DataFrame:
+        """ES ``diversified_sampler``-style retrieval: BM25 top-k
+        with at most ``max_per_key`` hits per distinct ``field``
+        value (e.g. ≤1 hit per domain). Semantics + the global-
+        determinism difference from ES's per-shard sampler in
+        :func:`diversified_rank_hits`."""
+        return diversified_rank_hits(
+            self._matching_scores(query_text), docs, field,
+            max_per_key, k,
+        )
+
+    def search_rank_feature(
+        self, query_text: str, docs: DataFrame, field: str,
+        k: int = 10, function: str = "saturation",
+        pivot: float = 1.0, boost: float = 1.0,
+    ) -> DataFrame:
+        """ES ``rank_feature`` clause combined with the BM25 text
+        score (static doc-quality boosting — pagerank, freshness,
+        length priors). Semantics in :func:`rank_feature_rank_hits`."""
+        return rank_feature_rank_hits(
+            self._matching_scores(query_text), docs, field, k,
+            function=function, pivot=pivot, boost=boost,
+        )
+
+    def search_pinned(
+        self, query_text: str, docs: DataFrame,
+        pinned_ids: list[int], k: int = 10,
+    ) -> DataFrame:
+        """ES ``pinned`` query: curated docs first in list order,
+        then the organic BM25 ranking with pins removed. Semantics in
+        :func:`pinned_rank_hits`."""
+        return pinned_rank_hits(
+            self._matching_scores(query_text), docs, pinned_ids, k,
+        )
+
+    def facet_multi_terms(
+        self, query_text: str, docs: DataFrame, fields: list[str],
+        size: int = 10,
+    ) -> DataFrame:
+        """ES ``multi_terms`` aggregation: top-``size`` composite-key
+        buckets over the matching set, (doc_count DESC, key ASC).
+        Semantics in :func:`multi_terms_agg_hits`."""
+        return multi_terms_agg_hits(
+            self._matching_scores(query_text).select("doc_id"),
+            docs, fields, size,
+        )
+
+    def facet_adjacency_matrix(
+        self, named_queries: dict[str, str],
+    ) -> DataFrame:
+        """ES ``adjacency_matrix`` aggregation: singleton and
+        pairwise-intersection doc counts of the named filters'
+        matching sets. Semantics + scale shape in
+        :func:`adjacency_matrix_hits`; a filter with no matching doc
+        contributes no rows."""
+        return adjacency_matrix_hits({
+            name: self._matching_scores(q)
+            for name, q in named_queries.items()
+        })
+
+    def facet_filters(
+        self, named_queries: dict[str, str],
+        docs: "DataFrame | None" = None,
+    ) -> DataFrame:
+        """ES ``filters`` aggregation: per-named-filter matching-doc
+        counts, with an ``__other__`` bucket (docs matching no
+        filter) when a context ``docs`` table is given. Semantics in
+        :func:`filters_agg_hits`; a filter with no matching doc
+        counts 0."""
+        return filters_agg_hits({
+            name: self._matching_scores(q)
+            for name, q in named_queries.items()
+        }, docs)
+
+    def facet_histogram(
+        self, query_text: str, docs: DataFrame, field: str,
+        interval: float,
+    ) -> DataFrame:
+        """ES ``histogram`` aggregation: fixed-interval numeric
+        buckets of the matching docs' field. Semantics in
+        :func:`histogram_agg_hits`."""
+        return histogram_agg_hits(
+            self._matching_scores(query_text).select("doc_id"),
+            docs, field, interval,
+        )
+
+    def facet_terms_stats(
+        self, query_text: str, docs: DataFrame, key_field: str,
+        metric_field: str, size: int = 10,
+    ) -> DataFrame:
+        """ES ``terms`` aggregation with a ``stats`` sub-agg: top
+        buckets by doc_count, each with the bucket's metric stats.
+        Semantics in :func:`terms_stats_agg_hits`."""
+        return terms_stats_agg_hits(
+            self._matching_scores(query_text).select("doc_id"),
+            docs, key_field, metric_field, size,
+        )
+
+    def facet_weighted_avg(
+        self, query_text: str, docs: DataFrame, value_field: str,
+        weight_field: str,
+    ) -> DataFrame:
+        """ES ``weighted_avg`` aggregation over the matching set.
+        Semantics in :func:`weighted_avg_agg_hits`."""
+        return weighted_avg_agg_hits(
+            self._matching_scores(query_text).select("doc_id"),
+            docs, value_field, weight_field,
+        )
+
+    def facet_percentiles(
+        self, query_text: str, docs: DataFrame, field: str,
+        percentiles: "list[float] | None" = None,
+        approx: bool = False, accuracy: int = 10000,
+    ) -> DataFrame:
+        """ES ``percentiles`` aggregation over the matching set.
+        ``approx=True`` switches the exact (oracle-reproducible)
+        percentile to the bounded-memory mergeable sketch — the
+        documented default for continuous/high-cardinality fields at
+        scale. Semantics + scale contract in
+        :func:`percentiles_agg_hits`."""
+        return percentiles_agg_hits(
+            self._matching_scores(query_text).select("doc_id"),
+            docs, field, percentiles, approx=approx, accuracy=accuracy,
+        )
+
+    def facet_missing(
+        self, query_text: str, docs: DataFrame, field: str,
+    ) -> DataFrame:
+        """ES ``missing`` aggregation over the matching set.
+        Semantics in :func:`missing_agg_hits`."""
+        return missing_agg_hits(
+            self._matching_scores(query_text).select("doc_id"),
+            docs, field,
+        )
+
+    def facet_percentile_ranks(
+        self, query_text: str, docs: DataFrame, field: str,
+        values: list[float],
+    ) -> DataFrame:
+        """ES ``percentile_ranks`` over the matching set — exact
+        inverse percentiles. Semantics in
+        :func:`percentile_ranks_agg_hits`."""
+        return percentile_ranks_agg_hits(
+            self._matching_scores(query_text).select("doc_id"),
+            docs, field, values,
+        )
+
+    def facet_mad(
+        self, query_text: str, docs: DataFrame, field: str,
+    ) -> DataFrame:
+        """ES ``median_absolute_deviation`` over the matching set —
+        exact two-phase. Semantics in :func:`mad_agg_hits`."""
+        return mad_agg_hits(
+            self._matching_scores(query_text).select("doc_id"),
+            docs, field,
+        )
+
+    def facet_boxplot(
+        self, query_text: str, docs: DataFrame, field: str,
+    ) -> DataFrame:
+        """ES ``boxplot`` over the matching set — exact quartiles.
+        Semantics in :func:`boxplot_agg_hits`."""
+        return boxplot_agg_hits(
+            self._matching_scores(query_text).select("doc_id"),
+            docs, field,
+        )
+
+    def facet_string_stats(
+        self, query_text: str, docs: DataFrame, field: str,
+    ) -> DataFrame:
+        """ES ``string_stats`` over the matching set (lengths +
+        character entropy). Semantics in
+        :func:`string_stats_agg_hits`."""
+        return string_stats_agg_hits(
+            self._matching_scores(query_text).select("doc_id"),
+            docs, field,
+        )
+
+    def facet_top_metrics(
+        self, query_text: str, docs: DataFrame, sort_field: str,
+        metric_field: str, size: int = 1, asc: bool = False,
+    ) -> DataFrame:
+        """ES ``top_metrics`` over the matching set. Semantics in
+        :func:`top_metrics_agg_hits`."""
+        return top_metrics_agg_hits(
+            self._matching_scores(query_text).select("doc_id"),
+            docs, sort_field, metric_field, size, asc,
+        )
+
+    def facet_t_test(
+        self, query_text: str, docs: DataFrame, field: str,
+        group_field: str,
+    ) -> DataFrame:
+        """ES ``t_test`` (Welch) over the matching set — returns the
+        exact statistic (see deviation note in
+        :func:`t_test_agg_hits`)."""
+        return t_test_agg_hits(
+            self._matching_scores(query_text).select("doc_id"),
+            docs, field, group_field,
+        )
+
+    def facet_rare_terms(
+        self, query_text: str, docs: DataFrame, field: str,
+        max_doc_count: int = 1, max_buckets: int = 1000,
+    ) -> DataFrame:
+        """ES ``rare_terms`` aggregation over the matching set —
+        exact long-tail buckets with an explicit bucket budget.
+        Semantics in :func:`rare_terms_agg_hits`."""
+        return rare_terms_agg_hits(
+            self._matching_scores(query_text).select("doc_id"),
+            docs, field, max_doc_count, max_buckets,
+        )
+
+    def search_scan(
+        self, query_text: str, slice_id: int = 0, n_slices: int = 1,
+    ) -> DataFrame:
+        """Scroll/scan retrieval (ES sliced scroll over a QUERY, not
+        just a table): EVERY matching doc with its BM25 score —
+        (doc_id, score), unranked and unlimited — optionally cut to
+        deterministic slice ``slice_id`` of ``n_slices`` with the
+        same md5 rule as :func:`operators.corpus_stats.slice_scan`
+        (disjoint, exactly tiling, layout-independent). The shape a
+        parallel reindex/export of a query's result set uses: each
+        worker pulls its slice with no coordination, no global sort,
+        no top-k heap — the hit stream stays distributed end to end.
+        The slice rule is a pure function of doc_id, so slices agree
+        with any sharding."""
+        from tlhop_library_spark.operators.corpus_stats import slice_scan
+
+        hits = self._matching_scores(query_text)
+        if n_slices <= 1:
+            if n_slices != 1 or slice_id != 0:
+                raise ValueError("need 0 <= slice_id < n_slices")
+            return hits
+        return slice_scan(hits, slice_id, n_slices)
+
+    def facet_date_histogram(
+        self, query_text: str, docs: DataFrame, ts_col: str,
+        interval: str = "day",
+    ) -> DataFrame:
+        """ES ``date_histogram`` (calendar_interval) over the matching
+        set: non-empty ``date_trunc(interval)`` buckets of ``ts_col``
+        with per-bucket doc counts, keyed as epoch millis + a rendered
+        ``key_as_string``, ascending. Semantics + scale shape in
+        :func:`date_histogram_hits`."""
+        hits = self._matching_scores(query_text).select("doc_id")
+        return date_histogram_hits(hits, docs, ts_col, interval)
+
+    def facet_pipeline(
+        self, query_text: str, docs: DataFrame, ts_col: str,
+        interval: str = "day", metric_field: "str | None" = None,
+        window: int = 3, min_metric: "float | None" = None,
+        sort_by_metric: bool = False, size: "int | None" = None,
+    ) -> DataFrame:
+        """ES pipeline aggregations (cumulative_sum / derivative /
+        moving_fn avg / bucket_script / bucket_selector /
+        bucket_sort) over a date_histogram of the matching set.
+        Semantics + scale shape in :func:`pipeline_aggs_hits`."""
+        hits = self._matching_scores(query_text).select("doc_id")
+        return pipeline_aggs_hits(
+            hits, docs, ts_col, interval, metric_field, window,
+            min_metric, sort_by_metric, size,
+        )
+
+    def facet_auto_date_histogram(
+        self, query_text: str, docs: DataFrame, ts_col: str,
+        max_buckets: int = 20,
+    ) -> DataFrame:
+        """ES ``auto_date_histogram`` over the matching set —
+        interval auto-chosen from the calendar ladder. Semantics in
+        :func:`auto_date_histogram_hits`."""
+        hits = self._matching_scores(query_text).select("doc_id")
+        return auto_date_histogram_hits(hits, docs, ts_col, max_buckets)
+
+    def search_decay(
+        self, query_text: str, docs: DataFrame, field: str,
+        origin: float, scale: float, k: int = 10, decay: float = 0.5,
+        offset: float = 0.0, fn: str = "gauss",
+    ) -> DataFrame:
+        """function_score decay retrieval (Elasticsearch
+        ``function_score`` with a ``gauss``/``exp``/``linear`` decay
+        over a numeric field, multiply boost mode): every matching
+        doc's BM25 score is multiplied by a factor in (0, 1] that
+        decays with the field's distance from ``origin`` — factor
+        ``decay`` exactly at distance ``scale`` (past ``offset``).
+        The canonical recency/geo re-ranker (e.g. field =
+        epoch-seconds of ``warc_ts``).
+
+            d = max(0, |x − origin| − offset)
+            gauss:  exp(−d² / (2σ²)),  σ² = −scale² / (2·ln decay)
+            exp:    exp(d · ln(decay) / scale)
+            linear: max(0, (s − d) / s),  s = scale / (1 − decay)
+
+        A NULL field scores as factor 1 (ES semantics: docs missing
+        the field are not decayed). Shape: hit stream equi-joined to
+        the docs scan, decay factor as a pure JVM column expression,
+        ``ranked_topk`` — fully distributed, no Python in the hot
+        path. Returns (rank, doc_id, score)."""
+        return decay_rank_hits(
+            self._matching_scores(query_text), docs, field,
+            origin, scale, k, decay, offset, fn,
+        )
+
+    def search_group_topk(
+        self, query_text: str, docs: DataFrame, group_field: str,
+        n_groups: int = 5, per_group: int = 3,
+    ) -> DataFrame:
+        """Grouped retrieval with hits per group (Elasticsearch
+        ``top_hits`` aggregation / Lucene grouping with
+        ``groupDocsLimit``): the top ``n_groups`` groups ranked by
+        their best matching doc's score, each carrying its own top
+        ``per_group`` docs. :meth:`search_collapse` is the
+        ``per_group=1`` projection of this.
+
+        Docs with a NULL group key are excluded (ES terms-aggregation
+        semantics: missing keys form no bucket — unlike
+        :meth:`search_collapse`, which keeps NULL as a group).
+
+        Shape: hit stream joined to the docs scan, ONE window
+        partitioned by the group field (distributed — group
+        cardinality is the parallelism, never a single partition),
+        ``ranked_topk`` over the one-best-per-group survivors to pick
+        the groups, then a broadcast-sized join back to the ≤
+        per_group rows. Returns (group_rank, <group_field>, hit_rank,
+        doc_id, score) ordered by (group_rank, hit_rank)."""
+        return group_topk_hits(
+            self._matching_scores(query_text), docs, group_field,
+            n_groups, per_group,
+        )
+
+
+class IndexReader(HitStreamModes):
     def __init__(
         self, spark: SparkSession, index_dir: str,
         preload_dictionary: int | None = 2_000_000,
@@ -5312,70 +5790,13 @@ class IndexReader:
             )
         return self._search_with_info(info, k, mode)
 
-    def facet_cardinality(
-        self, query_text: str, docs: DataFrame, field: str,
-        k: "int | None" = None,
-    ) -> DataFrame:
-        """Cardinality aggregation over the matching set (ES
-        ``cardinality``): the number of distinct ``field`` values among
-        docs matching any query term (NULLs ignored, ES missing-value
-        semantics). One row ``(cardinality bigint)``.
-
-        ``k=None`` → exact ``countDistinct`` (one shuffle of distinct
-        values; fine up to huge-but-bounded cardinalities). ``k=int``
-        → the KMV sketch (``corpus_stats.kmv_distinct`` — mergeable,
-        O(k·partitions) reduce regardless of cardinality, exactly
-        reproducible across engines unlike HLL++ registers); returns
-        its ``(kmv_estimate, k_used)`` row instead."""
-        hits = self._matching_scores(query_text).select("doc_id")
-        # NULLs ignored up front (ES missing-value semantics) — also
-        # keeps the KMV path from hashing NULL into a phantom value
-        j = (
-            docs.join(hits, "doc_id", "left_semi")
-            .select(field)
-            .where(F.col(field).isNotNull())
-        )
-        if k is None:
-            return j.agg(
-                F.countDistinct(field).cast("long").alias("cardinality")
-            )
-        from tlhop_library_spark.operators.corpus_stats import (
-            kmv_distinct,
-        )
-
-        return kmv_distinct(j, field, k=k)
-
-    def search_boosting(
-        self, positive: str, negative: str, k: int = 10,
-        negative_boost: float = 0.5,
-    ) -> DataFrame:
-        """ES ``boosting`` query: positive-query BM25 ranking with
-        docs also matching the negative query demoted by
-        ``negative_boost`` (never filtered). Semantics + scale shape
-        in :func:`boosting_rank_hits`."""
-        pos = self._matching_scores(positive)
-        neg = self._matching_scores(negative)
-        return boosting_rank_hits(pos, neg, k, negative_boost)
-
-    def search_random(
-        self, query_text: str, k: int = 10, seed: int = 42,
-    ) -> DataFrame:
-        """ES ``function_score.random_score``: seeded deterministic
-        uniform re-ranking of the matching set (reproducible sampling
-        of matches — e.g. eyeballing a random page of hits at 10^12
-        docs without a global sort by anything data-dependent).
-        Semantics in :func:`random_rank_hits`."""
-        return random_rank_hits(
-            self._matching_scores(query_text), k, seed
-        )
-
-    def _counted_matching(self, query_text: str) -> "DataFrame | None":
+    def _counted_matching(self, query_text: str) -> DataFrame:
         """(doc_id, score, n_matched) for every matching doc — the
         counted hit stream terms_set consumes."""
         terms = sorted(set(py_tokens(query_text)))
         info = self.lookup_terms_full(terms)
         if not info:
-            return None
+            return _empty_frame(self.spark, _COUNTED_SCHEMA)
         scorer = counted_range_scorer(
             self._bm25_weight_fns(info), deleted=self._deleted
         )
@@ -5384,331 +5805,6 @@ class IndexReader:
         ).applyInPandas(
             lambda key, pdf: scorer(key, pdf), schema=_COUNTED_SCHEMA
         )
-
-    def search_terms_set(
-        self, query_text: str, docs: DataFrame, msm_field: str,
-        k: int = 10,
-    ) -> DataFrame:
-        """ES ``terms_set`` query: docs qualify iff their DISTINCT
-        matched-term count ≥ their own ``msm_field`` value
-        (``minimum_should_match_field``). Semantics + scale shape in
-        :func:`terms_set_rank_hits`."""
-        counted = self._counted_matching(query_text)
-        if counted is None:
-            return self.spark.createDataFrame(
-                [], "rank int, doc_id long, score double"
-            )
-        return terms_set_rank_hits(counted, docs, msm_field, k)
-
-    def facet_stats(
-        self, query_text: str, docs: DataFrame, field: str,
-        extended: bool = False,
-    ) -> DataFrame:
-        """ES ``stats`` / ``extended_stats`` aggregation over the
-        matching set: one row of (cnt, min_v, max_v, sum_v, avg_v
-        [, sum_sq, variance, std_dev]) for a numeric metadata field
-        of docs matching any query term. Semantics + scale shape in
-        :func:`stats_agg_hits`."""
-        hits = self._matching_scores(query_text).select("doc_id")
-        return stats_agg_hits(hits, docs, field, extended=extended)
-
-    def facet_composite(
-        self, query_text: str, docs: DataFrame, field: str,
-        size: int = 10, after: "str | None" = None,
-    ) -> DataFrame:
-        """ES ``composite`` aggregation — paginated terms buckets over
-        the matching set, key-ascending, resuming strictly after the
-        ``after`` key. Semantics + the sargable-resume scale shape in
-        :func:`composite_agg_hits`."""
-        hits = self._matching_scores(query_text).select("doc_id")
-        return composite_agg_hits(hits, docs, field, size, after=after)
-
-    def search_diversified(
-        self, query_text: str, docs: DataFrame, field: str,
-        max_per_key: int = 1, k: int = 10,
-    ) -> DataFrame:
-        """ES ``diversified_sampler``-style retrieval: BM25 top-k
-        with at most ``max_per_key`` hits per distinct ``field``
-        value (e.g. ≤1 hit per domain). Semantics + the global-
-        determinism difference from ES's per-shard sampler in
-        :func:`diversified_rank_hits`."""
-        return diversified_rank_hits(
-            self._matching_scores(query_text), docs, field,
-            max_per_key, k,
-        )
-
-    def search_rank_feature(
-        self, query_text: str, docs: DataFrame, field: str,
-        k: int = 10, function: str = "saturation",
-        pivot: float = 1.0, boost: float = 1.0,
-    ) -> DataFrame:
-        """ES ``rank_feature`` clause combined with the BM25 text
-        score (static doc-quality boosting — pagerank, freshness,
-        length priors). Semantics in :func:`rank_feature_rank_hits`."""
-        return rank_feature_rank_hits(
-            self._matching_scores(query_text), docs, field, k,
-            function=function, pivot=pivot, boost=boost,
-        )
-
-    def search_pinned(
-        self, query_text: str, docs: DataFrame,
-        pinned_ids: list[int], k: int = 10,
-    ) -> DataFrame:
-        """ES ``pinned`` query: curated docs first in list order,
-        then the organic BM25 ranking with pins removed. Semantics in
-        :func:`pinned_rank_hits`."""
-        return pinned_rank_hits(
-            self._matching_scores(query_text), docs, pinned_ids, k,
-        )
-
-    def facet_multi_terms(
-        self, query_text: str, docs: DataFrame, fields: list[str],
-        size: int = 10,
-    ) -> DataFrame:
-        """ES ``multi_terms`` aggregation: top-``size`` composite-key
-        buckets over the matching set, (doc_count DESC, key ASC).
-        Semantics in :func:`multi_terms_agg_hits`."""
-        return multi_terms_agg_hits(
-            self._matching_scores(query_text).select("doc_id"),
-            docs, fields, size,
-        )
-
-    def facet_adjacency_matrix(
-        self, named_queries: dict[str, str],
-    ) -> DataFrame:
-        """ES ``adjacency_matrix`` aggregation: singleton and
-        pairwise-intersection doc counts of the named filters'
-        matching sets. Semantics + scale shape in
-        :func:`adjacency_matrix_hits`; filters whose terms are all
-        absent from the dictionary contribute no rows."""
-        streams = {}
-        for name, q in named_queries.items():
-            terms = sorted(set(py_tokens(q)))
-            if self.lookup_terms(terms):
-                streams[name] = self._matching_scores(q)
-        if not streams:
-            return self.spark.createDataFrame(
-                [], "key1 string, key2 string, doc_count long"
-            )
-        return adjacency_matrix_hits(streams)
-
-    def facet_filters(
-        self, named_queries: dict[str, str],
-        docs: "DataFrame | None" = None,
-    ) -> DataFrame:
-        """ES ``filters`` aggregation: per-named-filter matching-doc
-        counts, with an ``__other__`` bucket (docs matching no
-        filter) when a context ``docs`` table is given. Semantics in
-        :func:`filters_agg_hits`; filters whose terms are all absent
-        from the dictionary count 0."""
-        streams = {}
-        for name, q in named_queries.items():
-            terms = sorted(set(py_tokens(q)))
-            if self.lookup_terms(terms):
-                streams[name] = self._matching_scores(q)
-            else:
-                streams[name] = self.spark.createDataFrame(
-                    [], "doc_id long, score double"
-                )
-        return filters_agg_hits(streams, docs)
-
-    def facet_histogram(
-        self, query_text: str, docs: DataFrame, field: str,
-        interval: float,
-    ) -> DataFrame:
-        """ES ``histogram`` aggregation: fixed-interval numeric
-        buckets of the matching docs' field. Semantics in
-        :func:`histogram_agg_hits`."""
-        return histogram_agg_hits(
-            self._matching_scores(query_text).select("doc_id"),
-            docs, field, interval,
-        )
-
-    def facet_terms_stats(
-        self, query_text: str, docs: DataFrame, key_field: str,
-        metric_field: str, size: int = 10,
-    ) -> DataFrame:
-        """ES ``terms`` aggregation with a ``stats`` sub-agg: top
-        buckets by doc_count, each with the bucket's metric stats.
-        Semantics in :func:`terms_stats_agg_hits`."""
-        return terms_stats_agg_hits(
-            self._matching_scores(query_text).select("doc_id"),
-            docs, key_field, metric_field, size,
-        )
-
-    def facet_weighted_avg(
-        self, query_text: str, docs: DataFrame, value_field: str,
-        weight_field: str,
-    ) -> DataFrame:
-        """ES ``weighted_avg`` aggregation over the matching set.
-        Semantics in :func:`weighted_avg_agg_hits`."""
-        return weighted_avg_agg_hits(
-            self._matching_scores(query_text).select("doc_id"),
-            docs, value_field, weight_field,
-        )
-
-    def facet_percentiles(
-        self, query_text: str, docs: DataFrame, field: str,
-        percentiles: "list[float] | None" = None,
-        approx: bool = False, accuracy: int = 10000,
-    ) -> DataFrame:
-        """ES ``percentiles`` aggregation over the matching set.
-        ``approx=True`` switches the exact (oracle-reproducible)
-        percentile to the bounded-memory mergeable sketch — the
-        documented default for continuous/high-cardinality fields at
-        scale. Semantics + scale contract in
-        :func:`percentiles_agg_hits`."""
-        return percentiles_agg_hits(
-            self._matching_scores(query_text).select("doc_id"),
-            docs, field, percentiles, approx=approx, accuracy=accuracy,
-        )
-
-    def facet_missing(
-        self, query_text: str, docs: DataFrame, field: str,
-    ) -> DataFrame:
-        """ES ``missing`` aggregation over the matching set.
-        Semantics in :func:`missing_agg_hits`."""
-        return missing_agg_hits(
-            self._matching_scores(query_text).select("doc_id"),
-            docs, field,
-        )
-
-    def facet_percentile_ranks(
-        self, query_text: str, docs: DataFrame, field: str,
-        values: list[float],
-    ) -> DataFrame:
-        """ES ``percentile_ranks`` over the matching set — exact
-        inverse percentiles. Semantics in
-        :func:`percentile_ranks_agg_hits`."""
-        return percentile_ranks_agg_hits(
-            self._matching_scores(query_text).select("doc_id"),
-            docs, field, values,
-        )
-
-    def facet_mad(
-        self, query_text: str, docs: DataFrame, field: str,
-    ) -> DataFrame:
-        """ES ``median_absolute_deviation`` over the matching set —
-        exact two-phase. Semantics in :func:`mad_agg_hits`."""
-        return mad_agg_hits(
-            self._matching_scores(query_text).select("doc_id"),
-            docs, field,
-        )
-
-    def facet_boxplot(
-        self, query_text: str, docs: DataFrame, field: str,
-    ) -> DataFrame:
-        """ES ``boxplot`` over the matching set — exact quartiles.
-        Semantics in :func:`boxplot_agg_hits`."""
-        return boxplot_agg_hits(
-            self._matching_scores(query_text).select("doc_id"),
-            docs, field,
-        )
-
-    def facet_string_stats(
-        self, query_text: str, docs: DataFrame, field: str,
-    ) -> DataFrame:
-        """ES ``string_stats`` over the matching set (lengths +
-        character entropy). Semantics in
-        :func:`string_stats_agg_hits`."""
-        return string_stats_agg_hits(
-            self._matching_scores(query_text).select("doc_id"),
-            docs, field,
-        )
-
-    def facet_top_metrics(
-        self, query_text: str, docs: DataFrame, sort_field: str,
-        metric_field: str, size: int = 1, asc: bool = False,
-    ) -> DataFrame:
-        """ES ``top_metrics`` over the matching set. Semantics in
-        :func:`top_metrics_agg_hits`."""
-        return top_metrics_agg_hits(
-            self._matching_scores(query_text).select("doc_id"),
-            docs, sort_field, metric_field, size, asc,
-        )
-
-    def facet_t_test(
-        self, query_text: str, docs: DataFrame, field: str,
-        group_field: str,
-    ) -> DataFrame:
-        """ES ``t_test`` (Welch) over the matching set — returns the
-        exact statistic (see deviation note in
-        :func:`t_test_agg_hits`)."""
-        return t_test_agg_hits(
-            self._matching_scores(query_text).select("doc_id"),
-            docs, field, group_field,
-        )
-
-    def facet_rare_terms(
-        self, query_text: str, docs: DataFrame, field: str,
-        max_doc_count: int = 1, max_buckets: int = 1000,
-    ) -> DataFrame:
-        """ES ``rare_terms`` aggregation over the matching set —
-        exact long-tail buckets with an explicit bucket budget.
-        Semantics in :func:`rare_terms_agg_hits`."""
-        return rare_terms_agg_hits(
-            self._matching_scores(query_text).select("doc_id"),
-            docs, field, max_doc_count, max_buckets,
-        )
-
-    def search_scan(
-        self, query_text: str, slice_id: int = 0, n_slices: int = 1,
-    ) -> DataFrame:
-        """Scroll/scan retrieval (ES sliced scroll over a QUERY, not
-        just a table): EVERY matching doc with its BM25 score —
-        (doc_id, score), unranked and unlimited — optionally cut to
-        deterministic slice ``slice_id`` of ``n_slices`` with the
-        same md5 rule as :func:`operators.corpus_stats.slice_scan`
-        (disjoint, exactly tiling, layout-independent). The shape a
-        parallel reindex/export of a query's result set uses: each
-        worker pulls its slice with no coordination, no global sort,
-        no top-k heap — the hit stream stays distributed end to end."""
-        from tlhop_library_spark.operators.corpus_stats import slice_scan
-
-        hits = self._matching_scores(query_text)
-        if n_slices <= 1:
-            if n_slices != 1 or slice_id != 0:
-                raise ValueError("need 0 <= slice_id < n_slices")
-            return hits
-        return slice_scan(hits, slice_id, n_slices)
-
-    def facet_date_histogram(
-        self, query_text: str, docs: DataFrame, ts_col: str,
-        interval: str = "day",
-    ) -> DataFrame:
-        """ES ``date_histogram`` (calendar_interval) over the matching
-        set: non-empty ``date_trunc(interval)`` buckets of ``ts_col``
-        with per-bucket doc counts, keyed as epoch millis + a rendered
-        ``key_as_string``, ascending. Semantics + scale shape in
-        :func:`date_histogram_hits`."""
-        hits = self._matching_scores(query_text).select("doc_id")
-        return date_histogram_hits(hits, docs, ts_col, interval)
-
-    def facet_pipeline(
-        self, query_text: str, docs: DataFrame, ts_col: str,
-        interval: str = "day", metric_field: "str | None" = None,
-        window: int = 3, min_metric: "float | None" = None,
-        sort_by_metric: bool = False, size: "int | None" = None,
-    ) -> DataFrame:
-        """ES pipeline aggregations (cumulative_sum / derivative /
-        moving_fn avg / bucket_script / bucket_selector /
-        bucket_sort) over a date_histogram of the matching set.
-        Semantics + scale shape in :func:`pipeline_aggs_hits`."""
-        hits = self._matching_scores(query_text).select("doc_id")
-        return pipeline_aggs_hits(
-            hits, docs, ts_col, interval, metric_field, window,
-            min_metric, sort_by_metric, size,
-        )
-
-    def facet_auto_date_histogram(
-        self, query_text: str, docs: DataFrame, ts_col: str,
-        max_buckets: int = 20,
-    ) -> DataFrame:
-        """ES ``auto_date_histogram`` over the matching set —
-        interval auto-chosen from the calendar ladder. Semantics in
-        :func:`auto_date_histogram_hits`."""
-        hits = self._matching_scores(query_text).select("doc_id")
-        return auto_date_histogram_hits(hits, docs, ts_col, max_buckets)
 
     def facet_counts(
         self, query_text: str, docs: DataFrame, facet_col: str = "lang"
@@ -5998,9 +6094,8 @@ class IndexReader:
         the corpus; the segment scan is still (bucket, tid)-pruned."""
         terms = sorted(set(py_tokens(query_text)))
         info = self.lookup_terms_full(terms)
-        empty = self.spark.createDataFrame([], "doc_id long, score double")
         if not info:
-            return empty
+            return _empty_frame(self.spark, _SCORE_SCHEMA)
         scorer = similarity_range_scorer(
             self._bm25_weight_fns(info), None, deleted=self._deleted
         )
@@ -6086,62 +6181,6 @@ class IndexReader:
         return ranked_topk(
             best, [F.desc("score"), F.asc("doc_id")], k
         ).select("rank", group_field, "doc_id", "score")
-
-    def search_decay(
-        self, query_text: str, docs: DataFrame, field: str,
-        origin: float, scale: float, k: int = 10, decay: float = 0.5,
-        offset: float = 0.0, fn: str = "gauss",
-    ) -> DataFrame:
-        """function_score decay retrieval (Elasticsearch
-        ``function_score`` with a ``gauss``/``exp``/``linear`` decay
-        over a numeric field, multiply boost mode): every matching
-        doc's BM25 score is multiplied by a factor in (0, 1] that
-        decays with the field's distance from ``origin`` — factor
-        ``decay`` exactly at distance ``scale`` (past ``offset``).
-        The canonical recency/geo re-ranker (e.g. field =
-        epoch-seconds of ``warc_ts``).
-
-            d = max(0, |x − origin| − offset)
-            gauss:  exp(−d² / (2σ²)),  σ² = −scale² / (2·ln decay)
-            exp:    exp(d · ln(decay) / scale)
-            linear: max(0, (s − d) / s),  s = scale / (1 − decay)
-
-        A NULL field scores as factor 1 (ES semantics: docs missing
-        the field are not decayed). Shape: hit stream equi-joined to
-        the docs scan, decay factor as a pure JVM column expression,
-        ``ranked_topk`` — fully distributed, no Python in the hot
-        path. Returns (rank, doc_id, score)."""
-        return decay_rank_hits(
-            self._matching_scores(query_text), docs, field,
-            origin, scale, k, decay, offset, fn,
-        )
-
-    def search_group_topk(
-        self, query_text: str, docs: DataFrame, group_field: str,
-        n_groups: int = 5, per_group: int = 3,
-    ) -> DataFrame:
-        """Grouped retrieval with hits per group (Elasticsearch
-        ``top_hits`` aggregation / Lucene grouping with
-        ``groupDocsLimit``): the top ``n_groups`` groups ranked by
-        their best matching doc's score, each carrying its own top
-        ``per_group`` docs. :meth:`search_collapse` is the
-        ``per_group=1`` projection of this.
-
-        Docs with a NULL group key are excluded (ES terms-aggregation
-        semantics: missing keys form no bucket — unlike
-        :meth:`search_collapse`, which keeps NULL as a group).
-
-        Shape: hit stream joined to the docs scan, ONE window
-        partitioned by the group field (distributed — group
-        cardinality is the parallelism, never a single partition),
-        ``ranked_topk`` over the one-best-per-group survivors to pick
-        the groups, then a broadcast-sized join back to the ≤
-        per_group rows. Returns (group_rank, <group_field>, hit_rank,
-        doc_id, score) ordered by (group_rank, hit_rank)."""
-        return group_topk_hits(
-            self._matching_scores(query_text), docs, group_field,
-            n_groups, per_group,
-        )
 
     def facet_ranges(
         self, query_text: str, docs: DataFrame, field: str,

@@ -61,17 +61,32 @@ from tlhop_library_spark import bm25
 from tlhop_library_spark.analyzer import py_tokens
 from tlhop_library_spark.index.query import (
     SEGMENT_SCHEMA,
+    _COUNTED_SCHEMA,
     _SCORE_SCHEMA,
+    HitStreamModes,
     IndexReader,
+    _empty_frame,
     _range_scorer,
+    counted_range_scorer,
 )
 
 __all__ = ["ShardedIndexReader"]
 
 
-class ShardedIndexReader:
+def _ranges_apply(reader, ginfo, scorer, schema) -> DataFrame:
+    """Run a per-range kernel over one shard's (bucket, tid)-pruned
+    segment chunks."""
+    return reader._pruned_segments(ginfo).groupBy(
+        "range_id"
+    ).applyInPandas(lambda key, pdf: scorer(key, pdf), schema=schema)
+
+
+class ShardedIndexReader(HitStreamModes):
     """Federated reader over ``index_dirs`` — rank-identical to one
-    index over the union of the shards' corpora."""
+    index over the union of the shards' corpora. The hit-stream modes
+    (facets, hit-stream re-rankers) come from
+    :class:`~tlhop_library_spark.index.query.HitStreamModes` over this
+    reader's :meth:`_matching_scores` / :meth:`_counted_matching`."""
 
     def __init__(
         self, spark: SparkSession, index_dirs: list[str],
@@ -687,23 +702,15 @@ class ShardedIndexReader:
                 gcf[t] = gcf.get(t, 0) + cf
         return infos, gdf, gcf
 
-    def _weighted_local(
-        self, infos, gdf, gcf, k: int, similarity: str,
-        boosts=None, tie_breaker=None, after=None,
-    ) -> DataFrame:
-        """Union of per-shard weighted-kernel results: each shard's
-        weight closures are built from GLOBAL (n_docs, sum_dl, df, cf)
-        but keyed by the shard's own tids — the same global-stats
-        mechanism federated BM25 uses, generalized to any similarity.
-        ``tie_breaker`` switches to the DisMax kernel; ``after``
-        pushes a cursor predicate into the kernels."""
+    def _shard_weights(self, infos, gdf, gcf, similarity="bm25",
+                       boosts=None):
+        """Yield (shard reader, ginfo, weight_of) for every shard the
+        query touches: weight closures built from GLOBAL (n_docs,
+        sum_dl, df, cf) but keyed by the shard's own tids — the same
+        global-stats mechanism federated BM25 uses, generalized to any
+        similarity."""
         from tlhop_library_spark import similarities
-        from tlhop_library_spark.index.query import (
-            dismax_range_scorer,
-            similarity_range_scorer,
-        )
 
-        parts = []
         for r, info in zip(self.readers, infos):
             if not info:
                 continue
@@ -711,10 +718,28 @@ class ShardedIndexReader:
                 t: (gdf[t], gcf[t], b, tid)
                 for t, (_df, _cf, b, tid) in info.items()
             }
-            weight_of = similarities.weight_fns(
+            yield r, ginfo, similarities.weight_fns(
                 similarity, ginfo, self.n_docs, int(self.sum_dl),
                 avgdl=float(self.avgdl), boosts=boosts,
             )
+
+    def _weighted_local(
+        self, infos, gdf, gcf, k: int, similarity: str,
+        boosts=None, tie_breaker=None, after=None,
+    ) -> DataFrame:
+        """Union of per-shard weighted-kernel results (global-stats
+        weights, see :meth:`_shard_weights`). ``tie_breaker`` switches
+        to the DisMax kernel; ``after`` pushes a cursor predicate into
+        the kernels."""
+        from tlhop_library_spark.index.query import (
+            dismax_range_scorer,
+            similarity_range_scorer,
+        )
+
+        parts = []
+        for r, ginfo, weight_of in self._shard_weights(
+            infos, gdf, gcf, similarity, boosts
+        ):
             if tie_breaker is not None:
                 scorer = dismax_range_scorer(
                     weight_of, k, float(tie_breaker), deleted=r._deleted
@@ -723,15 +748,7 @@ class ShardedIndexReader:
                 scorer = similarity_range_scorer(
                     weight_of, k, deleted=r._deleted, after=after
                 )
-
-            def _wrap(s):
-                return lambda key, pdf: s(key, pdf)
-
-            parts.append(
-                r._pruned_segments(ginfo)
-                .groupBy("range_id")
-                .applyInPandas(_wrap(scorer), schema=_SCORE_SCHEMA)
-            )
+            parts.append(_ranges_apply(r, ginfo, scorer, _SCORE_SCHEMA))
         if not parts:
             return self._empty()
         local = reduce(DataFrame.unionByName, parts)
@@ -783,14 +800,32 @@ class ShardedIndexReader:
             combined, [F.desc("score"), F.asc("doc_id")], k
         ).select("rank", "doc_id", "score")
 
-    def _fed_hits(self, query_text: str) -> "DataFrame | None":
+    def _matching_scores(self, query_text: str) -> DataFrame:
         """Federated disjunctive (doc_id, score) hit stream with
-        global Σ-stats — the building block every hit-stream consumer
-        (decay, top_hits, facets, cardinality) federates through."""
+        global Σ-stats — the primitive every
+        :class:`~tlhop_library_spark.index.query.HitStreamModes` mode
+        consumes; typed empty on zero matches."""
         infos, gdf, gcf = self._resolve_full(query_text)
         if not any(infos):
-            return None
+            return _empty_frame(self.spark, _SCORE_SCHEMA)
         return self._weighted_local(infos, gdf, gcf, None, "bm25")
+
+    def _counted_matching(self, query_text: str) -> DataFrame:
+        """Federated (doc_id, score, n_matched) stream: per-shard
+        counted kernels with GLOBAL weight closures. A doc lives in
+        exactly one shard, so shard-local distinct-term counts are
+        global counts."""
+        infos, gdf, gcf = self._resolve_full(query_text)
+        parts = [
+            _ranges_apply(
+                r, ginfo, counted_range_scorer(weight_of, deleted=r._deleted),
+                _COUNTED_SCHEMA,
+            )
+            for r, ginfo, weight_of in self._shard_weights(infos, gdf, gcf)
+        ]
+        if not parts:
+            return _empty_frame(self.spark, _COUNTED_SCHEMA)
+        return reduce(DataFrame.unionByName, parts)
 
     def facet_counts(
         self, query_text: str, docs: DataFrame, facet_col: str = "lang"
@@ -798,571 +833,17 @@ class ShardedIndexReader:
         """Federated facet histogram ≡ ``IndexReader.facet_counts``
         on a union index (matching ids are shard-disjoint, so the
         unioned hit stream is the union matching set)."""
-        hits = self._fed_hits(query_text)
-        if hits is None:
-            return self.spark.createDataFrame(
-                [], "facet string, n_docs long"
-            )
         meta = docs.select(
             F.col("doc_id").cast("long").alias("doc_id"),
             F.col(facet_col).alias("facet"),
         )
         return (
-            hits.select("doc_id")
+            self._matching_scores(query_text).select("doc_id")
             .join(meta, "doc_id")
             .groupBy("facet")
             .agg(F.count("*").alias("n_docs"))
         )
 
-    def facet_cardinality(
-        self, query_text: str, docs: DataFrame, field: str,
-        k: "int | None" = None,
-    ) -> DataFrame:
-        """Federated cardinality aggregation — exact countDistinct or
-        the KMV sketch (k smallest hashes merge across shards exactly
-        like across partitions)."""
-        hits = self._fed_hits(query_text)
-        if hits is None:
-            return self.spark.createDataFrame(
-                [(0,)], "cardinality long"
-            ) if k is None else self.spark.createDataFrame(
-                [(0.0, 0)], "kmv_estimate double, k_used long"
-            )
-        j = (
-            docs.join(hits.select("doc_id"), "doc_id", "left_semi")
-            .select(field)
-            .where(F.col(field).isNotNull())
-        )
-        if k is None:
-            return j.agg(
-                F.countDistinct(field).cast("long").alias("cardinality")
-            )
-        from tlhop_library_spark.operators.corpus_stats import (
-            kmv_distinct,
-        )
-
-        return kmv_distinct(j, field, k=k)
-
-    def search_boosting(
-        self, positive: str, negative: str, k: int = 10,
-        negative_boost: float = 0.5,
-    ) -> DataFrame:
-        """Federated ES boosting query — both the positive and
-        negative matching sets federate as global-stats hit streams;
-        the demote join is shard-agnostic."""
-        from tlhop_library_spark.index.query import boosting_rank_hits
-
-        pos = self._fed_hits(positive)
-        if pos is None:
-            return self._empty()
-        return boosting_rank_hits(
-            pos, self._fed_hits(negative), k, negative_boost
-        )
-
-    def search_random(
-        self, query_text: str, k: int = 10, seed: int = 42,
-    ) -> DataFrame:
-        """Federated random_score — the LCG score is a pure function
-        of (doc_id, seed), so shard layout cannot change it."""
-        from tlhop_library_spark.index.query import random_rank_hits
-
-        hits = self._fed_hits(query_text)
-        if hits is None:
-            return self._empty()
-        return random_rank_hits(hits, k, seed)
-
-    def search_diversified(
-        self, query_text: str, docs: DataFrame, field: str,
-        max_per_key: int = 1, k: int = 10,
-    ) -> DataFrame:
-        """Federated diversified_sampler — the per-key cap is GLOBAL
-        (window over the unioned shard-disjoint matching set), so
-        unlike ES's per-shard sampler the result is shard-layout-
-        independent."""
-        from tlhop_library_spark.index.query import (
-            diversified_rank_hits,
-        )
-
-        hits = self._fed_hits(query_text)
-        if hits is None:
-            return self._empty()
-        return diversified_rank_hits(hits, docs, field, max_per_key, k)
-
-    def search_rank_feature(
-        self, query_text: str, docs: DataFrame, field: str,
-        k: int = 10, function: str = "saturation",
-        pivot: float = 1.0, boost: float = 1.0,
-    ) -> DataFrame:
-        """Federated rank_feature ⊕ BM25 — the feature clause is a
-        pure per-doc function, shard-agnostic once the hit stream
-        carries global-stats scores."""
-        from tlhop_library_spark.index.query import (
-            rank_feature_rank_hits,
-        )
-
-        hits = self._fed_hits(query_text)
-        if hits is None:
-            return self._empty()
-        return rank_feature_rank_hits(
-            hits, docs, field, k,
-            function=function, pivot=pivot, boost=boost,
-        )
-
-    def search_pinned(
-        self, query_text: str, docs: DataFrame,
-        pinned_ids: list[int], k: int = 10,
-    ) -> DataFrame:
-        """Federated pinned query — pins are existence-checked
-        against the shared docs table; the organic stream federates
-        as usual."""
-        from tlhop_library_spark.index.query import pinned_rank_hits
-
-        hits = self._fed_hits(query_text)
-        if hits is None:
-            hits = self._empty().select("doc_id", "score")
-        return pinned_rank_hits(hits, docs, pinned_ids, k)
-
-    def facet_multi_terms(
-        self, query_text: str, docs: DataFrame, fields: list[str],
-        size: int = 10,
-    ) -> DataFrame:
-        """Federated multi_terms — shard-disjoint hit streams union
-        into the global matching set; the composite-key agg is a
-        plain hash agg over it."""
-        from tlhop_library_spark.index.query import (
-            multi_terms_agg_hits,
-        )
-
-        hits = self._fed_hits(query_text)
-        if hits is None:
-            # run the normal agg over an empty hit stream so the
-            # zero-match schema (key dtypes AND nullability) is the
-            # non-empty path's by construction (round-4 advice: a
-            # hand-built schema hard-coded string keys)
-            hits = self._empty()
-        return multi_terms_agg_hits(
-            hits.select("doc_id"), docs, fields, size
-        )
-
-    def facet_adjacency_matrix(
-        self, named_queries: dict[str, str],
-    ) -> DataFrame:
-        """Federated adjacency_matrix — each named filter's matching
-        set federates independently; the pair self-join is on doc_id,
-        which is globally unique across shards."""
-        from tlhop_library_spark.index.query import (
-            adjacency_matrix_hits,
-        )
-
-        streams = {}
-        for name, q in named_queries.items():
-            h = self._fed_hits(q)
-            if h is not None:
-                streams[name] = h
-        if not streams:
-            return self.spark.createDataFrame(
-                [], "key1 string, key2 string, doc_count long"
-            )
-        return adjacency_matrix_hits(streams)
-
-    def facet_filters(
-        self, named_queries: dict[str, str],
-        docs: "DataFrame | None" = None,
-    ) -> DataFrame:
-        """Federated filters aggregation — each named filter's
-        matching set federates independently; counts and the
-        other-bucket anti-join are doc_id-keyed, globally unique
-        across shards."""
-        from tlhop_library_spark.index.query import filters_agg_hits
-
-        streams = {}
-        for name, q in named_queries.items():
-            h = self._fed_hits(q)
-            if h is None:
-                h = self.spark.createDataFrame(
-                    [], "doc_id long, score double"
-                )
-            streams[name] = h
-        return filters_agg_hits(streams, docs)
-
-    def facet_histogram(
-        self, query_text: str, docs: DataFrame, field: str,
-        interval: float,
-    ) -> DataFrame:
-        """Federated histogram — shard-disjoint hit streams union
-        into the global matching set; bucket keys are a pure per-doc
-        function."""
-        from tlhop_library_spark.index.query import histogram_agg_hits
-
-        hits = self._fed_hits(query_text)
-        if hits is None:
-            # normal agg over an empty hit stream — zero-match schema
-            # (incl. nullability) equals the non-empty path's
-            hits = self._empty()
-        return histogram_agg_hits(
-            hits.select("doc_id"), docs, field, interval
-        )
-
-    def facet_terms_stats(
-        self, query_text: str, docs: DataFrame, key_field: str,
-        metric_field: str, size: int = 10,
-    ) -> DataFrame:
-        """Federated terms+stats — one hash agg over the unioned
-        matching set; sub-agg partials are plain Σs."""
-        from tlhop_library_spark.index.query import (
-            terms_stats_agg_hits,
-        )
-
-        hits = self._fed_hits(query_text)
-        if hits is None:
-            # normal agg over an empty hit stream — zero-match schema
-            # equals the non-empty path's by construction
-            hits = self._empty()
-        return terms_stats_agg_hits(
-            hits.select("doc_id"), docs, key_field, metric_field, size
-        )
-
-    def facet_weighted_avg(
-        self, query_text: str, docs: DataFrame, value_field: str,
-        weight_field: str,
-    ) -> DataFrame:
-        """Federated weighted_avg — Σ(v·w) and Σw reduce over the
-        unioned matching set exactly as over one index."""
-        from tlhop_library_spark.index.query import (
-            weighted_avg_agg_hits,
-        )
-
-        hits = self._fed_hits(query_text)
-        if hits is None:
-            hits = self._empty().select("doc_id")
-        return weighted_avg_agg_hits(
-            hits.select("doc_id"), docs, value_field, weight_field
-        )
-
-    def facet_percentiles(
-        self, query_text: str, docs: DataFrame, field: str,
-        percentiles: "list[float] | None" = None,
-        approx: bool = False, accuracy: int = 10000,
-    ) -> DataFrame:
-        """Federated percentiles over the unioned matching set.
-        ``approx=False``: exact (vs ES's TDigest), which makes the
-        federated result identical to the single-index one;
-        ``approx=True``: the bounded-memory mergeable sketch — the
-        at-scale default for continuous fields (the GK partials merge
-        across shards exactly like any other partial agg). Scale
-        contract in :func:`~tlhop_library_spark.index.query.
-        percentiles_agg_hits`."""
-        from tlhop_library_spark.index.query import (
-            percentiles_agg_hits,
-        )
-
-        hits = self._fed_hits(query_text)
-        if hits is None:
-            hits = self._empty().select("doc_id")
-        return percentiles_agg_hits(
-            hits.select("doc_id"), docs, field, percentiles,
-            approx=approx, accuracy=accuracy,
-        )
-
-    def facet_missing(
-        self, query_text: str, docs: DataFrame, field: str,
-    ) -> DataFrame:
-        """Federated missing agg — a plain count over the unioned
-        matching set."""
-        from tlhop_library_spark.index.query import missing_agg_hits
-
-        hits = self._fed_hits(query_text)
-        if hits is None:
-            hits = self._empty().select("doc_id")
-        return missing_agg_hits(hits.select("doc_id"), docs, field)
-
-    def facet_percentile_ranks(
-        self, query_text: str, docs: DataFrame, field: str,
-        values: list[float],
-    ) -> DataFrame:
-        """Federated percentile_ranks — exact counts reduce over the
-        unioned matching set like any partial agg."""
-        from tlhop_library_spark.index.query import (
-            percentile_ranks_agg_hits,
-        )
-
-        hits = self._fed_hits(query_text)
-        if hits is None:
-            hits = self._empty().select("doc_id")
-        return percentile_ranks_agg_hits(
-            hits.select("doc_id"), docs, field, values
-        )
-
-    def facet_mad(
-        self, query_text: str, docs: DataFrame, field: str,
-    ) -> DataFrame:
-        """Federated median_absolute_deviation — both median passes
-        run over the unioned matching set, so the federated result is
-        identical to the single-index one (exactness, not TDigest, is
-        what makes that true)."""
-        from tlhop_library_spark.index.query import mad_agg_hits
-
-        hits = self._fed_hits(query_text)
-        if hits is None:
-            hits = self._empty().select("doc_id")
-        return mad_agg_hits(hits.select("doc_id"), docs, field)
-
-    def facet_boxplot(
-        self, query_text: str, docs: DataFrame, field: str,
-    ) -> DataFrame:
-        """Federated boxplot — exact quartiles over the unioned
-        matching set ≡ single index."""
-        from tlhop_library_spark.index.query import boxplot_agg_hits
-
-        hits = self._fed_hits(query_text)
-        if hits is None:
-            hits = self._empty().select("doc_id")
-        return boxplot_agg_hits(hits.select("doc_id"), docs, field)
-
-    def facet_string_stats(
-        self, query_text: str, docs: DataFrame, field: str,
-    ) -> DataFrame:
-        """Federated string_stats — the character counts reduce over
-        the union before the entropy sum (a per-shard entropy would
-        not merge)."""
-        from tlhop_library_spark.index.query import (
-            string_stats_agg_hits,
-        )
-
-        hits = self._fed_hits(query_text)
-        if hits is None:
-            hits = self._empty().select("doc_id")
-        return string_stats_agg_hits(
-            hits.select("doc_id"), docs, field
-        )
-
-    def facet_top_metrics(
-        self, query_text: str, docs: DataFrame, sort_field: str,
-        metric_field: str, size: int = 1, asc: bool = False,
-    ) -> DataFrame:
-        """Federated top_metrics — the rank cut runs over the unioned
-        matching set."""
-        from tlhop_library_spark.index.query import (
-            top_metrics_agg_hits,
-        )
-
-        hits = self._fed_hits(query_text)
-        if hits is None:
-            hits = self._empty().select("doc_id")
-        return top_metrics_agg_hits(
-            hits.select("doc_id"), docs, sort_field, metric_field,
-            size, asc,
-        )
-
-    def facet_t_test(
-        self, query_text: str, docs: DataFrame, field: str,
-        group_field: str,
-    ) -> DataFrame:
-        """Federated t_test — Σ/Σ²/n partials reduce over the union
-        exactly."""
-        from tlhop_library_spark.index.query import t_test_agg_hits
-
-        hits = self._fed_hits(query_text)
-        if hits is None:
-            hits = self._empty().select("doc_id")
-        return t_test_agg_hits(
-            hits.select("doc_id"), docs, field, group_field
-        )
-
-    def facet_rare_terms(
-        self, query_text: str, docs: DataFrame, field: str,
-        max_doc_count: int = 1, max_buckets: int = 1000,
-    ) -> DataFrame:
-        """Federated rare_terms — the tail buckets aggregate over the
-        unioned matching set (a doc lives in one shard, so counts are
-        exact)."""
-        from tlhop_library_spark.index.query import (
-            rare_terms_agg_hits,
-        )
-
-        hits = self._fed_hits(query_text)
-        if hits is None:
-            hits = self._empty().select("doc_id")
-        return rare_terms_agg_hits(
-            hits.select("doc_id"), docs, field, max_doc_count,
-            max_buckets,
-        )
-
-    def search_terms_set(
-        self, query_text: str, docs: DataFrame, msm_field: str,
-        k: int = 10,
-    ) -> DataFrame:
-        """Federated terms_set — per-shard counted kernels with
-        GLOBAL weight closures; a doc lives in exactly one shard, so
-        shard-local distinct-term counts are global counts."""
-        from tlhop_library_spark.index.query import (
-            _COUNTED_SCHEMA,
-            counted_range_scorer,
-            terms_set_rank_hits,
-        )
-        from tlhop_library_spark import similarities
-
-        infos, gdf, gcf = self._resolve_full(query_text)
-        if not any(infos):
-            return self._empty()
-        parts = []
-        for r, info in zip(self.readers, infos):
-            if not info:
-                continue
-            ginfo = {
-                t: (gdf[t], gcf[t], b, tid)
-                for t, (_df, _cf, b, tid) in info.items()
-            }
-            weight_of = similarities.weight_fns(
-                "bm25", ginfo, self.n_docs, int(self.sum_dl),
-                avgdl=float(self.avgdl),
-            )
-            scorer = counted_range_scorer(
-                weight_of, deleted=r._deleted
-            )
-
-            def _wrap(s):
-                return lambda key, pdf: s(key, pdf)
-
-            parts.append(
-                r._pruned_segments(ginfo)
-                .groupBy("range_id")
-                .applyInPandas(_wrap(scorer), schema=_COUNTED_SCHEMA)
-            )
-        counted = reduce(DataFrame.unionByName, parts)
-        return terms_set_rank_hits(counted, docs, msm_field, k)
-
-    def facet_stats(
-        self, query_text: str, docs: DataFrame, field: str,
-        extended: bool = False,
-    ) -> DataFrame:
-        """Federated stats / extended_stats ≡ the single-index agg on
-        a union index: shard-disjoint hit streams union into the
-        global matching set and the partials (count, sum, sum_sq)
-        are plain Σs over it."""
-        from tlhop_library_spark.index.query import stats_agg_hits
-
-        hits = self._fed_hits(query_text)
-        if hits is None:
-            hits = self.spark.createDataFrame(
-                [], "doc_id long, score double"
-            )
-        return stats_agg_hits(hits, docs, field, extended=extended)
-
-    def search_scan(
-        self, query_text: str, slice_id: int = 0, n_slices: int = 1,
-    ) -> DataFrame:
-        """Federated scroll/scan ≡ the union index's: shard-disjoint
-        hit streams union into the global matching set, and the md5
-        slice rule is a pure function of doc_id, so slices agree with
-        any sharding."""
-        from tlhop_library_spark.operators.corpus_stats import slice_scan
-
-        hits = self._fed_hits(query_text)
-        if hits is None:
-            return self.spark.createDataFrame(
-                [], "doc_id long, score double"
-            )
-        if n_slices <= 1:
-            if n_slices != 1 or slice_id != 0:
-                raise ValueError("need 0 <= slice_id < n_slices")
-            return hits
-        return slice_scan(hits, slice_id, n_slices)
-
-    def facet_date_histogram(
-        self, query_text: str, docs: DataFrame, ts_col: str,
-        interval: str = "day",
-    ) -> DataFrame:
-        """Federated date_histogram ≡ the single-index aggregation on
-        a union index: a calendar bucket may span shards; the
-        post-union groupBy merges its count exactly."""
-        from tlhop_library_spark.index.query import date_histogram_hits
-
-        hits = self._fed_hits(query_text)
-        if hits is None:
-            hits = self.spark.createDataFrame(
-                [], "doc_id long, score double"
-            )
-        return date_histogram_hits(hits, docs, ts_col, interval)
-
-    def facet_pipeline(
-        self, query_text: str, docs: DataFrame, ts_col: str,
-        interval: str = "day", metric_field: "str | None" = None,
-        window: int = 3, min_metric: "float | None" = None,
-        sort_by_metric: bool = False, size: "int | None" = None,
-    ) -> DataFrame:
-        """Federated pipeline aggs ≡ single index on the union: the
-        parent buckets merge exactly across shards BEFORE the window
-        pass (pipeline columns are computed on the merged bucket
-        list, never per shard — a per-shard cumulative sum would be
-        wrong for any bucket spanning shards)."""
-        from tlhop_library_spark.index.query import pipeline_aggs_hits
-
-        hits = self._fed_hits(query_text)
-        if hits is None:
-            hits = self.spark.createDataFrame(
-                [], "doc_id long, score double"
-            )
-        return pipeline_aggs_hits(
-            hits, docs, ts_col, interval, metric_field, window,
-            min_metric, sort_by_metric, size,
-        )
-
-    def facet_auto_date_histogram(
-        self, query_text: str, docs: DataFrame, ts_col: str,
-        max_buckets: int = 20,
-    ) -> DataFrame:
-        """Federated auto_date_histogram — the ladder choice runs
-        over the UNIONED matching set (per-shard choices could
-        disagree; the merged bucket list must drive the interval)."""
-        from tlhop_library_spark.index.query import (
-            auto_date_histogram_hits,
-        )
-
-        hits = self._fed_hits(query_text)
-        if hits is None:
-            hits = self.spark.createDataFrame(
-                [], "doc_id long, score double"
-            )
-        return auto_date_histogram_hits(
-            hits, docs, ts_col, max_buckets
-        )
-
-    def facet_composite(
-        self, query_text: str, docs: DataFrame, field: str,
-        size: int = 10, after: "str | None" = None,
-    ) -> DataFrame:
-        """Federated composite (paginated terms) aggregation — a
-        bucket may span shards; the post-union groupBy merges it
-        exactly, and the sargable ``after`` resume predicate applies
-        identically to every shard's hits."""
-        from tlhop_library_spark.index.query import composite_agg_hits
-
-        hits = self._fed_hits(query_text)
-        if hits is None:
-            return self.spark.createDataFrame(
-                [], "rank int, key string, n_docs long"
-            )
-        return composite_agg_hits(hits, docs, field, size, after=after)
-
-    def search_decay(
-        self, query_text: str, docs: DataFrame, field: str,
-        origin: float, scale: float, k: int = 10, decay: float = 0.5,
-        offset: float = 0.0, fn: str = "gauss",
-    ) -> DataFrame:
-        """Federated function_score decay — identical to
-        ``IndexReader.search_decay`` on a union index: the decay
-        re-rank is a pure function of the (doc_id, score) hit stream,
-        which federates with global Σ-stats."""
-        from tlhop_library_spark.index.query import decay_rank_hits
-
-        infos, gdf, gcf = self._resolve_full(query_text)
-        if not any(infos):
-            return self._empty()
-        hits = self._weighted_local(infos, gdf, gcf, None, "bm25")
-        return decay_rank_hits(
-            hits, docs, field, origin, scale, k, decay, offset, fn
-        )
 
     def search_highlight(
         self, query_text: str, docs: DataFrame, k: int = 10,
@@ -1378,24 +859,6 @@ class ShardedIndexReader:
         return highlight_hits(
             hits, docs, query_text, fragment_size, n_fragments
         ).select("rank", "doc_id", "score", "fragment")
-
-    def search_group_topk(
-        self, query_text: str, docs: DataFrame, group_field: str,
-        n_groups: int = 5, per_group: int = 3,
-    ) -> DataFrame:
-        """Federated top_hits grouping — identical to
-        ``IndexReader.search_group_topk`` on a union index (the
-        grouping consumes only the federated hit stream; a group may
-        span shards, which the post-union window handles exactly)."""
-        from tlhop_library_spark.index.query import group_topk_hits
-
-        infos, gdf, gcf = self._resolve_full(query_text)
-        if not any(infos):
-            return self._empty()
-        hits = self._weighted_local(infos, gdf, gcf, None, "bm25")
-        return group_topk_hits(
-            hits, docs, group_field, n_groups, per_group
-        )
 
     def search_sim(
         self, query_text: str, k: int = 10, similarity: str = "classic"
