@@ -825,7 +825,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
                 with open(_os.path.join(p, "pq_meta.json")) as f:
                     tot += _json.load(f)["n_vectors"]
             fresh = tot == n
-        except OSError:
+        except (OSError, ValueError, KeyError):
+            # missing, truncated or foreign meta file: rebuild
             fresh = False
         if not fresh:
             for i, p in enumerate(paths):

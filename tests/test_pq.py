@@ -221,6 +221,28 @@ def test_rerank_exact_rejects_wrong_dim(spark, emb):
         rerank_exact(emb, sl, [0.0] * 3, 5).collect()
 
 
+def test_rerank_exact_dim_probe_skips_null_vectors(spark):
+    """The dim probe reads the first NON-NULL vector: a NULL vector
+    ahead of it must neither raise TypeError nor hide a wrong-dim
+    query; an all-NULL store falls back to the query's width."""
+    from tlhop_library_spark.operators.pq import rerank_exact
+
+    emb = spark.createDataFrame(
+        [(0, None), (1, [1.0, 2.0]), (2, [4.0, 6.0])],
+        "vec_id long, embedding array<double>",
+    ).coalesce(1)
+    sl = emb.where(F.col("vec_id") > 0).select("vec_id")
+    got = [
+        (r["rank"], r["vec_id"], r["l2_dist"])
+        for r in rerank_exact(emb, sl, [1.0, 2.0], 2).collect()
+    ]
+    assert got == [(1, 1, 0.0), (2, 2, 25.0)]
+    with pytest.raises(ValueError, match="dim mismatch"):
+        rerank_exact(emb, sl, [1.0, 2.0, 3.0], 2)
+    nulls = emb.where(F.col("vec_id") == 0)
+    assert rerank_exact(nulls, nulls, [1.0, 2.0], 2).count() == 1
+
+
 def test_kmeans_chunked_matches_unchunked():
     """The chunked assignment step must be bit-identical to the
     single-tensor formulation it replaced (driver-memory fix)."""

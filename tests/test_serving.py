@@ -170,3 +170,52 @@ def test_local_masks_deletes(spark, index_dir, tmp_path):
     got = _rows(r.search_local("bace", 10))
     assert got == _rows(r.search("bace", 10))
     assert not ({doc for _, doc, _ in got} & set(dead))
+
+
+def test_served_answers_start_no_spark_job(spark, reader, index_dir):
+    """Driver-served answers come back as Arrow local relations:
+    collecting one starts no Spark job, zero matches included, and a
+    zero-match answer has the matching answer's schema."""
+    from pyspark.sql.types import _parse_datatype_string
+
+    from tlhop_library_spark.index import ShardedIndexReader
+
+    ranked = _parse_datatype_string("rank int, doc_id long, score double")
+    batch = _parse_datatype_string(
+        "query_id long, rank int, doc_id long, score double"
+    )
+    sharded = ShardedIndexReader(spark, [index_dir])
+    answers = {
+        "serve": (lambda: reader.search_serve("bace cada", 10), ranked),
+        "serve_absent": (lambda: reader.search_serve("zzznope", 5), ranked),
+        "serve_empty": (lambda: reader.search_serve("", 5), ranked),
+        "local": (lambda: reader.search_local("bace cada", 10), ranked),
+        "many_local": (
+            lambda: reader.search_many_local(
+                [(0, "bace cada", 5), (1, "zzznope", 5)]
+            ),
+            batch,
+        ),
+        "many_local_absent": (
+            lambda: reader.search_many_local([(0, "zzznope", 5)]), batch
+        ),
+        "sharded_local": (
+            lambda: sharded.search_local("bace cada", 10), ranked
+        ),
+    }
+    sc = spark.sparkContext
+    n_rows = {}
+    try:
+        for name, (answer, schema) in answers.items():
+            group = f"served-no-job-{name}"
+            sc.setJobGroup(group, group)
+            df = answer()
+            n_rows[name] = len(df.collect())
+            assert df.schema == schema, name
+            assert sc.statusTracker().getJobIdsForGroup(group) == [], name
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert n_rows["serve"] == n_rows["local"] == n_rows["sharded_local"] > 0
+    assert n_rows["serve_absent"] == n_rows["serve_empty"] == 0
+    assert n_rows["many_local"] > n_rows["many_local_absent"] == 0

@@ -39,6 +39,7 @@ from pyspark.sql.types import (
     DoubleType,
     IntegerType,
     LongType,
+    StringType,
     StructField,
     StructType,
 )
@@ -57,14 +58,56 @@ _SCORE_SCHEMA = StructType(
 )
 
 
-def _empty_frame(spark: SparkSession, schema: StructType) -> DataFrame:
-    """Typed empty frame the optimizer can see is empty (an empty
-    Range — ``createDataFrame([])`` is an RDD scan of unknown size), so
-    a plan over a zero-match hit stream collapses to an empty local
-    scan instead of shuffling the other side of its joins."""
-    return spark.range(0).select(
-        *[F.lit(None).cast(f.dataType).alias(f.name) for f in schema.fields]
+#: every (rank, doc_id, score) answer, all fields nullable
+_RANKED_SCHEMA = StructType(
+    [
+        StructField("rank", IntegerType()),
+        StructField("doc_id", LongType()),
+        StructField("score", DoubleType()),
+    ]
+)
+_BATCH_RANKED_SCHEMA = StructType(
+    [StructField("query_id", LongType())] + _RANKED_SCHEMA.fields
+)
+
+
+def _local_frame(
+    spark: SparkSession, schema: StructType, columns: list | None = None
+) -> DataFrame:
+    """Driver-held ``columns`` (one array per ``schema`` field; none →
+    zero rows) as a DataFrame over an Arrow local relation. ``collect``
+    on it starts no Spark job, and the optimizer sees an empty one is
+    empty, so a plan over a zero-match hit stream collapses to an empty
+    local scan instead of shuffling the other side of its joins.
+    ``createDataFrame([], ddl)`` is an RDD scan of unknown size: ~70
+    Py4J round trips to build and a real Spark job to collect."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    arrow = to_arrow_schema(schema)
+    if columns is None:
+        table = arrow.empty_table()
+    else:
+        table = pa.Table.from_arrays(
+            [pa.array(c, type=f.type) for c, f in zip(columns, arrow)],
+            schema=arrow,
+        )
+    return spark.createDataFrame(table, schema)
+
+
+def _merge_topk(parts: list, k: int) -> tuple[np.ndarray, np.ndarray]:
+    """(doc_id, score) of the top ``k`` over per-range kernel outputs,
+    merged exactly like the distributed ranked_topk: scores rounded,
+    ordered by (score desc, doc_id asc)."""
+    if not parts:
+        return np.empty(0, np.int64), np.empty(0, np.float64)
+    r = np.round(
+        np.concatenate([p["score"].to_numpy(np.float64) for p in parts]),
+        bm25.ROUND_DIGITS,
     )
+    d = np.concatenate([p["doc_id"].to_numpy(np.int64) for p in parts])
+    order = np.lexsort((d, -r))[:k]
+    return d[order], r[order]
 
 
 # ---------------------------------------------------------------------
@@ -93,9 +136,7 @@ def score_exhaustive(
     """
     terms = sorted(set(py_tokens(query_text)))
     if not terms:
-        return docs.sparkSession.createDataFrame(
-            [], "rank int, doc_id long, score double"
-        )
+        return _local_frame(docs.sparkSession, _RANKED_SCHEMA)
     base = docs.where(F.col("text").isNotNull()).select(
         F.col(doc_col).cast("long").alias("doc_id"),
         tokens_col(F.col("text")).alias("tokens"),
@@ -2718,9 +2759,7 @@ def fuzzy_exhaustive(
     exhaustive BM25 over the expanded term set."""
     terms = sorted(set(py_tokens(query_text)))
     if not terms:
-        return docs.sparkSession.createDataFrame(
-            [], "rank int, doc_id long, score double"
-        )
+        return _local_frame(docs.sparkSession, _RANKED_SCHEMA)
     vocab = (
         docs.where(F.col("text").isNotNull())
         .select(F.explode(tokens_col(F.col("text"))).alias("term"))
@@ -2734,9 +2773,7 @@ def fuzzy_exhaustive(
         cond = c if cond is None else (cond | c)
     expanded = sorted(r["term"] for r in vocab.where(cond).collect())
     if not expanded:
-        return docs.sparkSession.createDataFrame(
-            [], "rank int, doc_id long, score double"
-        )
+        return _local_frame(docs.sparkSession, _RANKED_SCHEMA)
     return score_exhaustive(docs, " ".join(expanded), k, doc_col)
 
 
@@ -2801,9 +2838,7 @@ def wildcard_exhaustive(
     exhaustive BM25 over the expanded ∪ exact term set."""
     exact, prefixes = parse_wildcard_query(query_text)
     if not exact and not prefixes:
-        return docs.sparkSession.createDataFrame(
-            [], "rank int, doc_id long, score double"
-        )
+        return _local_frame(docs.sparkSession, _RANKED_SCHEMA)
     expanded = set(exact)
     if prefixes:
         vocab = (
@@ -2823,9 +2858,7 @@ def wildcard_exhaustive(
             )
         expanded.update(hits)
     if not expanded:
-        return docs.sparkSession.createDataFrame(
-            [], "rank int, doc_id long, score double"
-        )
+        return _local_frame(docs.sparkSession, _RANKED_SCHEMA)
     return score_exhaustive(docs, " ".join(sorted(expanded)), k, doc_col)
 
 
@@ -3269,6 +3302,19 @@ ORDER BY rank
 """
 
 
+_EXPLAIN_SCHEMA = StructType(
+    _RANKED_SCHEMA.fields[:2]
+    + [
+        StructField("term", StringType()),
+        StructField("tf", LongType()),
+        StructField("dl", LongType()),
+        StructField("idf", DoubleType()),
+        StructField("weight", DoubleType()),
+        StructField("score", DoubleType()),
+    ]
+)
+
+
 def _attach_explain(
     spark: SparkSession, labeled: DataFrame, topk: list, avgdl: float
 ) -> DataFrame:
@@ -3276,9 +3322,9 @@ def _attach_explain(
     component rows to the ≤ k (rank, doc_id, score) winners and
     compute the per-term BM25 weight JVM-side with the caller's
     avgdl (corpus or federation-global)."""
-    ranks = spark.createDataFrame(
-        [(r["rank"], r["doc_id"], r["score"]) for r in topk],
-        "rank int, doc_id long, score double",
+    ranks = _local_frame(
+        spark, _RANKED_SCHEMA,
+        [[r[c] for r in topk] for c in _RANKED_SCHEMA.names],
     )
     k1, b = bm25.K1, bm25.B
     w = (
@@ -4314,9 +4360,7 @@ class IndexReader(HitStreamModes):
         to the single doc id, and ships one (tid, weight) row per
         distinct term of that doc; everything after is a standard
         pruned search."""
-        empty = self.spark.createDataFrame(
-            [], "rank int, doc_id long, score double"
-        )
+        empty = _local_frame(self.spark, _RANKED_SCHEMA)
         range_size = int(self.stats["range_size"])
         seg = self._segments.where(
             F.col("range_id") == int(doc_id) // range_size
@@ -4464,9 +4508,7 @@ class IndexReader(HitStreamModes):
         set — (bucket, tid)-pruned chunk scan, per-range kernels,
         k winners per range; the group merge is a per-range numpy
         sum over the members' already-decoded postings."""
-        empty = self.spark.createDataFrame(
-            [], "rank int, doc_id long, score double"
-        )
+        empty = _local_frame(self.spark, _RANKED_SCHEMA)
         qterms = sorted(set(py_tokens(query_text)))
         if not qterms:
             return empty
@@ -4488,9 +4530,7 @@ class IndexReader(HitStreamModes):
         a term named in several groups lands in the LAST one. Used by
         :meth:`search_synonyms` (explicit synonym groups) and
         :meth:`search_bool_prefix` (prefix-expansion group)."""
-        empty = self.spark.createDataFrame(
-            [], "rank int, doc_id long, score double"
-        )
+        empty = _local_frame(self.spark, _RANKED_SCHEMA)
         all_terms = sorted({m for g in groups for m in g})
         info = self.lookup_terms(all_terms)
         if not info:
@@ -4611,9 +4651,7 @@ class IndexReader(HitStreamModes):
         the executors. Returns (rank, doc_id, score)."""
         terms = sorted(set(py_tokens(query_text)))
         info = self.lookup_terms_full(terms)
-        empty = self.spark.createDataFrame(
-            [], "rank int, doc_id long, score double"
-        )
+        empty = _local_frame(self.spark, _RANKED_SCHEMA)
         if not info:
             return empty
 
@@ -4658,9 +4696,7 @@ class IndexReader(HitStreamModes):
         docs."""
         terms = sorted(set(py_tokens(query_text)))
         info = self.lookup_terms_full(terms)
-        empty = self.spark.createDataFrame(
-            [], "rank int, doc_id long, score double"
-        )
+        empty = _local_frame(self.spark, _RANKED_SCHEMA)
         if not info:
             return empty
         scorer = similarity_range_scorer(
@@ -4705,9 +4741,7 @@ class IndexReader(HitStreamModes):
         (tid, weight) row per distinct feedback-doc term; expansion
         selection is a distributed (weight, term) top-m via the
         dictionary join — no driver-side vocabulary scan."""
-        empty = self.spark.createDataFrame(
-            [], "rank int, doc_id long, score double"
-        )
+        empty = _local_frame(self.spark, _RANKED_SCHEMA)
         terms = sorted(set(py_tokens(query_text)))
         info = self.lookup_terms(terms)
         if not info:
@@ -4928,18 +4962,11 @@ class IndexReader(HitStreamModes):
         kernel's closure; the chunk scan is (bucket, tid)-pruned
         exactly like a search, and only the ≤ k·n_terms component rows
         leave the executors — no full-corpus rescore."""
-        schema = (
-            "rank int, doc_id long, term string, tf long, dl long, "
-            "idf double, weight double, score double"
-        )
-        empty = self.spark.createDataFrame([], schema)
         terms = sorted(set(py_tokens(query_text)))
         info = self.lookup_terms(terms)
-        if not info:
-            return empty
-        topk = self.search(query_text, k, mode).collect()
+        topk = self.search(query_text, k, mode).collect() if info else []
         if not topk:
-            return empty
+            return _local_frame(self.spark, _EXPLAIN_SCHEMA)
         keep = np.sort(
             np.array([r["doc_id"] for r in topk], dtype=np.int64)
         )
@@ -5070,11 +5097,8 @@ class IndexReader(HitStreamModes):
         """Scoring back-half of :meth:`search` over pre-resolved term
         info (term → (df, bucket, tid)) — shared by plain search, fuzzy
         expansion, and any caller that rewrites terms before scoring."""
-        empty = self.spark.createDataFrame(
-            [], "rank int, doc_id long, score double"
-        )
         if not info:
-            return empty
+            return _local_frame(self.spark, _RANKED_SCHEMA)
         n_docs = self.stats["n_docs"]
         idf_map = {
             tid: bm25.idf(n_docs, df) for (df, _, tid) in info.values()
@@ -5196,26 +5220,10 @@ class IndexReader(HitStreamModes):
 
     def _merge_local_topk(self, parts: list, k: int) -> DataFrame:
         """Merge per-range kernel outputs exactly like the distributed
-        ranked_topk: round, (score desc, doc_id asc), rank 1..≤k."""
-        empty = self.spark.createDataFrame(
-            [], "rank int, doc_id long, score double"
-        )
-        allp = pd.concat(parts) if parts else None
-        if allp is None or allp.empty:
-            return empty
-        r = np.round(allp["score"].to_numpy(np.float64), bm25.ROUND_DIGITS)
-        d = allp["doc_id"].to_numpy(np.int64)
-        order = np.lexsort((d, -r))[:k]
-        out = pd.DataFrame(
-            {
-                "rank": np.arange(1, len(order) + 1, dtype=np.int32),
-                "doc_id": d[order],
-                "score": r[order],
-            }
-        )
-        return self.spark.createDataFrame(
-            out, schema="rank int, doc_id long, score double"
-        )
+        ranked_topk into a (rank, doc_id, score) local relation."""
+        d, r = _merge_topk(parts, k)
+        rank = np.arange(1, len(d) + 1, dtype=np.int32)
+        return _local_frame(self.spark, _RANKED_SCHEMA, [rank, d, r])
 
     def search_local(
         self, query_text: str, k: int = 10, mode: str = "auto"
@@ -5343,13 +5351,16 @@ class IndexReader(HitStreamModes):
         df, so an 8 MB posting volume is where the two cross —
         tail/torso queries serve at 0.48-0.76 s driver-side and head
         terms (tens of MB) correctly fall back. The round-4 64 MB
-        default routed 41 MB stopword queries local at 5-6 s."""
+        default routed 41 MB stopword queries local at 5-6 s.
+
+        A driver-served answer — the driver route, and every query
+        with no dictionary term — comes back as an Arrow local
+        relation: collecting it starts no Spark job, zero matches
+        included."""
         terms = sorted(set(py_tokens(query_text)))
         info = self.lookup_terms(terms)
         if not info:
-            return self.spark.createDataFrame(
-                [], "rank int, doc_id long, score double"
-            )
+            return _local_frame(self.spark, _RANKED_SCHEMA)
         est = sum(df for (df, _, _) in info.values()) * (
             self._avg_bytes_per_posting()
         )
@@ -5796,7 +5807,7 @@ class IndexReader(HitStreamModes):
         terms = sorted(set(py_tokens(query_text)))
         info = self.lookup_terms_full(terms)
         if not info:
-            return _empty_frame(self.spark, _COUNTED_SCHEMA)
+            return _local_frame(self.spark, _COUNTED_SCHEMA)
         scorer = counted_range_scorer(
             self._bm25_weight_fns(info), deleted=self._deleted
         )
@@ -5861,9 +5872,7 @@ class IndexReader(HitStreamModes):
         rarest-first instead of block-max scanning."""
         terms = sorted(set(py_tokens(query_text)))
         info = self.lookup_terms(terms)
-        empty = self.spark.createDataFrame(
-            [], "rank int, doc_id long, score double"
-        )
+        empty = _local_frame(self.spark, _RANKED_SCHEMA)
         if not terms or len(info) < len(terms):
             return empty  # some term matches nothing → AND is empty
         n_docs = self.stats["n_docs"]
@@ -5924,9 +5933,7 @@ class IndexReader(HitStreamModes):
 
         terms = sorted(set(py_tokens(query_text)))
         info = self.lookup_terms_full(terms)
-        empty = self.spark.createDataFrame(
-            [], "rank int, doc_id long, score double"
-        )
+        empty = _local_frame(self.spark, _RANKED_SCHEMA)
         if not info:
             return empty
         weight_of = similarities.weight_fns(
@@ -5975,9 +5982,7 @@ class IndexReader(HitStreamModes):
         first = self.search(query_text, window)
         terms = sorted(set(py_tokens(query_text)))
         info = self.lookup_terms_full(terms)
-        empty = self.spark.createDataFrame(
-            [], "rank int, doc_id long, score double"
-        )
+        empty = _local_frame(self.spark, _RANKED_SCHEMA)
         if not info:
             return empty
         weight_of = similarities.weight_fns(
@@ -6042,9 +6047,7 @@ class IndexReader(HitStreamModes):
         range leave the executors. Returns (rank, doc_id, score)."""
         boosts = parse_boosted_query(boosted_query)
         info = self.lookup_terms_full(sorted(boosts))
-        empty = self.spark.createDataFrame(
-            [], "rank int, doc_id long, score double"
-        )
+        empty = _local_frame(self.spark, _RANKED_SCHEMA)
         if not info:
             return empty
         scorer = similarity_range_scorer(
@@ -6068,9 +6071,7 @@ class IndexReader(HitStreamModes):
         (rank, doc_id, score); scale shape = plain indexed search."""
         terms = sorted(set(py_tokens(query_text)))
         info = self.lookup_terms_full(terms)
-        empty = self.spark.createDataFrame(
-            [], "rank int, doc_id long, score double"
-        )
+        empty = _local_frame(self.spark, _RANKED_SCHEMA)
         if not info:
             return empty
         scorer = dismax_range_scorer(
@@ -6095,7 +6096,7 @@ class IndexReader(HitStreamModes):
         terms = sorted(set(py_tokens(query_text)))
         info = self.lookup_terms_full(terms)
         if not info:
-            return _empty_frame(self.spark, _SCORE_SCHEMA)
+            return _local_frame(self.spark, _SCORE_SCHEMA)
         scorer = similarity_range_scorer(
             self._bm25_weight_fns(info), None, deleted=self._deleted
         )
@@ -6221,9 +6222,7 @@ class IndexReader(HitStreamModes):
         terms = sorted(set(py_tokens(query_text)))
         m = max(1, int(min_should_match))
         info = self.lookup_terms(terms)
-        empty = self.spark.createDataFrame(
-            [], "rank int, doc_id long, score double"
-        )
+        empty = _local_frame(self.spark, _RANKED_SCHEMA)
         # absent terms can never match; fewer present terms than m
         # means no doc can reach the threshold (Lucene semantics: the
         # threshold counts the query's clauses, not the resolvable ones)
@@ -6269,9 +6268,7 @@ class IndexReader(HitStreamModes):
         )
 
         nnf, all_terms, pos_terms = compile_query(query_text)
-        empty = self.spark.createDataFrame(
-            [], "rank int, doc_id long, score double"
-        )
+        empty = _local_frame(self.spark, _RANKED_SCHEMA)
         info = self.lookup_terms(all_terms)
         tid_of = {t: tid for t, (_, _, tid) in info.items()}
         nnf_tid = subst_tids(nnf, tid_of)
@@ -6319,9 +6316,7 @@ class IndexReader(HitStreamModes):
         broadcast, or shuffled as a whole."""
         terms = sorted(set(py_tokens(query_text)))
         info = self.lookup_terms(terms)
-        empty = self.spark.createDataFrame(
-            [], "rank int, doc_id long, score double"
-        )
+        empty = _local_frame(self.spark, _RANKED_SCHEMA)
         if not info:
             return empty
         n_docs = self.stats["n_docs"]
@@ -6417,9 +6412,7 @@ class IndexReader(HitStreamModes):
         from tlhop_library_spark.index.phrase import phrase_range_scorer
 
         slots = py_tokens(phrase_text)
-        empty = self.spark.createDataFrame(
-            [], "rank int, doc_id long, score double"
-        )
+        empty = _local_frame(self.spark, _RANKED_SCHEMA)
         if not slots:
             return empty
         info, seg = self._positional_seg(sorted(set(slots)))
@@ -6449,9 +6442,7 @@ class IndexReader(HitStreamModes):
         from tlhop_library_spark.index.phrase import proximity_range_scorer
 
         terms = sorted(set(py_tokens(query_text)))
-        empty = self.spark.createDataFrame(
-            [], "rank int, doc_id long, score double"
-        )
+        empty = _local_frame(self.spark, _RANKED_SCHEMA)
         if not terms:
             return empty
         info, seg = self._positional_seg(terms)
@@ -6492,9 +6483,7 @@ class IndexReader(HitStreamModes):
         )
 
         clauses = py_tokens(query_text)
-        empty = self.spark.createDataFrame(
-            [], "rank int, doc_id long, score double"
-        )
+        empty = _local_frame(self.spark, _RANKED_SCHEMA)
         if not clauses:
             return empty
         info, seg = self._positional_seg(sorted(set(clauses)))
@@ -6537,9 +6526,7 @@ class IndexReader(HitStreamModes):
 
         clauses = py_tokens(include_text)
         excl = py_tokens(exclude_term)
-        empty = self.spark.createDataFrame(
-            [], "rank int, doc_id long, score double"
-        )
+        empty = _local_frame(self.spark, _RANKED_SCHEMA)
         if len(excl) != 1:
             raise ValueError(
                 "exclude must analyze to exactly one term"
@@ -6604,9 +6591,7 @@ class IndexReader(HitStreamModes):
             )
             if t
         ]
-        empty = self.spark.createDataFrame(
-            [], "rank int, doc_id long, score double"
-        )
+        empty = _local_frame(self.spark, _RANKED_SCHEMA)
         if not raw:
             return empty
         prefix, exact = raw[-1], raw[:-1]
@@ -6697,9 +6682,7 @@ class IndexReader(HitStreamModes):
             )
             if t
         ]
-        empty = self.spark.createDataFrame(
-            [], "rank int, doc_id long, score double"
-        )
+        empty = _local_frame(self.spark, _RANKED_SCHEMA)
         if not raw:
             return empty
         prefix, exact = raw[-1], raw[:-1]
@@ -6730,9 +6713,7 @@ class IndexReader(HitStreamModes):
         )
 
         toks = py_tokens(term_text)
-        empty = self.spark.createDataFrame(
-            [], "rank int, doc_id long, score double"
-        )
+        empty = _local_frame(self.spark, _RANKED_SCHEMA)
         if len(toks) != 1:
             raise ValueError("search_span_first takes exactly one term")
         info, seg = self._positional_seg(toks)
@@ -6790,11 +6771,8 @@ class IndexReader(HitStreamModes):
             per_q[qid] = (terms, k)
             all_terms.update(terms)
         info = self.lookup_terms(sorted(all_terms))
-        empty = self.spark.createDataFrame(
-            [], "query_id long, rank int, doc_id long, score double"
-        )
         if not info:
-            return empty
+            return _local_frame(self.spark, _BATCH_RANKED_SCHEMA)
         idf_map = {
             tid: bm25.idf(n_docs, df) for (df, _, tid) in info.values()
         }
@@ -6866,11 +6844,8 @@ class IndexReader(HitStreamModes):
             per_q[qid] = (terms, k)
             all_terms.update(terms)
         info = self.lookup_terms(sorted(all_terms))
-        empty = self.spark.createDataFrame(
-            [], "query_id long, rank int, doc_id long, score double"
-        )
         if not info:
-            return empty
+            return _local_frame(self.spark, _BATCH_RANKED_SCHEMA)
         import pyarrow.dataset as ds
 
         idf_all = {
@@ -6883,10 +6858,8 @@ class IndexReader(HitStreamModes):
             filter=ds.field("bucket").isin(buckets)
             & ds.field("tid").isin(sorted(idf_all)),
         )
-        if tbl.num_rows == 0:
-            return empty
         pdf = tbl.to_pandas()
-        outs = []
+        qids, ranks, docs, scores = [], [], [], []
         for qid, (terms, k) in per_q.items():
             tids = [info[t][2] for t in terms if t in info]
             if not tids:
@@ -6900,35 +6873,22 @@ class IndexReader(HitStreamModes):
                 bound_scale=self._bound_scale(), deleted=self._deleted,
             )
             sub = sub.assign(avgdl=avgdl)
-            parts = [
-                scorer((rid,), g)
-                for rid, g in sub.groupby("range_id", sort=False)
-            ]
-            allp = pd.concat(parts)
-            if allp.empty:
-                continue
-            r = np.round(
-                allp["score"].to_numpy(np.float64), bm25.ROUND_DIGITS
+            d, r = _merge_topk(
+                [
+                    scorer((rid,), g)
+                    for rid, g in sub.groupby("range_id", sort=False)
+                ],
+                k,
             )
-            d = allp["doc_id"].to_numpy(np.int64)
-            order = np.lexsort((d, -r))[:k]
-            outs.append(
-                pd.DataFrame(
-                    {
-                        "query_id": np.full(len(order), qid, np.int64),
-                        "rank": np.arange(
-                            1, len(order) + 1, dtype=np.int32
-                        ),
-                        "doc_id": d[order],
-                        "score": r[order],
-                    }
-                )
-            )
-        if not outs:
-            return empty
-        return self.spark.createDataFrame(
-            pd.concat(outs, ignore_index=True),
-            schema="query_id long, rank int, doc_id long, score double",
+            qids.append(np.full(len(d), qid, np.int64))
+            ranks.append(np.arange(1, len(d) + 1, dtype=np.int32))
+            docs.append(d)
+            scores.append(r)
+        if not docs:
+            return _local_frame(self.spark, _BATCH_RANKED_SCHEMA)
+        return _local_frame(
+            self.spark, _BATCH_RANKED_SCHEMA,
+            [np.concatenate(c) for c in (qids, ranks, docs, scores)],
         )
 
 

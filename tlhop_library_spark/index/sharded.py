@@ -62,10 +62,12 @@ from tlhop_library_spark.analyzer import py_tokens
 from tlhop_library_spark.index.query import (
     SEGMENT_SCHEMA,
     _COUNTED_SCHEMA,
+    _EXPLAIN_SCHEMA,
+    _RANKED_SCHEMA,
     _SCORE_SCHEMA,
     HitStreamModes,
     IndexReader,
-    _empty_frame,
+    _local_frame,
     _range_scorer,
     counted_range_scorer,
 )
@@ -131,9 +133,7 @@ class ShardedIndexReader(HitStreamModes):
         return infos, idf_by_term
 
     def _empty(self) -> DataFrame:
-        return self.spark.createDataFrame(
-            [], "rank int, doc_id long, score double"
-        )
+        return _local_frame(self.spark, _RANKED_SCHEMA)
 
     # ------------------------------------------------------------------
     def search(
@@ -807,7 +807,7 @@ class ShardedIndexReader(HitStreamModes):
         consumes; typed empty on zero matches."""
         infos, gdf, gcf = self._resolve_full(query_text)
         if not any(infos):
-            return _empty_frame(self.spark, _SCORE_SCHEMA)
+            return _local_frame(self.spark, _SCORE_SCHEMA)
         return self._weighted_local(infos, gdf, gcf, None, "bm25")
 
     def _counted_matching(self, query_text: str) -> DataFrame:
@@ -824,7 +824,7 @@ class ShardedIndexReader(HitStreamModes):
             for r, ginfo, weight_of in self._shard_weights(infos, gdf, gcf)
         ]
         if not parts:
-            return _empty_frame(self.spark, _COUNTED_SCHEMA)
+            return _local_frame(self.spark, _COUNTED_SCHEMA)
         return reduce(DataFrame.unionByName, parts)
 
     def facet_counts(
@@ -930,18 +930,15 @@ class ShardedIndexReader(HitStreamModes):
         idf/avgdl."""
         from tlhop_library_spark.index.query import _attach_explain
 
-        schema = (
-            "rank int, doc_id long, term string, tf long, dl long, "
-            "idf double, weight double, score double"
-        )
         import numpy as np
 
         infos, idf_by_term = self._resolve(query_text)
-        if not idf_by_term:
-            return self.spark.createDataFrame([], schema)
-        topk = self.search(query_text, k, mode).collect()
+        topk = (
+            self.search(query_text, k, mode).collect() if idf_by_term
+            else []
+        )
         if not topk:
-            return self.spark.createDataFrame([], schema)
+            return _local_frame(self.spark, _EXPLAIN_SCHEMA)
         keep = np.sort(
             np.array([r["doc_id"] for r in topk], dtype=np.int64)
         )

@@ -429,16 +429,17 @@ def rerank_exact(
 
     The query dimension is validated against ``dim`` (pass it when
     known, e.g. from the codebooks) or, failing that, the first
-    stored vector's width: ``zip_with`` pads a length mismatch with
+    non-NULL stored vector's width (the query's own width when every
+    vector is NULL): ``zip_with`` pads a length mismatch with
     NULLs, making every l2_dist NULL — and NULLs sort FIRST under
     ``F.asc``, so a wrong-dim query would silently return arbitrary
     docs instead of raising (mirrors pq_topk's guard)."""
     q = np.asarray(qvec, dtype=np.float64)
     if dim is None:
-        probe = embeddings.select(
+        probe = embeddings.where(F.col(vec_col).isNotNull()).select(
             F.size(F.col(vec_col)).alias("d")
         ).first()
-        dim = int(probe["d"]) if probe is not None else len(q)
+        dim = len(q) if probe is None or probe["d"] is None else probe["d"]
     if q.shape[0] != int(dim):
         raise ValueError("query dim mismatch")
     cand = embeddings.join(
