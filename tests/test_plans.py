@@ -148,10 +148,7 @@ def test_build_single_wide_shuffle(spark, corpus_df, tmp_path):
     ).withColumn("tid", F.xxhash64("term"))
     bucket_expr = F.pmod(F.col("tid"), F.lit(8)).cast("int")
     range_expr = (F.col("doc_id") / F.lit(100)).cast("int")
-    from tlhop_library_spark.index.build import (
-        SEGMENT_SCHEMA,
-        _encode_one,
-    )
+    from tlhop_library_spark.index.build import SEGMENT_SCHEMA
     from tlhop_library_spark.index.encode_stream import make_stream_encoder
 
     seg = (
@@ -160,8 +157,7 @@ def test_build_single_wide_shuffle(spark, corpus_df, tmp_path):
         .sortWithinPartitions(bucket_expr, range_expr, "tid", "doc_id")
         .mapInArrow(
             make_stream_encoder(
-                100.0, SEGMENT_SCHEMA, _encode_one,
-                n_buckets=8, range_size=100,
+                100.0, SEGMENT_SCHEMA, n_buckets=8, range_size=100,
             ),
             schema=SEGMENT_SCHEMA,
         )

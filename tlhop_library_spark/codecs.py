@@ -17,39 +17,38 @@ from __future__ import annotations
 
 import numpy as np
 
-_MAX_VARINT_BYTES = 10  # uint64 worst case
+
+def varint_encode_lengths(values: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """LEB128-encode an array of non-negative ints in one vectorized pass.
+
+    Returns the concatenated stream (uint8) and each value's byte length
+    (int64), so a caller that encodes many posting runs or blocks at
+    once can cut the one stream at any value boundary with ``cumsum``.
+    """
+    v = np.asarray(values, dtype=np.uint64).ravel()
+    # bytes needed per value: ceil(bitlength/7), min 1
+    nbytes = np.ones(v.size, dtype=np.int64)
+    rest = v >> np.uint64(7)
+    while rest.any():
+        nbytes += rest > 0
+        rest >>= np.uint64(7)
+    ends = np.cumsum(nbytes)
+    out = np.empty(int(ends[-1]) if v.size else 0, dtype=np.uint8)
+    # byte j of value i lands at starts[i] + j
+    starts = ends - nbytes
+    rem = v.copy()
+    for j in range(int(nbytes.max()) if v.size else 0):
+        live = nbytes > j
+        byte = (rem[live] & np.uint64(0x7F)).astype(np.uint8)
+        cont = (nbytes[live] > j + 1).astype(np.uint8) << 7
+        out[starts[live] + j] = byte | cont
+        rem >>= np.uint64(7)
+    return out, nbytes
 
 
 def varint_encode(values: np.ndarray) -> bytes:
     """LEB128-encode an array of non-negative ints (vectorized)."""
-    v = np.asarray(values, dtype=np.uint64)
-    if v.size == 0:
-        return b""
-    # bytes needed per value: ceil(bitlength/7), min 1
-    nbits = np.zeros(v.shape, dtype=np.int64)
-    tmp = v.copy()
-    while True:
-        nz = tmp > 0
-        if not nz.any():
-            break
-        nbits[nz] += 7
-        tmp >>= np.uint64(7)
-    nbytes = np.maximum(nbits // 7, 1)
-    total = int(nbytes.sum())
-    out = np.zeros(total, dtype=np.uint8)
-    # position of byte j of value i = start[i] + j
-    starts = np.concatenate(([0], np.cumsum(nbytes)[:-1]))
-    rem = v.copy()
-    for j in range(_MAX_VARINT_BYTES):
-        mask = nbytes > j
-        if not mask.any():
-            break
-        pos = starts[mask] + j
-        byte = (rem[mask] & np.uint64(0x7F)).astype(np.uint8)
-        cont = (nbytes[mask] > j + 1).astype(np.uint8) << 7
-        out[pos] = byte | cont
-        rem[mask] >>= np.uint64(7)
-    return out.tobytes()
+    return varint_encode_lengths(values)[0].tobytes()
 
 
 def varint_decode(buf: bytes, count: int | None = None) -> np.ndarray:

@@ -308,14 +308,12 @@ def boolean_exhaustive(docs, query_text: str, k: int = 10,
     from pyspark.sql import functions as F
 
     from tlhop_library_spark.analyzer import tokens_col
+    from tlhop_library_spark.index.query import _RANKED_SCHEMA, _local_frame
     from tlhop_library_spark.operators.relational import ranked_topk
 
     nnf, all_terms, pos_terms = compile_query(query_text)
-    empty = docs.sparkSession.createDataFrame(
-        [], "rank int, doc_id long, score double"
-    )
     if not pos_terms:
-        return empty
+        return _local_frame(docs.sparkSession, _RANKED_SCHEMA)
     ti = {t: i for i, t in enumerate(all_terms)}
     base = docs.where(F.col("text").isNotNull()).select(
         F.col(doc_col).cast("long").alias("doc_id"),
@@ -336,7 +334,7 @@ def boolean_exhaustive(docs, query_text: str, k: int = 10,
     ).collect()[0]
     n_docs, avgdl = int(stats["n"]), float(stats["avgdl"] or 0.0)
     if n_docs == 0:
-        return empty
+        return _local_frame(docs.sparkSession, _RANKED_SCHEMA)
 
     def pred(node):
         kind = node[0]

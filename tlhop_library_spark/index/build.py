@@ -17,8 +17,11 @@ Dataflow (all shuffles explicit and skew-aware; design point 10^12 docs):
     │     doc-space aligned
     └─ THE ONE WIDE SHUFFLE: repartition(P, bucket, range_id) →
        sortWithinPartitions(bucket, range_id, tid, doc_id) [Tungsten]
-       → mapInArrow streaming encoder (tf by run-length; per-block
-       varint restart points + float64 block-max weights)
+       → mapInArrow streaming encoder, a batch at a time
+       (index/encode_stream.py): every complete (term, range) run of
+       an Arrow batch is encoded in one numpy pass — tf by run-length,
+       per-block varint restart points, float64 block-max weights —
+       into one output RecordBatch built straight from byte offsets
        → segment rows written as parquet partitioned by
          bucket = pmod(tid, n_buckets)  (query-time pruning),
          sortWithinPartitions(tid) for parquet min/max row-group
@@ -33,8 +36,10 @@ checkpoints + idempotent MERGE, /root/reference/tlhop/crawlers/nist_nvd.py:83-89
 
 Posting-list construction parallels the reference's explode→join→regroup
 pattern (/root/reference/tlhop/algorithms/vulnerability_assessment.py:147-152)
-but replaces collect_list (unbounded agg buffer) with applyInPandas
-encoding over salted bounded groups.
+but replaces collect_list (unbounded agg buffer) with the streaming
+encoder over salted bounded groups: its Python cost is per Arrow batch,
+not per run or per block, so short runs (tail terms, append deltas)
+cost no more per posting than long ones.
 """
 
 from __future__ import annotations
@@ -45,7 +50,6 @@ import os
 import time
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
@@ -62,7 +66,6 @@ from pyspark.sql.types import (
 
 from tlhop_library_spark import bm25
 from tlhop_library_spark.analyzer import ANALYZER_VERSION, tokens_col
-from tlhop_library_spark.codecs import delta_encode, varint_encode
 
 #: postings per block inside a chunk (block = skippable scoring unit)
 BLOCK_SIZE = 128
@@ -124,72 +127,28 @@ POS_SEGMENT_SCHEMA = StructType(
 )
 
 
+#: schemas of the tables the build writes and reads back: a read with a
+#: known schema skips the footer-reading Spark job of schema inference
+DOCLEN_DDL = "doc_id long, dl int"
+NAMES_DDL = "tid long, term string"
+
+
 def _encode_one(tid, bucket, range_id, doc_ids, tfs, dls, w,
                 pos_gaps=None) -> dict:
-    """Encode one (term, range) posting run (already doc_id-sorted).
+    """Encode one (term, range) posting run (already doc_id-sorted) as
+    a segment row dict: a one-run call of the batched
+    ``encode_stream.encode_runs`` (arguments as documented there)."""
+    from tlhop_library_spark.index.encode_stream import (
+        _arrow_schema,
+        encode_runs,
+    )
 
-    ``pos_gaps`` (positional indexes only): token-instance-level array,
-    aligned with the run's raw (doc, position) stream — each posting's
-    first position absolute, the rest delta-gapped. Posting i owns the
-    slice ``[tb[i], tb[i+1])`` where ``tb = [0, cumsum(tfs)]``.
-    """
-    n = len(doc_ids)
-    n_blocks = math.ceil(n / BLOCK_SIZE)
-    doc_parts, tf_parts, dl_parts, pos_parts = [], [], [], []
-    b_first, b_last, b_counts = [], [], []
-    b_doc_off, b_tf_off, b_dl_off, b_pos_off, b_max = [], [], [], [], []
-    doc_off = tf_off = dl_off = pos_off = 0
-    tb = None
-    if pos_gaps is not None:
-        tb = np.concatenate(([0], np.cumsum(tfs))).astype(np.int64)
-    for bi in range(n_blocks):
-        s, e = bi * BLOCK_SIZE, min((bi + 1) * BLOCK_SIZE, n)
-        db = varint_encode(delta_encode(doc_ids[s:e]))
-        tb_ = varint_encode(tfs[s:e])
-        lb = varint_encode(dls[s:e])
-        b_doc_off.append(doc_off)
-        b_tf_off.append(tf_off)
-        b_dl_off.append(dl_off)
-        b_first.append(int(doc_ids[s]))
-        b_last.append(int(doc_ids[e - 1]))
-        b_counts.append(e - s)
-        b_max.append(float(w[s:e].max()))
-        doc_parts.append(db)
-        tf_parts.append(tb_)
-        dl_parts.append(lb)
-        doc_off += len(db)
-        tf_off += len(tb_)
-        dl_off += len(lb)
-        if pos_gaps is not None:
-            pb = varint_encode(pos_gaps[tb[s]:tb[e]])
-            b_pos_off.append(pos_off)
-            pos_parts.append(pb)
-            pos_off += len(pb)
-    return {
-        "tid": int(tid),
-        "bucket": bucket,
-        "range_id": range_id,
-        "n_postings": n,
-        "sum_tf": int(tfs.sum()),
-        "first_doc": int(doc_ids[0]),
-        "last_doc": int(doc_ids[-1]),
-        "doc_bytes": b"".join(doc_parts),
-        "tf_bytes": b"".join(tf_parts),
-        "dl_bytes": b"".join(dl_parts),
-        "block_first_docs": b_first,
-        "block_last_docs": b_last,
-        "block_counts": b_counts,
-        "block_doc_offsets": b_doc_off,
-        "block_tf_offsets": b_tf_off,
-        "block_dl_offsets": b_dl_off,
-        "block_max_w": b_max,
-        "max_w": float(max(b_max)),
-        **(
-            {"pos_bytes": b"".join(pos_parts), "block_pos_offsets": b_pos_off}
-            if pos_gaps is not None
-            else {}
-        ),
-    }
+    schema = POS_SEGMENT_SCHEMA if pos_gaps is not None else SEGMENT_SCHEMA
+    return encode_runs(
+        _arrow_schema(schema), np.zeros(1, dtype=np.int64),
+        np.array([tid], dtype=np.int64), np.array([bucket]),
+        np.array([range_id]), doc_ids, tfs, dls, w, pos_gaps,
+    ).to_pylist()[0]
 
 
 class IndexBuilder:
@@ -296,6 +255,10 @@ class IndexBuilder:
     def stored_path(self):
         return os.path.join(self.index_dir, "stored")
 
+    @property
+    def _segment_schema(self) -> StructType:
+        return POS_SEGMENT_SCHEMA if self.positions else SEGMENT_SCHEMA
+
     # -- encode plan (shared by build and index.append) ------------------
     def _exploded(self, with_tokens: DataFrame) -> DataFrame:
         """(doc_id, dl, term, tid[, pos]) token instances, dictionary-
@@ -326,9 +289,9 @@ class IndexBuilder:
 
         bucket_expr = F.pmod(F.col("tid"), F.lit(self.n_buckets)).cast("int")
         range_expr = F.floor(F.col("doc_id") / F.lit(range_size)).cast("int")
-        seg_schema = POS_SEGMENT_SCHEMA if self.positions else SEGMENT_SCHEMA
+        seg_schema = self._segment_schema
         encoder = make_stream_encoder(
-            avgdl, seg_schema, _encode_one,
+            avgdl, seg_schema,
             n_buckets=self.n_buckets, range_size=range_size,
             positions=self.positions,
         )
@@ -439,7 +402,7 @@ class IndexBuilder:
                 *self.stored_fields,
             ).write.mode("overwrite").parquet(self.stored_path)
         mark("tokenize_doc_lengths")
-        row = spark.read.parquet(self.doclen_path).agg(
+        row = spark.read.schema(DOCLEN_DDL).parquet(self.doclen_path).agg(
             F.count("*").alias("n"),
             F.sum("dl").alias("sum_dl"),
             F.max("doc_id").alias("max_doc"),
@@ -471,7 +434,7 @@ class IndexBuilder:
         if "term_names" not in completed:
             names = exploded.select("tid", "term").distinct()
             names.write.mode("overwrite").parquet(self.names_path)
-            names_back = spark.read.parquet(self.names_path)
+            names_back = spark.read.schema(NAMES_DDL).parquet(self.names_path)
             collisions = (
                 names_back.groupBy("tid")
                 .agg(F.countDistinct("term").alias("n"))
@@ -512,14 +475,15 @@ class IndexBuilder:
         # table to restore term strings — both sides vocabulary-sized
         if "dictionary" not in completed:
             seg_stats = (
-                spark.read.parquet(self.segments_path)
+                spark.read.schema(self._segment_schema)
+                .parquet(self.segments_path)
                 .groupBy("tid", "bucket")
                 .agg(
                     F.sum("n_postings").alias("df"),
                     F.sum("sum_tf").alias("cf"),
                 )
             )
-            names = spark.read.parquet(self.names_path).select("tid", "term")
+            names = spark.read.schema(NAMES_DDL).parquet(self.names_path)
             (
                 seg_stats.join(names, "tid")
                 .write.mode("overwrite")
@@ -560,7 +524,7 @@ class IndexBuilder:
 
     # -- manifest / resume ---------------------------------------------
     def _append_manifest(self, gname: str, gdir: str) -> None:
-        seg = self.spark.read.parquet(gdir)
+        seg = self.spark.read.schema(self._segment_schema).parquet(gdir)
         m = seg.agg(
             F.count("*").alias("n_chunks"),
             F.countDistinct("tid").alias("n_terms"),

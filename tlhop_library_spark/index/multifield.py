@@ -45,8 +45,10 @@ from tlhop_library_spark import bm25
 from tlhop_library_spark.analyzer import py_tokens
 from tlhop_library_spark.index.query import (
     SEGMENT_SCHEMA,
+    _RANKED_SCHEMA,
     _SCORE_SCHEMA,
     IndexReader,
+    _local_frame,
 )
 
 __all__ = [
@@ -354,9 +356,7 @@ class MultiFieldIndexReader:
         ).select("rank", "doc_id", "score")
 
     def _empty(self) -> DataFrame:
-        return self.spark.createDataFrame(
-            [], "rank int, doc_id long, score double"
-        )
+        return _local_frame(self.spark, _RANKED_SCHEMA)
 
     def search(
         self, query_text: str, k: int = 10,
@@ -641,9 +641,7 @@ class ShardedMultiFieldIndexReader:
             self.avgdl_of[f] = sdl / n if n else 0.0
 
     def _empty(self) -> DataFrame:
-        return self.spark.createDataFrame(
-            [], "rank int, doc_id long, score double"
-        )
+        return _local_frame(self.spark, _RANKED_SCHEMA)
 
     def _resolve(self, terms: list[str], boosts: dict[str, float]):
         """Per-shard gathers plus the federation-global per-(field_id,

@@ -543,11 +543,13 @@ def phrase_exhaustive(
     Corpus stats and per-term df are corpus-wide (one agg pass), same
     as ``score_exhaustive`` — phrase filtering restricts only the
     scored set, not the statistics."""
+    from tlhop_library_spark.index.query import _RANKED_SCHEMA, _local_frame
+
     slots = py_tokens(phrase_text)
     terms = sorted(set(slots))
     spark = docs.sparkSession
     if not slots:
-        return spark.createDataFrame([], "rank int, doc_id long, score double")
+        return _local_frame(spark, _RANKED_SCHEMA)
     needle = " " + " ".join(slots) + " "
     base = docs.where(F.col("text").isNotNull()).select(
         F.col(doc_col).cast("long").alias("doc_id"),
@@ -577,9 +579,7 @@ def phrase_exhaustive(
     for i in range(len(terms)):
         df_i = int(stats[f"df_{i}"])
         if df_i == 0:
-            return spark.createDataFrame(
-                [], "rank int, doc_id long, score double"
-            )
+            return _local_frame(spark, _RANKED_SCHEMA)
         tf = F.col(f"tf_{i}")
         w_i = (tf * (bm25.K1 + 1.0)) / (
             tf

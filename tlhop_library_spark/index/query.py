@@ -69,6 +69,33 @@ _RANKED_SCHEMA = StructType(
 _BATCH_RANKED_SCHEMA = StructType(
     [StructField("query_id", LongType())] + _RANKED_SCHEMA.fields
 )
+_FACET_SCHEMA = StructType(
+    [StructField("facet", StringType()), StructField("n_docs", LongType())]
+)
+_TERM_VECTOR_SCHEMA = StructType(
+    [
+        StructField("doc_id", LongType()),
+        StructField("term", StringType()),
+        StructField("tf", LongType()),
+        StructField("dl", LongType()),
+    ]
+)
+_SUGGEST_SCHEMA = StructType(
+    [
+        StructField("rank", IntegerType()),
+        StructField("suggestion", StringType()),
+        StructField("score", DoubleType()),
+    ]
+)
+_SIG_TERMS_SCHEMA = StructType(
+    [
+        StructField("rank", IntegerType()),
+        StructField("term", StringType()),
+        StructField("fg_df", LongType()),
+        StructField("bg_df", LongType()),
+        StructField("score", DoubleType()),
+    ]
+)
 
 
 def _local_frame(
@@ -2903,9 +2930,7 @@ def facet_exhaustive(
     whose token array overlaps the query terms, per facet value."""
     terms = sorted(set(py_tokens(query_text)))
     if not terms:
-        return docs.sparkSession.createDataFrame(
-            [], "facet string, n_docs long"
-        )
+        return _local_frame(docs.sparkSession, _FACET_SCHEMA)
     return (
         docs.where(F.col("text").isNotNull())
         .select(
@@ -3828,6 +3853,10 @@ class HitStreamModes:
     union index's stream and every mode here is shard-layout-
     independent."""
 
+    def _empty(self) -> DataFrame:
+        """The zero-match ranked answer ``(rank, doc_id, score)``."""
+        return _local_frame(self.spark, _RANKED_SCHEMA)
+
     def facet_cardinality(
         self, query_text: str, docs: DataFrame, field: str,
         k: "int | None" = None,
@@ -4360,7 +4389,6 @@ class IndexReader(HitStreamModes):
         to the single doc id, and ships one (tid, weight) row per
         distinct term of that doc; everything after is a standard
         pruned search."""
-        empty = _local_frame(self.spark, _RANKED_SCHEMA)
         range_size = int(self.stats["range_size"])
         seg = self._segments.where(
             F.col("range_id") == int(doc_id) // range_size
@@ -4403,7 +4431,7 @@ class IndexReader(HitStreamModes):
             .collect()
         )
         if not cand:
-            return empty
+            return self._empty()
         info = {
             r["term"]: (r["df"], r["bucket"], r["tid"]) for r in cand
         }
@@ -4436,15 +4464,10 @@ class IndexReader(HitStreamModes):
         from tlhop_library_spark.index.phrase import decode_chunk
 
         ids = np.unique(np.array([int(d) for d in doc_ids], dtype=np.int64))
-        empty = self.spark.createDataFrame(
-            [], "doc_id long, term string, tf long, dl long"
-        )
-        if not ids.size:
-            return empty
         if self._deleted is not None and self._deleted.size:
             ids = ids[~np.isin(ids, self._deleted)]
-            if not ids.size:
-                return empty
+        if not ids.size:
+            return _local_frame(self.spark, _TERM_VECTOR_SCHEMA)
         range_size = int(self.stats["range_size"])
         ranges = sorted({int(d) // range_size for d in ids})
         seg = self._segments.where(
@@ -4508,10 +4531,9 @@ class IndexReader(HitStreamModes):
         set — (bucket, tid)-pruned chunk scan, per-range kernels,
         k winners per range; the group merge is a per-range numpy
         sum over the members' already-decoded postings."""
-        empty = _local_frame(self.spark, _RANKED_SCHEMA)
         qterms = sorted(set(py_tokens(query_text)))
         if not qterms:
-            return empty
+            return self._empty()
         # group id = position of the query term; members analyzed too
         groups: list[list[str]] = []
         for t in qterms:
@@ -4530,11 +4552,10 @@ class IndexReader(HitStreamModes):
         a term named in several groups lands in the LAST one. Used by
         :meth:`search_synonyms` (explicit synonym groups) and
         :meth:`search_bool_prefix` (prefix-expansion group)."""
-        empty = _local_frame(self.spark, _RANKED_SCHEMA)
         all_terms = sorted({m for g in groups for m in g})
         info = self.lookup_terms(all_terms)
         if not info:
-            return empty
+            return self._empty()
         n_docs = self.stats["n_docs"]
         avgdl = float(self.stats["avgdl"])
         # term → group assignment first (a term named in several
@@ -4555,7 +4576,7 @@ class IndexReader(HitStreamModes):
             for gi, dfs in group_dfs.items()
         }
         if not group_idf:
-            return empty
+            return self._empty()
         buckets = sorted({b for _, b, _ in info.values()})
         tids = sorted({t for _, _, t in info.values()})
         seg = self._segments.where(
@@ -4651,9 +4672,8 @@ class IndexReader(HitStreamModes):
         the executors. Returns (rank, doc_id, score)."""
         terms = sorted(set(py_tokens(query_text)))
         info = self.lookup_terms_full(terms)
-        empty = _local_frame(self.spark, _RANKED_SCHEMA)
         if not info:
-            return empty
+            return self._empty()
 
         def zero(tfs, dls):
             return np.zeros(len(tfs), dtype=np.float64)
@@ -4696,9 +4716,8 @@ class IndexReader(HitStreamModes):
         docs."""
         terms = sorted(set(py_tokens(query_text)))
         info = self.lookup_terms_full(terms)
-        empty = _local_frame(self.spark, _RANKED_SCHEMA)
         if not info:
-            return empty
+            return self._empty()
         scorer = similarity_range_scorer(
             self._bm25_weight_fns(info), k, deleted=self._deleted,
             after=(float(after[0]), int(after[1])),
@@ -4741,11 +4760,10 @@ class IndexReader(HitStreamModes):
         (tid, weight) row per distinct feedback-doc term; expansion
         selection is a distributed (weight, term) top-m via the
         dictionary join — no driver-side vocabulary scan."""
-        empty = _local_frame(self.spark, _RANKED_SCHEMA)
         terms = sorted(set(py_tokens(query_text)))
         info = self.lookup_terms(terms)
         if not info:
-            return empty
+            return self._empty()
         # weight 0 ⇒ expansion terms cannot contribute: skip the
         # feedback pass entirely (same contract as a zero field boost
         # in multifield.py — zero-weighted work is never scanned)
@@ -4753,7 +4771,7 @@ class IndexReader(HitStreamModes):
             return self._search_with_info(info, k, mode)
         top = self.search(query_text, fb_docs, mode).collect()
         if not top:
-            return empty
+            return self._empty()
         fb_ids = np.sort(
             np.array([r["doc_id"] for r in top], dtype=np.int64)
         )
@@ -5098,7 +5116,7 @@ class IndexReader(HitStreamModes):
         info (term → (df, bucket, tid)) — shared by plain search, fuzzy
         expansion, and any caller that rewrites terms before scoring."""
         if not info:
-            return _local_frame(self.spark, _RANKED_SCHEMA)
+            return self._empty()
         n_docs = self.stats["n_docs"]
         idf_map = {
             tid: bm25.idf(n_docs, df) for (df, _, tid) in info.values()
@@ -5360,7 +5378,7 @@ class IndexReader(HitStreamModes):
         terms = sorted(set(py_tokens(query_text)))
         info = self.lookup_terms(terms)
         if not info:
-            return _local_frame(self.spark, _RANKED_SCHEMA)
+            return self._empty()
         est = sum(df for (df, _, _) in info.values()) * (
             self._avg_bytes_per_posting()
         )
@@ -5539,9 +5557,6 @@ class IndexReader(HitStreamModes):
         import itertools
 
         toks = py_tokens(query_text)
-        empty = self.spark.createDataFrame(
-            [], "rank int, suggestion string, score double"
-        )
         if len(toks) < 2 or len(toks) > 4:
             raise ValueError(
                 "suggest_phrase takes 2-4 analyzable tokens; got "
@@ -5551,7 +5566,8 @@ class IndexReader(HitStreamModes):
         for t in toks:
             rows = self.suggest_df(t, max_edits, per_token).collect()
             if not rows:
-                return empty  # no candidate within reach ⇒ no phrase
+                # no candidate within reach ⇒ no phrase
+                return _local_frame(self.spark, _SUGGEST_SCHEMA)
             cands.append([r["term"] for r in rows])
         pair_rows = []
         for combo in itertools.product(*cands):
@@ -5651,13 +5667,8 @@ class IndexReader(HitStreamModes):
         stat — Lucene live-docs semantics). The n_hits scalar rides a
         broadcast 1-row cross join; nothing corpus-sized is
         collected."""
-        empty = self.spark.createDataFrame(
-            [],
-            "rank int, term string, fg_df long, bg_df long, "
-            "score double",
-        )
         if not self.lookup_terms(sorted(set(py_tokens(query_text)))):
-            return empty
+            return _local_frame(self.spark, _SIG_TERMS_SCHEMA)
         partial, hits = self._sig_fg_partials(query_text)
         bg_n = float(self.stats["n_docs"])
         fg = partial.groupBy("tid").agg(F.sum("fg").alias("fg_df"))
@@ -5829,9 +5840,8 @@ class IndexReader(HitStreamModes):
         only (doc_id) / (facet) pairs."""
         terms = sorted(set(py_tokens(query_text)))
         info = self.lookup_terms(terms)
-        empty = self.spark.createDataFrame([], "facet string, n_docs long")
         if not info:
-            return empty
+            return _local_frame(self.spark, _FACET_SCHEMA)
         buckets = sorted({b for _, b, _ in info.values()})
         tids = sorted({tid for _, _, tid in info.values()})
         seg = self._segments.where(
@@ -5872,9 +5882,9 @@ class IndexReader(HitStreamModes):
         rarest-first instead of block-max scanning."""
         terms = sorted(set(py_tokens(query_text)))
         info = self.lookup_terms(terms)
-        empty = _local_frame(self.spark, _RANKED_SCHEMA)
         if not terms or len(info) < len(terms):
-            return empty  # some term matches nothing → AND is empty
+            # some term matches nothing → AND is empty
+            return self._empty()
         n_docs = self.stats["n_docs"]
         avgdl = self.stats["avgdl"]
         idf_map = {
@@ -5933,9 +5943,8 @@ class IndexReader(HitStreamModes):
 
         terms = sorted(set(py_tokens(query_text)))
         info = self.lookup_terms_full(terms)
-        empty = _local_frame(self.spark, _RANKED_SCHEMA)
         if not info:
-            return empty
+            return self._empty()
         weight_of = similarities.weight_fns(
             similarity, info, self.stats["n_docs"],
             int(self.stats["sum_dl"]),
@@ -5982,9 +5991,8 @@ class IndexReader(HitStreamModes):
         first = self.search(query_text, window)
         terms = sorted(set(py_tokens(query_text)))
         info = self.lookup_terms_full(terms)
-        empty = _local_frame(self.spark, _RANKED_SCHEMA)
         if not info:
-            return empty
+            return self._empty()
         weight_of = similarities.weight_fns(
             similarity, info, self.stats["n_docs"],
             int(self.stats["sum_dl"]),
@@ -6047,9 +6055,8 @@ class IndexReader(HitStreamModes):
         range leave the executors. Returns (rank, doc_id, score)."""
         boosts = parse_boosted_query(boosted_query)
         info = self.lookup_terms_full(sorted(boosts))
-        empty = _local_frame(self.spark, _RANKED_SCHEMA)
         if not info:
-            return empty
+            return self._empty()
         scorer = similarity_range_scorer(
             self._bm25_weight_fns(info, boosts), k, deleted=self._deleted
         )
@@ -6071,9 +6078,8 @@ class IndexReader(HitStreamModes):
         (rank, doc_id, score); scale shape = plain indexed search."""
         terms = sorted(set(py_tokens(query_text)))
         info = self.lookup_terms_full(terms)
-        empty = _local_frame(self.spark, _RANKED_SCHEMA)
         if not info:
-            return empty
+            return self._empty()
         scorer = dismax_range_scorer(
             self._bm25_weight_fns(info), k, float(tie_breaker),
             deleted=self._deleted,
@@ -6222,12 +6228,11 @@ class IndexReader(HitStreamModes):
         terms = sorted(set(py_tokens(query_text)))
         m = max(1, int(min_should_match))
         info = self.lookup_terms(terms)
-        empty = _local_frame(self.spark, _RANKED_SCHEMA)
         # absent terms can never match; fewer present terms than m
         # means no doc can reach the threshold (Lucene semantics: the
         # threshold counts the query's clauses, not the resolvable ones)
         if not info or len(info) < m:
-            return empty
+            return self._empty()
         n_docs = self.stats["n_docs"]
         avgdl = self.stats["avgdl"]
         idf_map = {
@@ -6268,7 +6273,6 @@ class IndexReader(HitStreamModes):
         )
 
         nnf, all_terms, pos_terms = compile_query(query_text)
-        empty = _local_frame(self.spark, _RANKED_SCHEMA)
         info = self.lookup_terms(all_terms)
         tid_of = {t: tid for t, (_, _, tid) in info.items()}
         nnf_tid = subst_tids(nnf, tid_of)
@@ -6276,7 +6280,7 @@ class IndexReader(HitStreamModes):
             tid_of[t] for t in pos_terms if t in tid_of
         )
         if not pos_tids:
-            return empty
+            return self._empty()
         n_docs = self.stats["n_docs"]
         avgdl = self.stats["avgdl"]
         idf_map = {
@@ -6316,9 +6320,8 @@ class IndexReader(HitStreamModes):
         broadcast, or shuffled as a whole."""
         terms = sorted(set(py_tokens(query_text)))
         info = self.lookup_terms(terms)
-        empty = _local_frame(self.spark, _RANKED_SCHEMA)
         if not info:
-            return empty
+            return self._empty()
         n_docs = self.stats["n_docs"]
         avgdl = self.stats["avgdl"]
         idf_map = {
@@ -6412,12 +6415,11 @@ class IndexReader(HitStreamModes):
         from tlhop_library_spark.index.phrase import phrase_range_scorer
 
         slots = py_tokens(phrase_text)
-        empty = _local_frame(self.spark, _RANKED_SCHEMA)
         if not slots:
-            return empty
+            return self._empty()
         info, seg = self._positional_seg(sorted(set(slots)))
         if seg is None:
-            return empty
+            return self._empty()
         n_docs = self.stats["n_docs"]
         idf_map = {tid: bm25.idf(n_docs, df) for (df, _, tid) in info.values()}
         phrase_tids = [info[t][2] for t in slots]
@@ -6442,12 +6444,11 @@ class IndexReader(HitStreamModes):
         from tlhop_library_spark.index.phrase import proximity_range_scorer
 
         terms = sorted(set(py_tokens(query_text)))
-        empty = _local_frame(self.spark, _RANKED_SCHEMA)
         if not terms:
-            return empty
+            return self._empty()
         info, seg = self._positional_seg(terms)
         if seg is None:
-            return empty
+            return self._empty()
         n_docs = self.stats["n_docs"]
         idf_map = {tid: bm25.idf(n_docs, df) for (df, _, tid) in info.values()}
         tids = [info[t][2] for t in terms]
@@ -6483,12 +6484,11 @@ class IndexReader(HitStreamModes):
         )
 
         clauses = py_tokens(query_text)
-        empty = _local_frame(self.spark, _RANKED_SCHEMA)
         if not clauses:
-            return empty
+            return self._empty()
         info, seg = self._positional_seg(sorted(set(clauses)))
         if seg is None:
-            return empty
+            return self._empty()
         n_docs = self.stats["n_docs"]
         idf_map = {
             tid: bm25.idf(n_docs, df) for (df, _, tid) in info.values()
@@ -6526,19 +6526,18 @@ class IndexReader(HitStreamModes):
 
         clauses = py_tokens(include_text)
         excl = py_tokens(exclude_term)
-        empty = _local_frame(self.spark, _RANKED_SCHEMA)
         if len(excl) != 1:
             raise ValueError(
                 "exclude must analyze to exactly one term"
             )
         if not clauses:
-            return empty
+            return self._empty()
         terms = sorted(set(clauses) | {excl[0]})
         info, seg = self._positional_seg(
             terms, optional=frozenset(excl)
         )
         if seg is None:
-            return empty
+            return self._empty()
         n_docs = self.stats["n_docs"]
         idf_map = {
             info[t][2]: bm25.idf(n_docs, info[t][0])
@@ -6591,9 +6590,8 @@ class IndexReader(HitStreamModes):
             )
             if t
         ]
-        empty = _local_frame(self.spark, _RANKED_SCHEMA)
         if not raw:
-            return empty
+            return self._empty()
         prefix, exact = raw[-1], raw[:-1]
         if any(len(t) < MIN_TOKEN_LEN for t in exact):
             raise ValueError(
@@ -6608,10 +6606,11 @@ class IndexReader(HitStreamModes):
             )
         cand_info = self.lookup_terms_prefix([prefix], max_expansions)
         if not cand_info:
-            return empty
+            return self._empty()
         info = self.lookup_terms(sorted(set(exact))) if exact else {}
         if len(info) < len(set(exact)):
-            return empty  # a missing exact term ⇒ no doc can match
+            # a missing exact term ⇒ no doc can match
+            return self._empty()
         n_docs = self.stats["n_docs"]
         idf_map = {
             tid: bm25.idf(n_docs, df) for (df, _, tid) in info.values()
@@ -6682,9 +6681,8 @@ class IndexReader(HitStreamModes):
             )
             if t
         ]
-        empty = _local_frame(self.spark, _RANKED_SCHEMA)
         if not raw:
-            return empty
+            return self._empty()
         prefix, exact = raw[-1], raw[:-1]
         if any(len(t) < MIN_TOKEN_LEN for t in exact):
             raise ValueError(
@@ -6697,7 +6695,7 @@ class IndexReader(HitStreamModes):
         if cand_info:
             groups.append(sorted(cand_info))
         if not groups:
-            return empty
+            return self._empty()
         return self._search_term_groups(groups, k)
 
     def search_span_first(
@@ -6713,12 +6711,11 @@ class IndexReader(HitStreamModes):
         )
 
         toks = py_tokens(term_text)
-        empty = _local_frame(self.spark, _RANKED_SCHEMA)
         if len(toks) != 1:
             raise ValueError("search_span_first takes exactly one term")
         info, seg = self._positional_seg(toks)
         if seg is None:
-            return empty
+            return self._empty()
         n_docs = self.stats["n_docs"]
         (df, _b, tid) = info[toks[0]]
         scorer = span_first_range_scorer(

@@ -63,8 +63,9 @@ from tlhop_library_spark.index.query import (
     SEGMENT_SCHEMA,
     _COUNTED_SCHEMA,
     _EXPLAIN_SCHEMA,
-    _RANKED_SCHEMA,
     _SCORE_SCHEMA,
+    _SIG_TERMS_SCHEMA,
+    _SUGGEST_SCHEMA,
     HitStreamModes,
     IndexReader,
     _local_frame,
@@ -131,9 +132,6 @@ class ShardedIndexReader(HitStreamModes):
             t: bm25.idf(self.n_docs, df) for t, df in global_df.items()
         }
         return infos, idf_by_term
-
-    def _empty(self) -> DataFrame:
-        return _local_frame(self.spark, _RANKED_SCHEMA)
 
     # ------------------------------------------------------------------
     def search(
@@ -280,11 +278,6 @@ class ShardedIndexReader(HitStreamModes):
 
         from tlhop_library_spark.analyzer import py_tokens as _pt
 
-        empty = self.spark.createDataFrame(
-            [],
-            "rank int, term string, fg_df long, bg_df long, "
-            "score double",
-        )
         terms = sorted(set(_pt(query_text)))
         parts, hit_parts = [], []
         for r in self.readers:
@@ -294,7 +287,7 @@ class ShardedIndexReader(HitStreamModes):
             parts.append(partial)
             hit_parts.append(hits)
         if not parts:
-            return empty
+            return _local_frame(self.spark, _SIG_TERMS_SCHEMA)
         fg = (
             reduce(DataFrame.unionByName, parts)
             .groupBy("tid")
@@ -541,9 +534,6 @@ class ShardedIndexReader(HitStreamModes):
         from tlhop_library_spark.analyzer import py_tokens as _pt
 
         toks = _pt(query_text)
-        empty = self.spark.createDataFrame(
-            [], "rank int, suggestion string, score double"
-        )
         if len(toks) < 2 or len(toks) > 4:
             raise ValueError(
                 "suggest_phrase takes 2-4 analyzable tokens; got "
@@ -553,7 +543,7 @@ class ShardedIndexReader(HitStreamModes):
         for t in toks:
             rows = self.suggest_df(t, max_edits, per_token).collect()
             if not rows:
-                return empty
+                return _local_frame(self.spark, _SUGGEST_SCHEMA)
             cands.append([r["term"] for r in rows])
         pair_rows = []
         for combo in itertools.product(*cands):

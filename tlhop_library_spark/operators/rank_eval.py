@@ -29,6 +29,28 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    DoubleType,
+    IntegerType,
+    LongType,
+    StructField,
+    StructType,
+)
+
+_RANKINGS_SCHEMA = StructType(
+    [
+        StructField("query_id", LongType()),
+        StructField("rank", IntegerType()),
+        StructField("doc_id", LongType()),
+    ]
+)
+_JUDGMENTS_SCHEMA = StructType(
+    [
+        StructField("query_id", LongType()),
+        StructField("doc_id", LongType()),
+        StructField("grade", DoubleType()),
+    ]
+)
 
 
 def rank_eval(
@@ -160,6 +182,7 @@ def bm25_self_eval(
 
     from tlhop_library_spark import bm25
     from tlhop_library_spark.analyzer import py_tokens, tokens_col
+    from tlhop_library_spark.index.query import _local_frame
     from tlhop_library_spark.operators.relational import ranked_topk
 
     spark = docs.sparkSession
@@ -168,8 +191,6 @@ def bm25_self_eval(
     ]
     all_terms = sorted({t for _, ts in per_query for t in ts})
     idx = {t: i for i, t in enumerate(all_terms)}
-    rk_schema = "query_id long, rank int, doc_id long"
-    jd_schema = "query_id long, doc_id long, grade double"
 
     base = docs.where(F.col("text").isNotNull()).select(
         F.col(doc_col).cast("long").alias("doc_id"),
@@ -194,8 +215,8 @@ def bm25_self_eval(
             ],
         ).collect()[0]
         n_docs, avgdl = int(stats["n"]), float(stats["avgdl"] or 0.0)
-        rankings = spark.createDataFrame([], rk_schema)
-        judgments = spark.createDataFrame([], jd_schema)
+        rankings = _local_frame(spark, _RANKINGS_SCHEMA)
+        judgments = _local_frame(spark, _JUDGMENTS_SCHEMA)
         for qid, terms in per_query:
             if not terms:
                 continue
