@@ -594,6 +594,34 @@ def test_t_test_matches_scipy_formula(reader, docs, hits_map):
     assert row["mean_b"] == round(mb, 4)
 
 
+def test_t_test_stable_on_shifted_values(spark):
+    """Values ~1e9 with unit-scale noise: Σx² − (Σx)²/n loses the
+    whole spread to rounding, so the statistic must come from
+    centered moments to match numpy's Welch t."""
+    import numpy as np
+    import pandas as pd
+
+    from tlhop_library_spark.index.query import t_test_agg_hits
+
+    rng = np.random.default_rng(7)
+    va = 1e9 + rng.normal(0.0, 1.0, 40)
+    vb = 1e9 + rng.normal(0.6, 1.5, 40)
+    pdf = pd.DataFrame(
+        {
+            "doc_id": np.arange(80, dtype=np.int64),
+            "v": np.concatenate([va, vb]),
+            "g": [True] * 40 + [False] * 40,
+        }
+    )
+    docs = spark.createDataFrame(pdf)
+    row = t_test_agg_hits(docs.select("doc_id"), docs, "v", "g").collect()[0]
+    t = (va.mean() - vb.mean()) / np.sqrt(
+        va.var(ddof=1) / 40 + vb.var(ddof=1) / 40
+    )
+    assert (row["n_a"], row["n_b"]) == (40, 40)
+    assert abs(row["t_stat"] - t) < 5e-4, (row["t_stat"], t)
+
+
 def test_round5_metric_aggs_federated(
     spark, corpus_df, docs, reader, tmp_path_factory
 ):

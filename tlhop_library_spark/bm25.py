@@ -33,10 +33,6 @@ def idf(n_docs: int, df: int) -> float:
     return math.log(1.0 + (n_docs - df + 0.5) / (df + 0.5))
 
 
-def idf_np(n_docs: int, df: np.ndarray) -> np.ndarray:
-    return np.log1p((n_docs - df + 0.5) / (df + 0.5))
-
-
 def tf_weight_np(tf: np.ndarray, dl: np.ndarray, avgdl: float) -> np.ndarray:
     """float64 per-posting weight w(t,d); idf excluded (query-time factor)."""
     tf = tf.astype(np.float64)
@@ -47,10 +43,3 @@ def tf_weight_np(tf: np.ndarray, dl: np.ndarray, avgdl: float) -> np.ndarray:
 def idf_sql(n_expr: str, df_expr: str) -> str:
     """ANSI/DuckDB SQL fragment for idf."""
     return f"ln(1 + ({n_expr} - {df_expr} + 0.5) / ({df_expr} + 0.5))"
-
-
-def tf_weight_sql(tf_expr: str, dl_expr: str, avgdl_expr: str) -> str:
-    return (
-        f"({tf_expr} * ({K1} + 1)) / "
-        f"({tf_expr} + {K1} * (1 - {B} + {B} * ({dl_expr} / {avgdl_expr})))"
-    )

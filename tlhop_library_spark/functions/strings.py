@@ -8,8 +8,6 @@ pandas_udf — never row-at-a-time Python.
 
 from __future__ import annotations
 
-import unicodedata
-
 import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
@@ -131,11 +129,6 @@ def check_unicode_symbols(s: pd.Series) -> pd.Series:
         return "".join(bad) if bad else None
 
     return s.map(probe)
-
-
-def nfkd_names(s: str) -> list[str]:
-    """Helper mirroring unicodedata naming for tests."""
-    return [unicodedata.name(c, "?") for c in s]
 
 
 def ip_to_subnet24(ip: Column) -> Column:

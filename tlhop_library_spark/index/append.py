@@ -51,20 +51,19 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from tlhop_library_spark.analyzer import tokens_col
-from tlhop_library_spark.index.build import IndexBuilder
+from tlhop_library_spark.index.build import DOCLEN_DDL, NAMES_DDL, IndexBuilder
 
 
 def read_doc_lengths(spark: SparkSession, index_dir: str) -> DataFrame:
     """(doc_id, dl) across the base build and every appended batch."""
-    base = spark.read.parquet(os.path.join(index_dir, "doc_lengths"))
+    read = spark.read.schema(DOCLEN_DDL)
+    base = read.parquet(os.path.join(index_dir, "doc_lengths"))
     batches_dir = os.path.join(index_dir, "doc_lengths_batches")
     if os.path.isdir(batches_dir):
         for name in sorted(os.listdir(batches_dir)):
             sub = os.path.join(batches_dir, name)
             if os.path.isdir(sub):
-                base = base.unionByName(
-                    spark.read.parquet(sub).select("doc_id", "dl")
-                )
+                base = base.unionByName(read.parquet(sub))
     return base
 
 
@@ -186,7 +185,7 @@ def add_documents(
     #    64-bit-hash collision check over the UNION
     names_path = builder.names_path
     new_names = exploded.select("tid", "term").distinct()
-    old_names = spark.read.parquet(names_path)
+    old_names = spark.read.schema(NAMES_DDL).parquet(names_path)
     tmp = names_path + ".tmp"
     old_names.unionByName(new_names).distinct().write.mode(
         "overwrite"
@@ -196,7 +195,7 @@ def add_documents(
     os.rename(names_path, old)
     os.rename(tmp, names_path)
     shutil.rmtree(old, ignore_errors=True)
-    names_back = spark.read.parquet(names_path)
+    names_back = spark.read.schema(NAMES_DDL).parquet(names_path)
     collisions = (
         names_back.groupBy("tid")
         .agg(F.countDistinct("term").alias("n"))
@@ -212,11 +211,12 @@ def add_documents(
     # 5. dictionary re-derived over ALL segments (vocabulary-sized job;
     #    df/cf per term now cover old + new postings)
     seg_stats = (
-        spark.read.parquet(builder.segments_path)
+        spark.read.schema(builder._segment_schema)
+        .parquet(builder.segments_path)
         .groupBy("tid", "bucket")
         .agg(F.sum("n_postings").alias("df"), F.sum("sum_tf").alias("cf"))
     )
-    names = spark.read.parquet(names_path).select("tid", "term")
+    names = spark.read.schema(NAMES_DDL).parquet(names_path)
     seg_stats.join(names, "tid").write.mode("overwrite").parquet(
         builder.dict_path
     )

@@ -45,6 +45,8 @@ from pyspark.sql import functions as F
 from tlhop_library_spark import bm25
 from tlhop_library_spark.index.append import read_doc_lengths
 from tlhop_library_spark.index.build import (
+    DOCLEN_DDL,
+    NAMES_DDL,
     POS_SEGMENT_SCHEMA,
     SEGMENT_SCHEMA,
     IndexBuilder,
@@ -182,7 +184,9 @@ def expunge_deletes(
         dl = dl.join(F.broadcast(tomb), "doc_id", "left_anti")
     os.makedirs(out_dir, exist_ok=True)
     dl.write.mode("overwrite").parquet(os.path.join(out_dir, "doc_lengths"))
-    row = spark.read.parquet(os.path.join(out_dir, "doc_lengths")).agg(
+    row = spark.read.schema(DOCLEN_DDL).parquet(
+        os.path.join(out_dir, "doc_lengths")
+    ).agg(
         F.count("*").alias("n"),
         F.sum("dl").alias("sum_dl"),
         F.max("doc_id").alias("max_doc"),
@@ -253,7 +257,8 @@ def expunge_deletes(
                 yield pd.DataFrame(out)
 
     seg = (
-        spark.read.parquet(os.path.join(index_dir, "segments"))
+        spark.read.schema(schema)
+        .parquet(os.path.join(index_dir, "segments"))
         .select(*[f.name for f in schema.fields])
         .mapInPandas(rewrite, schema=schema)
         .sortWithinPartitions("tid")
@@ -268,13 +273,14 @@ def expunge_deletes(
         os.path.join(out_dir, "term_names"),
     )
     seg_stats = (
-        spark.read.parquet(os.path.join(out_dir, "segments"))
+        spark.read.schema(schema)
+        .parquet(os.path.join(out_dir, "segments"))
         .groupBy("tid", "bucket")
         .agg(F.sum("n_postings").alias("df"), F.sum("sum_tf").alias("cf"))
     )
-    names = spark.read.parquet(
+    names = spark.read.schema(NAMES_DDL).parquet(
         os.path.join(out_dir, "term_names")
-    ).select("tid", "term")
+    )
     seg_stats.join(names, "tid").write.mode("overwrite").parquet(
         os.path.join(out_dir, "dictionary")
     )

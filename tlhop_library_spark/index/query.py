@@ -35,6 +35,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.classic.dataframe import DataFrame as ClassicDataFrame
 from pyspark.sql.types import (
     DoubleType,
     IntegerType,
@@ -42,6 +43,7 @@ from pyspark.sql.types import (
     StringType,
     StructField,
     StructType,
+    _create_row,
 )
 from pyspark.sql.window import Window
 
@@ -98,20 +100,80 @@ _SIG_TERMS_SCHEMA = StructType(
 )
 
 
+class _LocalAnswer(ClassicDataFrame):
+    """The DataFrame :func:`_local_frame` returns: a driver-held
+    ``pyarrow.Table`` whose JVM relation is built on first ``_jdf``
+    read."""
+
+    def __new__(cls, *args):
+        # the classic __new__ would run __init__ with (jdf, session)
+        return object.__new__(cls)
+
+    def __init__(self, spark: SparkSession, schema: StructType, table):
+        self._session = spark
+        self._sc = spark._sc
+        self.is_cached = False
+        self._support_repr_html = False
+        self._answer_schema = schema
+        self._table = table
+        self._built = None
+
+    @property
+    def _jdf(self):
+        if self._built is None:
+            try:
+                self._built = self._session.createDataFrame(
+                    self._table, self._answer_schema
+                )._jdf
+            except AttributeError as e:
+                # an AttributeError out of a property falls through to
+                # DataFrame.__getattr__, which would hide it
+                raise RuntimeError(f"building the local relation: {e}") from e
+        return self._built
+
+    @property
+    def schema(self) -> StructType:
+        return self._answer_schema
+
+    def collect(self) -> list:
+        names = self._answer_schema.names
+        cols = [c.to_pylist() for c in self._table.columns]
+        return [_create_row(names, vals) for vals in zip(*cols)]
+
+    def count(self) -> int:
+        return self._table.num_rows
+
+    def toArrow(self):
+        return self._table
+
+
+@functools.lru_cache(maxsize=None)
+def _arrow_schema(schema: StructType):
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    return to_arrow_schema(schema)
+
+
 def _local_frame(
     spark: SparkSession, schema: StructType, columns: list | None = None
 ) -> DataFrame:
     """Driver-held ``columns`` (one array per ``schema`` field; none →
-    zero rows) as a DataFrame over an Arrow local relation. ``collect``
-    on it starts no Spark job, and the optimizer sees an empty one is
-    empty, so a plan over a zero-match hit stream collapses to an empty
-    local scan instead of shuffling the other side of its joins.
-    ``createDataFrame([], ddl)`` is an RDD scan of unknown size: ~70
-    Py4J round trips to build and a real Spark job to collect."""
-    import pyarrow as pa
-    from pyspark.sql.pandas.types import to_arrow_schema
+    zero rows) as a DataFrame over an Arrow table kept on the driver.
 
-    arrow = to_arrow_schema(schema)
+    ``collect``, ``count``, ``schema`` and ``toArrow`` answer from the
+    table: no Py4J call, no Spark job. Every other call (``where``,
+    ``join``, ``select``, ``orderBy``, ``toPandas``, ``write``,
+    ``_jdf``...) first builds the Arrow local relation, once per
+    answer. The optimizer sees an empty one is empty, so a plan over a
+    zero-match hit stream collapses to an empty local scan instead of
+    shuffling the other side of its joins. ``createDataFrame([], ddl)``
+    is an RDD scan of unknown size: ~70 Py4J round trips to build and a
+    real Spark job to collect. Answer schemas hold only int, long,
+    double and string fields, which ``to_pylist`` turns into the same
+    Python values Spark's ``collect`` gives."""
+    import pyarrow as pa
+
+    arrow = _arrow_schema(schema)
     if columns is None:
         table = arrow.empty_table()
     else:
@@ -119,7 +181,7 @@ def _local_frame(
             [pa.array(c, type=f.type) for c, f in zip(columns, arrow)],
             schema=arrow,
         )
-    return spark.createDataFrame(table, schema)
+    return _LocalAnswer(spark, schema, table)
 
 
 def _merge_topk(parts: list, k: int) -> tuple[np.ndarray, np.ndarray]:
@@ -1603,9 +1665,10 @@ def t_test_agg_hits(
 
     Deviation from ES, documented: ES renders a p-value (Student-t
     CDF), which is not reproducible in portable SQL; the statistic
-    itself is exact order-independent arithmetic (Σ, Σ², n per
-    group in ONE aggregation pass), and a client converts it to a
-    p-value with any t-distribution table. NULL field or NULL group
+    itself comes from one aggregation pass (n, mean and ``var_samp``
+    per group: centered moments, so values far from zero keep their
+    spread, where Σx² − (Σx)²/n cancels), and a client converts it to
+    a p-value with any t-distribution table. NULL field or NULL group
     rows are ignored."""
     v = F.col(field).cast("double")
     g = F.col(group_field).cast("boolean")
@@ -1614,22 +1677,18 @@ def t_test_agg_hits(
         .where(v.isNotNull() & g.isNotNull())
         .select(v.alias("v"), g.alias("g"))
     )
+    a = F.when(F.col("g"), F.col("v"))
+    b = F.when(~F.col("g"), F.col("v"))
     agg = j.agg(
         F.count_if(F.col("g")).cast("long").alias("n_a"),
         F.count_if(~F.col("g")).cast("long").alias("n_b"),
-        F.sum(F.when(F.col("g"), F.col("v"))).alias("s_a"),
-        F.sum(F.when(~F.col("g"), F.col("v"))).alias("s_b"),
-        F.sum(F.when(F.col("g"), F.col("v") * F.col("v"))).alias("ss_a"),
-        F.sum(F.when(~F.col("g"), F.col("v") * F.col("v"))).alias("ss_b"),
+        F.avg(a).alias("mean_a"),
+        F.avg(b).alias("mean_b"),
+        F.var_samp(a).alias("var_a"),
+        F.var_samp(b).alias("var_b"),
     )
-    mean_a = F.col("s_a") / F.col("n_a")
-    mean_b = F.col("s_b") / F.col("n_b")
-    var_a = (F.col("ss_a") - F.col("s_a") * F.col("s_a") / F.col("n_a")) / (
-        F.col("n_a") - 1
-    )
-    var_b = (F.col("ss_b") - F.col("s_b") * F.col("s_b") / F.col("n_b")) / (
-        F.col("n_b") - 1
-    )
+    mean_a, mean_b = F.col("mean_a"), F.col("mean_b")
+    var_a, var_b = F.col("var_a"), F.col("var_b")
     denom = F.sqrt(var_a / F.col("n_a") + var_b / F.col("n_b"))
     return agg.select(
         F.round((mean_a - mean_b) / denom, 4).alias("t_stat"),
@@ -5238,7 +5297,7 @@ class IndexReader(HitStreamModes):
 
     def _merge_local_topk(self, parts: list, k: int) -> DataFrame:
         """Merge per-range kernel outputs exactly like the distributed
-        ranked_topk into a (rank, doc_id, score) local relation."""
+        ranked_topk into a (rank, doc_id, score) local answer."""
         d, r = _merge_topk(parts, k)
         rank = np.arange(1, len(d) + 1, dtype=np.int32)
         return _local_frame(self.spark, _RANKED_SCHEMA, [rank, d, r])
@@ -5371,10 +5430,15 @@ class IndexReader(HitStreamModes):
         terms (tens of MB) correctly fall back. The round-4 64 MB
         default routed 41 MB stopword queries local at 5-6 s.
 
-        A driver-served answer — the driver route, and every query
-        with no dictionary term — comes back as an Arrow local
-        relation: collecting it starts no Spark job, zero matches
-        included."""
+        A driver-served answer (the driver route, and every query with
+        no dictionary term) is a DataFrame over an Arrow table held on
+        the driver. ``collect()``, ``count()``, ``schema`` and
+        ``toArrow()`` stay on the driver: no Py4J call, no Spark job,
+        zero matches included. Any other DataFrame call (``where``,
+        ``join``, ``orderBy``, ``toPandas``, ``write``...) first builds
+        the answer's Arrow local relation in the JVM, once, and then
+        behaves as on any DataFrame. The distributed route returns an
+        ordinary Spark-computed frame."""
         terms = sorted(set(py_tokens(query_text)))
         info = self.lookup_terms(terms)
         if not info:

@@ -208,27 +208,6 @@ def minhash_table(
     return sh.groupBy("doc_id").agg(*aggs)
 
 
-def minhash_signatures(
-    docs: DataFrame, n: int = 3, max_shingle_df: int | str | None = None
-) -> DataFrame:
-    """(doc_id, sig_i, min_hash) — long-format view of minhash_table
-    (unpivoted AFTER the aggregation, so the explosion never shuffles).
-    """
-    wide = minhash_table(docs, n, max_shingle_df)
-    s = F.explode(
-        F.array(
-            *[
-                F.struct(
-                    F.lit(i).alias("sig_i"),
-                    F.col(f"h{i}").alias("min_hash"),
-                )
-                for i in range(MINHASH_PERMS)
-            ]
-        )
-    ).alias("s")
-    return wide.select("doc_id", s).select("doc_id", "s.sig_i", "s.min_hash")
-
-
 def minhash_lsh_candidates(
     docs: DataFrame, n: int = 3, max_shingle_df: int | str | None = None
 ) -> DataFrame:

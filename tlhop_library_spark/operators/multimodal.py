@@ -232,28 +232,6 @@ def resize_images(
     )
 
 
-def frame_sample_plan(media: DataFrame, every_ms: int = 1000) -> DataFrame:
-    """Video frame-sampling *plan*: one row per (media_id, frame_ts).
-
-    The expensive decode stays in extract_features; this derives the
-    sampling grid JVM-side so the shuffle/explode cost is visible to
-    Catalyst and the decoder only sees the frames it must touch.
-    """
-    return (
-        media.where(F.col("kind") == "video")
-        .select(
-            "media_id",
-            F.explode(
-                F.sequence(
-                    F.lit(0),
-                    F.greatest(F.col("duration_ms") - 1, F.lit(0)),
-                    F.lit(every_ms),
-                )
-            ).alias("frame_ts_ms"),
-        )
-    )
-
-
 def synth_bmp_media(docs: DataFrame, limit: int = 200) -> DataFrame:
     """Deterministic BMP payloads derived from ``doc_id`` — the
     multimodal gate's input generator. Each doc with ``doc_id <

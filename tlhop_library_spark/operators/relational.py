@@ -156,40 +156,6 @@ def null_profile(df: DataFrame) -> DataFrame:
     return df.agg(*aggs)
 
 
-def explode_join_regroup(
-    fact: DataFrame,
-    array_col: str,
-    dim: DataFrame,
-    dim_key: str,
-    group_key: str,
-) -> DataFrame:
-    """J2 — explode array → equi-join dim → regroup with sorted
-    collect_list (ref /root/reference/tlhop/algorithms/
-    vulnerability_assessment.py:144-152). Sorted re-nest keeps the
-    result deterministic (the reference's collect_list is not)."""
-    exploded = fact.select(
-        group_key, F.explode(array_col).alias(dim_key)
-    )
-    joined = exploded.join(dim, dim_key, "inner")
-    other = [c for c in dim.columns if c != dim_key]
-    return joined.groupBy(group_key).agg(
-        F.sort_array(F.collect_list(dim_key)).alias("matched_keys"),
-        F.count("*").alias("n_matches"),
-        *[F.sum(c).alias(f"sum_{c}") for c in other if c != dim_key],
-    )
-
-
-def efficient_join(
-    big: DataFrame, small: DataFrame, keys: list[str]
-) -> DataFrame:
-    """J5 — the reference hand-rolls dynamic partition pruning by
-    collecting small-side keys into an isin filter
-    (/root/reference/tlhop/shodan_library.py:375-396). Spark does this
-    natively (DPP/AQE) when the join is declared plainly + the small
-    side is broadcast — so the idiomatic form IS the optimization."""
-    return big.join(F.broadcast(small), keys, "inner")
-
-
 def range_join(
     facts: DataFrame,
     ranges: DataFrame,

@@ -18,7 +18,7 @@ from __future__ import annotations
 import json
 import os
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import DataType, StructType
 
@@ -88,7 +88,3 @@ class SchemaRegistry:
         ).schema["x"].dataType
         self.register(name or column, parsed)
         return parsed
-
-
-def json_struct_col(col: Column, schema: DataType) -> Column:
-    return F.from_json(col, schema)

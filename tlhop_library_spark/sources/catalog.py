@@ -169,8 +169,3 @@ def read_avro(spark: SparkSession, path: str) -> DataFrame:
     return (
         spark.read.format("avro").option("mode", "PERMISSIVE").load(path)
     )
-
-
-def from_pandas(spark: SparkSession, pdf) -> DataFrame:
-    """S7 — Arrow-accelerated pandas bridge (ref datasets.py:387)."""
-    return spark.createDataFrame(pdf)

@@ -19,7 +19,7 @@ import datetime as dt
 from typing import Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (
@@ -189,12 +189,3 @@ def sessionize_batch(events: DataFrame, gap_minutes: int = 30) -> DataFrame:
         F.count("*").cast("int").alias("n_events"),
         F.round(F.sum("value"), 4).alias("total_value"),
     )
-
-
-def stream_events_from_directory(
-    spark: SparkSession, path: str, schema: StructType
-) -> DataFrame:
-    """File-source stream: new parquet/json files under `path` become
-    micro-batches (the incremental-ingest analogue of the reference's
-    crawler resume loops, rdap.py:168-185)."""
-    return spark.readStream.schema(schema).parquet(path)
