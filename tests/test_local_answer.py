@@ -196,3 +196,26 @@ def test_failed_relation_build_is_not_masked(spark, monkeypatch):
     with pytest.raises(RuntimeError, match="no relation"):
         df.where("rank = 1")
     assert df.collect() == [] and df.count() == 0
+
+
+def test_take_head_first_stay_on_the_driver(spark, reader):
+    """``take`` slices the held table (``head`` and ``first`` call it):
+    the rows equal ``collect()[:n]`` and no JVM relation or Spark job
+    is made."""
+    sc = spark.sparkContext
+    for query in ("bace cada", "zzznope"):
+        df = reader.search_serve(query, 10)
+        rows = df.collect()
+        group = f"local-take-{query}"
+        sc.setJobGroup(group, group)
+        try:
+            for n in (0, 1, 3, 100):
+                assert df.take(n) == rows[:n], (query, n)
+            assert df.head(2) == rows[:2]
+            assert df.head() == (rows[0] if rows else None)
+            assert df.first() == (rows[0] if rows else None)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        assert sc.statusTracker().getJobIdsForGroup(group) == [], query
+        assert df._built is None, query

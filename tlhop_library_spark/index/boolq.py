@@ -47,6 +47,12 @@ import pandas as pd
 
 from tlhop_library_spark import bm25
 from tlhop_library_spark.analyzer import py_tokens
+from tlhop_library_spark.index.postings import (
+    empty_scores,
+    term_postings,
+    topk_frame,
+)
+from tlhop_library_spark.operators.relational import ranked_topk
 
 # ---------------------------------------------------------------------
 # parsing
@@ -228,6 +234,7 @@ def boolean_range_scorer(
     nnf_tid,
     pos_tids: list[int],
     idf_map: dict[int, float],
+    avgdl: float,
     k: int,
     deleted: "np.ndarray | None" = None,
 ):
@@ -236,37 +243,18 @@ def boolean_range_scorer(
     presence masks over the sorted union of the positive terms' docs,
     evaluate the NNF tree, BM25-score the matches over the positive
     terms, and emit the local top-k."""
-    from tlhop_library_spark.index.delete import mask_deleted
-    from tlhop_library_spark.index.phrase import decode_chunk
-
     pos_set = set(pos_tids)
 
     def score_range(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        empty = pd.DataFrame({"doc_id": [], "score": []}).astype(
-            {"doc_id": "int64", "score": "float64"}
-        )
-        avgdl = float(pdf["avgdl"].iloc[0])
-        parts: dict[int, list] = {}
-        for ri in range(len(pdf)):
-            row = pdf.iloc[ri]
-            docs_, tfs_, dls_ = decode_chunk(row)
-            if deleted is not None and deleted.size:
-                docs_, tfs_, dls_, _ = mask_deleted(docs_, tfs_, dls_, deleted)
-            parts.setdefault(int(row["tid"]), []).append((docs_, tfs_, dls_))
-        per_term: dict[int, tuple] = {}
-        for tid, chunks in parts.items():
-            chunks.sort(key=lambda c: int(c[0][0]) if len(c[0]) else 0)
-            per_term[tid] = tuple(
-                np.concatenate([c[i] for c in chunks]) for i in range(3)
-            )
+        per_term = term_postings(pdf, deleted)
         pos_docs = [
             per_term[t][0] for t in pos_tids if t in per_term
         ]
         if not pos_docs:
-            return empty
+            return empty_scores()
         universe = np.unique(np.concatenate(pos_docs))
         if universe.size == 0:
-            return empty
+            return empty_scores()
         scores = np.zeros(universe.size, dtype=np.float64)
         masks: dict[int, np.ndarray] = {}
         for tid, (docs_, tfs_, dls_) in per_term.items():
@@ -284,14 +272,7 @@ def boolean_range_scorer(
                 )
                 scores[iv] += w  # docs unique per (term, range)
         match = _eval_mask(nnf_tid, masks, universe.size)
-        if not match.any():
-            return empty
-        doc_arr = universe[match]
-        r = np.round(scores[match], bm25.ROUND_DIGITS)
-        order = np.lexsort((doc_arr, -r))[:k]
-        return pd.DataFrame(
-            {"doc_id": doc_arr[order].astype(np.int64), "score": r[order]}
-        )
+        return topk_frame(universe[match], scores[match], k)
 
     return score_range
 
@@ -309,8 +290,6 @@ def boolean_exhaustive(docs, query_text: str, k: int = 10,
 
     from tlhop_library_spark.analyzer import tokens_col
     from tlhop_library_spark.index.query import _RANKED_SCHEMA, _local_frame
-    from tlhop_library_spark.operators.relational import ranked_topk
-
     nnf, all_terms, pos_terms = compile_query(query_text)
     if not pos_terms:
         return _local_frame(docs.sparkSession, _RANKED_SCHEMA)

@@ -131,6 +131,8 @@ POS_SEGMENT_SCHEMA = StructType(
 #: known schema skips the footer-reading Spark job of schema inference
 DOCLEN_DDL = "doc_id long, dl int"
 NAMES_DDL = "tid long, term string"
+#: the dictionary: per-(tid, bucket) segment stats joined with the names
+DICT_DDL = "tid long, bucket int, df long, cf long, term string"
 
 
 def _encode_one(tid, bucket, range_id, doc_ids, tfs, dls, w,

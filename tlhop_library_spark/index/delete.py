@@ -52,6 +52,7 @@ from tlhop_library_spark.index.build import (
     IndexBuilder,
     _encode_one,
 )
+from tlhop_library_spark.index.postings import iter_chunks
 
 
 def delete_documents(
@@ -128,20 +129,6 @@ def load_tombstones(index_dir: str) -> np.ndarray | None:
     return np.unique(arr.astype(np.int64))
 
 
-def mask_deleted(docs, tfs, dls, deleted, positions=None):
-    """Drop tombstoned postings from one decoded chunk/block.
-    ``positions`` (instance-level, len = sum(tfs)) is filtered
-    per-posting when given. Returns the filtered arrays (positions
-    last, or None)."""
-    keep = ~np.isin(docs, deleted)
-    if keep.all():
-        return docs, tfs, dls, positions
-    if positions is not None:
-        inst_keep = np.repeat(keep, tfs.astype(np.int64))
-        positions = positions[inst_keep]
-    return docs[keep], tfs[keep], dls[keep], positions
-
-
 def expunge_deletes(
     spark: SparkSession, index_dir: str, out_dir: str
 ) -> dict:
@@ -196,34 +183,20 @@ def expunge_deletes(
     max_doc = int(row["max_doc"] or 0)
     avgdl = float(sum_dl) / n_docs if n_docs else 0.0
 
-    from tlhop_library_spark.index.phrase import (
-        decode_chunk,
-        decode_chunk_positions,
-    )
-
-    del_arr = deleted if deleted is not None else np.empty(0, np.int64)
-
     def rewrite(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
+            bucket = pdf["bucket"].to_numpy()
+            range_id = pdf["range_id"].to_numpy()
             out = []
-            for _, r in pdf.iterrows():
-                docs, tfs, dls = decode_chunk(r)
-                pos = (
-                    decode_chunk_positions(r, tfs) if positions else None
-                )
-                docs, tfs, dls, pos = mask_deleted(
-                    docs, tfs, dls, del_arr, pos
-                )
+            for i, (tid, docs, tfs, dls, *pos) in enumerate(
+                iter_chunks(pdf, deleted)
+            ):
                 if len(docs) == 0:
                     continue
-                w = bm25.tf_weight_np(
-                    tfs.astype(np.uint64),
-                    dls.astype(np.uint64),
-                    avgdl,
-                )
                 pos_gaps = None
-                if positions:
-                    p = pos.astype(np.uint64)
+                if pos:
+                    # position deltas restart at every posting
+                    p = pos[0].astype(np.uint64)
                     pos_gaps = np.empty_like(p)
                     if p.size:
                         pos_gaps[0] = p[0]
@@ -232,27 +205,19 @@ def expunge_deletes(
                             ([0], np.cumsum(tfs.astype(np.int64))[:-1])
                         )
                         pos_gaps[starts] = p[starts]
-                    out.append(
-                        _encode_one(
-                            int(r["tid"]), int(r["bucket"]),
-                            int(r["range_id"]),
-                            docs.astype(np.uint64),
-                            tfs.astype(np.uint64),
-                            dls.astype(np.uint64),
-                            w, pos_gaps=pos_gaps,
-                        )
+                out.append(
+                    _encode_one(
+                        tid, int(bucket[i]), int(range_id[i]),
+                        docs.astype(np.uint64),
+                        tfs.astype(np.uint64),
+                        dls.astype(np.uint64),
+                        bm25.tf_weight_np(
+                            tfs.astype(np.uint64), dls.astype(np.uint64),
+                            avgdl,
+                        ),
+                        pos_gaps=pos_gaps,
                     )
-                else:
-                    out.append(
-                        _encode_one(
-                            int(r["tid"]), int(r["bucket"]),
-                            int(r["range_id"]),
-                            docs.astype(np.uint64),
-                            tfs.astype(np.uint64),
-                            dls.astype(np.uint64),
-                            w,
-                        )
-                    )
+                )
             if out:
                 yield pd.DataFrame(out)
 

@@ -40,6 +40,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from tlhop_library_spark import bm25
+from tlhop_library_spark.index.build import (
+    DICT_DDL,
+    POS_SEGMENT_SCHEMA,
+    SEGMENT_SCHEMA,
+)
+from tlhop_library_spark.index.postings import decode_chunk
 
 __all__ = ["verify_index", "IndexCorruption"]
 
@@ -57,8 +63,6 @@ _CHUNK_SCHEMA = (
 
 def _chunk_auditor(range_size: int, avgdl: float, bound_scale: float,
                    positions: bool):
-    from tlhop_library_spark.index.phrase import decode_chunk
-
     def audit(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             out = {k: [] for k in (
@@ -66,27 +70,31 @@ def _chunk_auditor(range_size: int, avgdl: float, bound_scale: float,
                 "n_bytes", "ok_decode", "ok_blocks", "ok_range",
                 "ok_bounds",
             )}
-            for ri in range(len(pdf)):
-                row = pdf.iloc[ri]
-                n_meta = int(row["n_postings"])
+            # chunk by chunk, not through the batched chunk reader: a
+            # corrupt chunk must fail its own checks, never shift the
+            # decode of the chunks after it
+            for row in pdf.itertuples(index=False):
+                n_meta = int(row.n_postings)
                 nbytes = (
-                    len(row["doc_bytes"]) + len(row["tf_bytes"])
-                    + len(row["dl_bytes"])
-                    + (len(row["pos_bytes"]) if positions else 0)
+                    len(row.doc_bytes) + len(row.tf_bytes)
+                    + len(row.dl_bytes)
+                    + (len(row.pos_bytes) if positions else 0)
                 )
                 ok_dec = ok_blk = ok_rng = ok_bnd = False
                 n_dec = 0
                 try:
-                    docs, tfs, dls = decode_chunk(row)
+                    cnts = np.asarray(row.block_counts, dtype=np.int64)
+                    docs, tfs, dls = decode_chunk(
+                        row.doc_bytes, row.tf_bytes, row.dl_bytes, cnts
+                    )
                     n_dec = int(len(docs))
                     ok_dec = (
                         n_dec == n_meta
                         and bool(np.all(np.diff(docs) > 0))
-                        and int(docs[0]) == int(row["first_doc"])
-                        and int(docs[-1]) == int(row["last_doc"])
+                        and int(docs[0]) == int(row.first_doc)
+                        and int(docs[-1]) == int(row.last_doc)
                         and bool(np.all((tfs >= 1) & (tfs <= dls)))
                     )
-                    cnts = np.asarray(row["block_counts"], dtype=np.int64)
                     ends = np.cumsum(cnts)
                     starts = ends - cnts
                     ok_blk = (
@@ -94,29 +102,29 @@ def _chunk_auditor(range_size: int, avgdl: float, bound_scale: float,
                         and bool(np.all(cnts > 0))
                         and bool(np.array_equal(
                             docs[starts],
-                            np.asarray(row["block_first_docs"],
+                            np.asarray(row.block_first_docs,
                                        dtype=np.int64)))
                         and bool(np.array_equal(
                             docs[ends - 1],
-                            np.asarray(row["block_last_docs"],
+                            np.asarray(row.block_last_docs,
                                        dtype=np.int64)))
                     )
                     ok_rng = bool(
-                        np.all(docs // range_size == int(row["range_id"]))
+                        np.all(docs // range_size == int(row.range_id))
                     )
                     w = bm25.tf_weight_np(
                         tfs.astype(np.float64), dls.astype(np.float64),
                         avgdl,
                     )
-                    bmax = np.asarray(row["block_max_w"], dtype=np.float64)
+                    bmax = np.asarray(row.block_max_w, dtype=np.float64)
                     lim = np.repeat(bmax, cnts) * bound_scale + 1e-9
                     ok_bnd = bool(np.all(w <= lim)) and float(
-                        row["max_w"]
+                        row.max_w
                     ) + 1e-9 >= float(bmax.max())
                 except Exception:
                     pass
-                out["tid"].append(int(row["tid"]))
-                out["segment_group"].append(str(row["segment_group"]))
+                out["tid"].append(int(row.tid))
+                out["segment_group"].append(str(row.segment_group))
                 out["n_postings"].append(n_meta)
                 out["n_decoded"].append(n_dec)
                 out["n_bytes"].append(int(nbytes))
@@ -141,7 +149,9 @@ def verify_index(
     enc = float(stats.get("min_encode_avgdl", avgdl) or avgdl)
     bound_scale = max(1.0, avgdl / enc) if enc > 0 else 1.0
 
-    seg = spark.read.parquet(os.path.join(index_dir, "segments"))
+    seg = spark.read.schema(
+        POS_SEGMENT_SCHEMA if positions else SEGMENT_SCHEMA
+    ).parquet(os.path.join(index_dir, "segments"))
     cols = [
         "tid", "range_id", "n_postings", "first_doc", "last_doc",
         "doc_bytes", "tf_bytes", "dl_bytes", "block_counts",
@@ -182,7 +192,7 @@ def verify_index(
         per_tid = audited.groupBy("tid").agg(
             F.sum("n_decoded").alias("n_dec")
         )
-        dic = spark.read.parquet(
+        dic = spark.read.schema(DICT_DDL).parquet(
             os.path.join(index_dir, "dictionary")
         ).select("tid", "df")
         joined = per_tid.join(dic, "tid", "full_outer")

@@ -51,7 +51,9 @@ def merge_index_ranges(
 
     # drop the bucket_group partition column: the rewrite goes into a
     # single group dir and the kernel's schema is the segment schema exactly
-    seg = spark.read.parquet(os.path.join(index_dir, "segments")).select(
+    seg = spark.read.schema(schema).parquet(
+        os.path.join(index_dir, "segments")
+    ).select(
         *[f.name for f in schema.fields]
     )
 

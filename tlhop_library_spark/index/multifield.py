@@ -43,12 +43,20 @@ from pyspark.sql import functions as F
 
 from tlhop_library_spark import bm25
 from tlhop_library_spark.analyzer import py_tokens
+from tlhop_library_spark.index.postings import (
+    empty_scores,
+    iter_chunks,
+    sum_by_doc,
+    topk_frame,
+)
 from tlhop_library_spark.index.query import (
     SEGMENT_SCHEMA,
     _RANKED_SCHEMA,
     _SCORE_SCHEMA,
     IndexReader,
     _local_frame,
+    _rank,
+    _ranges_apply,
 )
 
 __all__ = [
@@ -71,56 +79,28 @@ def _multifield_range_scorer(params: dict[int, tuple], k: int):
             parts_d.append(docs_)
             parts_s.append(w)
         if not parts_d:
-            return _EMPTY_SCORES.copy()
-        alldocs = np.concatenate(parts_d)
-        allsc = np.concatenate(parts_s)
-        uniq, inv = np.unique(alldocs, return_inverse=True)
-        sums = np.zeros(len(uniq), dtype=np.float64)
-        np.add.at(sums, inv, allsc)
-        r = np.round(sums, bm25.ROUND_DIGITS)
-        order = np.lexsort((uniq, -r))[:k]
-        return pd.DataFrame(
-            {"doc_id": uniq[order].astype(np.int64), "score": r[order]}
+            return empty_scores()
+        uniq, sums, _ = sum_by_doc(
+            np.concatenate(parts_d), np.concatenate(parts_s)
         )
+        return topk_frame(uniq, sums, k)
 
     return score_range
 
 
 def _decode_field_rows(pdf: pd.DataFrame, params: dict[int, tuple]):
     """Shared chunk-decode loop: yields (field_id, tid, docs, weights)
-    per surviving chunk, applying the field's idf table, boost and
-    tombstones. ``params``: field_id → (idf_by_tid, avgdl, boost,
-    deleted)."""
-    from tlhop_library_spark.index.phrase import decode_chunk
-
-    for ri in range(len(pdf)):
-        row = pdf.iloc[ri]
-        fid = int(row["field_id"])
-        p = params.get(fid)
+    per chunk, applying the field's idf table, boost and tombstones.
+    ``params``: field_id → (idf_by_tid, avgdl, boost, deleted)."""
+    for fid, rows in pdf.groupby("field_id", sort=False):
+        p = params.get(int(fid))
         if p is None:
             continue
         idf_by_tid, avgdl, boost, deleted = p
-        tid = int(row["tid"])
-        idf = idf_by_tid.get(tid)
-        if idf is None:
-            continue
-        docs_, tfs_, dls_ = decode_chunk(row)
-        if deleted is not None and deleted.size:
-            from tlhop_library_spark.index.delete import mask_deleted
-
-            docs_, tfs_, dls_, _ = mask_deleted(
-                docs_, tfs_, dls_, deleted
+        for tid, docs_, tfs_, dls_ in iter_chunks(rows, deleted, idf_by_tid):
+            yield int(fid), tid, docs_, boost * idf_by_tid[tid] * (
+                bm25.tf_weight_np(tfs_, dls_, avgdl)
             )
-        if not len(docs_):
-            continue
-        yield fid, tid, docs_, boost * idf * bm25.tf_weight_np(
-            tfs_, dls_, avgdl
-        )
-
-
-_EMPTY_SCORES = pd.DataFrame({"doc_id": [], "score": []}).astype(
-    {"doc_id": "int64", "score": "float64"}
-)
 
 
 def _combinedfields_range_scorer(
@@ -140,39 +120,23 @@ def _combinedfields_range_scorer(
     per-field b", SIGIR'20), NOT a sum of per-field scores: a match
     spread across fields saturates ONCE, which is the property the
     per-field modes (most/best/cross) lack."""
-    from tlhop_library_spark.index.phrase import decode_chunk
-
     nt = len(tid_idx) or 1
 
     def score_range(seg_pdf: pd.DataFrame, dl_pdf: pd.DataFrame):
         parts_k, parts_s = [], []
-        for ri in range(len(seg_pdf)):
-            row = seg_pdf.iloc[ri]
-            p = params.get(int(row["field_id"]))
+        for fid, rows in seg_pdf.groupby("field_id", sort=False):
+            p = params.get(int(fid))
             if p is None:
                 continue
             weight, deleted = p
-            j = tid_idx.get(int(row["tid"]))
-            if j is None:
-                continue
-            docs_, tfs_, dls_ = decode_chunk(row)
-            if deleted is not None and deleted.size:
-                from tlhop_library_spark.index.delete import mask_deleted
-
-                docs_, tfs_, dls_, _ = mask_deleted(
-                    docs_, tfs_, dls_, deleted
-                )
-            if not len(docs_):
-                continue
-            parts_k.append(docs_.astype(np.int64) * nt + j)
-            parts_s.append(weight * tfs_.astype(np.float64))
+            for tid, docs_, tfs_, _ in iter_chunks(rows, deleted, tid_idx):
+                parts_k.append(docs_.astype(np.int64) * nt + tid_idx[tid])
+                parts_s.append(weight * tfs_.astype(np.float64))
         if not parts_k or not len(dl_pdf):
-            return _EMPTY_SCORES.copy()
-        keys = np.concatenate(parts_k)
-        vals = np.concatenate(parts_s)
-        uk, inv = np.unique(keys, return_inverse=True)
-        tfc = np.zeros(len(uk))
-        np.add.at(tfc, inv, vals)
+            return empty_scores()
+        uk, tfc, _ = sum_by_doc(
+            np.concatenate(parts_k), np.concatenate(parts_s)
+        )
         # combined doc length lookup for this range's docs
         dl_docs = dl_pdf["doc_id"].to_numpy(np.int64)
         dl_vals = dl_pdf["dl_c"].to_numpy(np.float64)
@@ -190,14 +154,8 @@ def _combinedfields_range_scorer(
         w = idf_arr * tfc * (bm25.K1 + 1) / (
             tfc + bm25.K1 * (1 - bm25.B + bm25.B * dlc / avgdl_c)
         )
-        udocs, dinv = np.unique(docs_of_uk, return_inverse=True)
-        total = np.zeros(len(udocs))
-        np.add.at(total, dinv, w)
-        r = np.round(total, bm25.ROUND_DIGITS)
-        order = np.lexsort((udocs, -r))[:k]
-        return pd.DataFrame(
-            {"doc_id": udocs[order].astype(np.int64), "score": r[order]}
-        )
+        udocs, total, _ = sum_by_doc(docs_of_uk, w)
+        return topk_frame(udocs, total, k)
 
     return score_range
 
@@ -230,18 +188,11 @@ def _bestfields_range_scorer(params: dict[int, tuple], k: int,
             parts_k.append(docs_.astype(np.int64) * nf + fid)
             parts_s.append(w)
         if not parts_k:
-            return _EMPTY_SCORES.copy()
-        keys = np.concatenate(parts_k)
-        vals = np.concatenate(parts_s)
-        uk, inv = np.unique(keys, return_inverse=True)
-        fsum = np.zeros(len(uk))
-        np.add.at(fsum, inv, vals)
-        udocs, v = _dismax_groups(uk // nf, fsum, tie_breaker)
-        r = np.round(v, bm25.ROUND_DIGITS)
-        order = np.lexsort((udocs, -r))[:k]
-        return pd.DataFrame(
-            {"doc_id": udocs[order].astype(np.int64), "score": r[order]}
+            return empty_scores()
+        uk, fsum, _ = sum_by_doc(
+            np.concatenate(parts_k), np.concatenate(parts_s)
         )
+        return topk_frame(*_dismax_groups(uk // nf, fsum, tie_breaker), k)
 
     return score_range
 
@@ -265,18 +216,12 @@ def _crossfields_range_scorer(params: dict[int, tuple],
             parts_k.append(docs_.astype(np.int64) * nt + j)
             parts_s.append(w)
         if not parts_k:
-            return _EMPTY_SCORES.copy()
-        keys = np.concatenate(parts_k)
-        vals = np.concatenate(parts_s)
-        uk, v = _dismax_groups(keys, vals, tie_breaker)
-        udocs, dinv = np.unique(uk // nt, return_inverse=True)
-        total = np.zeros(len(udocs))
-        np.add.at(total, dinv, v)
-        r = np.round(total, bm25.ROUND_DIGITS)
-        order = np.lexsort((udocs, -r))[:k]
-        return pd.DataFrame(
-            {"doc_id": udocs[order].astype(np.int64), "score": r[order]}
+            return empty_scores()
+        uk, v = _dismax_groups(
+            np.concatenate(parts_k), np.concatenate(parts_s), tie_breaker
         )
+        udocs, total, _ = sum_by_doc(uk // nt, v)
+        return topk_frame(udocs, total, k)
 
     return score_range
 
@@ -340,20 +285,6 @@ class MultiFieldIndexReader:
             return None, fields
         return reduce(DataFrame.unionByName, segs), fields
 
-    @staticmethod
-    def _local(union: DataFrame, scorer) -> DataFrame:
-        """Per-range winner rows (doc_id, score), ≤ k per range — the
-        unit the sharded federation unions before its global top-k."""
-        return union.groupBy("range_id").applyInPandas(
-            lambda key, pdf: scorer(key, pdf), schema=_SCORE_SCHEMA
-        )
-
-    def _topk(self, union: DataFrame, scorer, k: int) -> DataFrame:
-        from tlhop_library_spark.operators.relational import ranked_topk
-
-        return ranked_topk(
-            self._local(union, scorer), [F.desc("score"), F.asc("doc_id")], k
-        ).select("rank", "doc_id", "score")
 
     def _empty(self) -> DataFrame:
         return _local_frame(self.spark, _RANKED_SCHEMA)
@@ -384,7 +315,9 @@ class MultiFieldIndexReader:
             params[i] = (
                 idf_by_tid, float(r.stats["avgdl"]), boost, r._deleted,
             )
-        return self._topk(union, _multifield_range_scorer(params, k), k)
+        return _rank(
+            _ranges_apply(union, _multifield_range_scorer(params, k)), k
+        )
 
     def search_best_fields(
         self, query_text: str, k: int = 10,
@@ -418,7 +351,7 @@ class MultiFieldIndexReader:
                 idf_by_tid, float(r.stats["avgdl"]), boost, r._deleted,
             )
         scorer = _bestfields_range_scorer(params, k, float(tie_breaker))
-        return self._topk(union, scorer, k)
+        return _rank(_ranges_apply(union, scorer), k)
 
     def _combined_dl(
         self, weights: dict[str, float]
@@ -534,11 +467,7 @@ class MultiFieldIndexReader:
                 schema=_SCORE_SCHEMA,
             )
         )
-        from tlhop_library_spark.operators.relational import ranked_topk
-
-        return ranked_topk(
-            local, [F.desc("score"), F.asc("doc_id")], k
-        ).select("rank", "doc_id", "score")
+        return _rank(local, k)
 
     def search_cross_fields(
         self, query_text: str, k: int = 10,
@@ -585,7 +514,7 @@ class MultiFieldIndexReader:
         scorer = _crossfields_range_scorer(
             params, tid_idx, k, float(tie_breaker)
         )
-        return self._topk(union, scorer, k)
+        return _rank(_ranges_apply(union, scorer), k)
 
 
 class ShardedMultiFieldIndexReader:
@@ -662,15 +591,10 @@ class ShardedMultiFieldIndexReader:
             if union is None:
                 continue
             scorer = make_scorer(fields)
-            parts.append(MultiFieldIndexReader._local(union, scorer))
+            parts.append(_ranges_apply(union, scorer))
         if not parts:
             return self._empty()
-        local = reduce(DataFrame.unionByName, parts)
-        from tlhop_library_spark.operators.relational import ranked_topk
-
-        return ranked_topk(
-            local, [F.desc("score"), F.asc("doc_id")], k
-        ).select("rank", "doc_id", "score")
+        return _rank(reduce(DataFrame.unionByName, parts), k)
 
     def _global_params(self, fields, gdf) -> dict[int, tuple]:
         """Per-shard kernel params with federation-global idf/avgdl

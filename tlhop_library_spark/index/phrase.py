@@ -41,85 +41,28 @@ from pyspark.sql import functions as F
 
 from tlhop_library_spark import bm25
 from tlhop_library_spark.analyzer import py_tokens, tokens_col
-from tlhop_library_spark.codecs import varint_decode
-
-_EMPTY = pd.DataFrame({"doc_id": [], "score": []}).astype(
-    {"doc_id": "int64", "score": "float64"}
+from tlhop_library_spark.index.postings import (
+    empty_scores,
+    score_docs,
+    sum_by_doc,
+    term_postings,
+    topk_frame,
 )
-
-
-# ---------------------------------------------------------------------
-# chunk decoding (full chunk, all blocks, vectorized)
-# ---------------------------------------------------------------------
-def _cum_reset(gaps: np.ndarray, counts: np.ndarray) -> np.ndarray:
-    """Absolute values from a gap stream whose delta chains restart at
-    segment boundaries given by ``counts`` (first of each segment is
-    absolute). Fully vectorized: one cumsum + one repeat."""
-    if gaps.size == 0:
-        return gaps
-    starts = np.concatenate(([0], np.cumsum(counts)))[:-1].astype(np.int64)
-    c = np.cumsum(gaps)
-    base = c[starts] - gaps[starts]
-    return c - np.repeat(base, counts.astype(np.int64))
-
-
-def decode_chunk(row) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """(docs, tfs, dls) of one whole chunk — all blocks at once.
-
-    Doc gaps restart at every block (build._encode_one delta-encodes
-    per block), so the reset boundaries are ``block_counts``."""
-    cnts = np.asarray(row["block_counts"], dtype=np.int64)
-    n = int(cnts.sum())
-    gaps = varint_decode(bytes(row["doc_bytes"]), n).astype(np.int64)
-    docs = _cum_reset(gaps, cnts)
-    tfs = varint_decode(bytes(row["tf_bytes"]), n)
-    dls = varint_decode(bytes(row["dl_bytes"]), n)
-    return docs, tfs, dls
-
-
-def decode_chunk_positions(row, tfs: np.ndarray) -> np.ndarray:
-    """Token-instance-level absolute positions for one chunk, aligned
-    with ``np.repeat(docs, tfs)``. Position delta chains restart at
-    every POSTING (count = that posting's tf)."""
-    total = int(tfs.sum())
-    pgaps = varint_decode(bytes(row["pos_bytes"]), total).astype(np.int64)
-    return _cum_reset(pgaps, np.asarray(tfs, dtype=np.int64))
-
+from tlhop_library_spark.operators.relational import ranked_topk
 
 # ---------------------------------------------------------------------
 # range kernels
 # ---------------------------------------------------------------------
 def _decode_terms(pdf: pd.DataFrame, tids: list[int], deleted=None):
-    """tid → (docs, tfs, dls, inst_docs, inst_pos) for each chunk row
-    of the range whose tid is in ``tids``.
-
-    A (tid, range) normally has ONE chunk, but an incrementally
-    appended index (index/append.py) can leave the boundary range with
-    one chunk per batch — doc-disjoint; concatenated in ascending
-    first-doc order so the per-term doc arrays stay sorted (the
-    intersection/scoring kernels rely on sorted-unique docs)."""
-    parts: dict[int, list] = {}
-    for ri in range(len(pdf)):
-        row = pdf.iloc[ri]
-        tid = int(row["tid"])
-        if tid not in tids:
-            continue
-        docs, tfs, dls = decode_chunk(row)
-        pos = decode_chunk_positions(row, tfs)
-        if deleted is not None and deleted.size:
-            from tlhop_library_spark.index.delete import mask_deleted
-
-            docs, tfs, dls, pos = mask_deleted(docs, tfs, dls, deleted, pos)
-        parts.setdefault(tid, []).append((docs, tfs, dls, pos))
-    out = {}
-    for tid, chunks in parts.items():
-        chunks.sort(key=lambda c: int(c[0][0]) if len(c[0]) else 0)
-        docs = np.concatenate([c[0] for c in chunks])
-        tfs = np.concatenate([c[1] for c in chunks])
-        dls = np.concatenate([c[2] for c in chunks])
-        pos = np.concatenate([c[3] for c in chunks])
-        out[tid] = (docs, tfs, dls, np.repeat(docs, tfs.astype(np.int64)), pos)
-    return out
+    """tid → (docs, tfs, dls, inst_docs, inst_pos) for the range's
+    chunks of ``tids``: :func:`postings.term_postings` plus each
+    position's doc id (``inst_docs``, aligned with ``inst_pos``)."""
+    return {
+        tid: (docs, tfs, dls, np.repeat(docs, tfs.astype(np.int64)), pos)
+        for tid, (docs, tfs, dls, pos) in term_postings(
+            pdf, deleted, tids
+        ).items()
+    }
 
 
 def _intersect_docs(per_term: dict, tids: list[int]) -> np.ndarray:
@@ -133,28 +76,8 @@ def _intersect_docs(per_term: dict, tids: list[int]) -> np.ndarray:
     return common
 
 
-def _score_docs(
-    per_term: dict, tids: list[int], idf_map: dict, matched: np.ndarray,
-    avgdl: float, k: int,
-) -> pd.DataFrame:
-    """BM25 over ``tids`` restricted to ``matched`` (sorted) → top-k."""
-    scores = np.zeros(len(matched), dtype=np.float64)
-    for tid in tids:
-        docs, tfs, dls, _, _ = per_term[tid]
-        sel = np.isin(docs, matched, assume_unique=True)
-        idx = np.searchsorted(matched, docs[sel])
-        scores[idx] += idf_map[tid] * bm25.tf_weight_np(
-            tfs[sel], dls[sel], avgdl
-        )
-    r = np.round(scores, bm25.ROUND_DIGITS)
-    order = np.lexsort((matched, -r))[:k]
-    return pd.DataFrame(
-        {"doc_id": matched[order].astype(np.int64), "score": r[order]}
-    )
-
-
-def phrase_range_scorer(phrase_tids: list[int], idf_map: dict, k: int,
-                        deleted=None):
+def phrase_range_scorer(phrase_tids: list[int], idf_map: dict,
+                        avgdl: float, k: int, deleted=None):
     """applyInPandas kernel: phrase match + score for ONE doc range.
 
     ``phrase_tids`` is the tid per phrase SLOT (duplicates preserved,
@@ -164,11 +87,11 @@ def phrase_range_scorer(phrase_tids: list[int], idf_map: dict, k: int,
     def score_range(key, pdf: pd.DataFrame) -> pd.DataFrame:
         present = set(int(t) for t in pdf["tid"])
         if not all(t in present for t in distinct):
-            return _EMPTY  # a range missing any term has no match
+            return empty_scores()  # a range missing any term has no match
         per_term = _decode_terms(pdf, distinct, deleted)
         common = _intersect_docs(per_term, distinct)
         if common.size == 0:
-            return _EMPTY
+            return empty_scores()
         # positional alignment: a phrase at anchor p needs slot i's term
         # at p+i, so slot i contributes candidate anchors (doc, pos-i);
         # the running inner-join keeps anchors satisfying every slot.
@@ -188,10 +111,9 @@ def phrase_range_scorer(phrase_tids: list[int], idf_map: dict, k: int,
                 else cand.merge(frame, on=["doc", "p"], how="inner")
             )
             if cand.empty:
-                return _EMPTY
+                return empty_scores()
         matched = np.unique(cand["doc"].to_numpy(dtype=np.int64))
-        return _score_docs(per_term, distinct, idf_map, matched,
-                           float(pdf["avgdl"].iloc[0]), k)
+        return score_docs(per_term, distinct, idf_map, matched, avgdl, k)
 
     return score_range
 
@@ -219,8 +141,8 @@ def _min_cover(term_pos: list[np.ndarray], window: int) -> bool:
     return True
 
 
-def proximity_range_scorer(tids: list[int], idf_map: dict, window: int,
-                           k: int, deleted=None):
+def proximity_range_scorer(tids: list[int], idf_map: dict, avgdl: float,
+                           window: int, k: int, deleted=None):
     """applyInPandas kernel: all distinct terms within a ``window``-token
     span, for ONE doc range."""
     distinct = sorted(set(tids))
@@ -228,11 +150,11 @@ def proximity_range_scorer(tids: list[int], idf_map: dict, window: int,
     def score_range(key, pdf: pd.DataFrame) -> pd.DataFrame:
         present = set(int(t) for t in pdf["tid"])
         if not all(t in present for t in distinct):
-            return _EMPTY
+            return empty_scores()
         per_term = _decode_terms(pdf, distinct, deleted)
         common = _intersect_docs(per_term, distinct)
         if common.size == 0:
-            return _EMPTY
+            return empty_scores()
         # per-candidate-doc position lists (python loop over the ALREADY
         # intersected candidates — bounded by docs containing all terms
         # in this range, with numpy searchsorted inside)
@@ -250,19 +172,19 @@ def proximity_range_scorer(tids: list[int], idf_map: dict, window: int,
             if _min_cover(lists, window):
                 matched.append(int(doc))
         if not matched:
-            return _EMPTY
-        return _score_docs(
+            return empty_scores()
+        return score_docs(
             per_term, distinct, idf_map,
             np.asarray(matched, dtype=np.int64),
-            float(pdf["avgdl"].iloc[0]), k,
+            avgdl, k,
         )
 
     return score_range
 
 
 def phrase_prefix_range_scorer(slot_tids: list[int], last_tids: list[int],
-                               idf_map: dict, group_idf: float, k: int,
-                               deleted=None):
+                               idf_map: dict, avgdl: float,
+                               group_idf: float, k: int, deleted=None):
     """applyInPandas kernel for match-phrase-prefix (the Elasticsearch
     ``match_phrase_prefix`` shape) over ONE doc range: the exact slots
     must occur consecutively, immediately followed by ANY of the
@@ -280,10 +202,10 @@ def phrase_prefix_range_scorer(slot_tids: list[int], last_tids: list[int],
     def score_range(key, pdf: pd.DataFrame) -> pd.DataFrame:
         present = set(int(t) for t in pdf["tid"])
         if not all(t in present for t in distinct_exact):
-            return _EMPTY
+            return empty_scores()
         cand_tids = [t for t in last_set if t in present]
         if not cand_tids:
-            return _EMPTY
+            return empty_scores()
         per_term = _decode_terms(
             pdf, sorted(set(distinct_exact) | set(cand_tids)), deleted
         )
@@ -291,7 +213,7 @@ def phrase_prefix_range_scorer(slot_tids: list[int], last_tids: list[int],
         if not cand_tids or not all(
             t in per_term for t in distinct_exact
         ):
-            return _EMPTY  # tombstones can empty a decoded term
+            return empty_scores()  # tombstones can empty a decoded term
         # anchor join over the exact slots (phrase_range_scorer shape)
         cand = None
         for i, tid in enumerate(slot_tids):
@@ -307,7 +229,7 @@ def phrase_prefix_range_scorer(slot_tids: list[int], last_tids: list[int],
                 else cand.merge(frame, on=["doc", "p"], how="inner")
             )
             if cand.empty:
-                return _EMPTY
+                return empty_scores()
         # completion position = anchor + len(slot_tids)
         comp_docs = np.concatenate([per_term[t][3] for t in cand_tids])
         comp_pos = np.concatenate([per_term[t][4] for t in cand_tids])
@@ -322,9 +244,8 @@ def phrase_prefix_range_scorer(slot_tids: list[int], last_tids: list[int],
             else cand.merge(frame, on=["doc", "p"], how="inner")
         )
         if cand.empty:
-            return _EMPTY
+            return empty_scores()
         matched = np.unique(cand["doc"].to_numpy(dtype=np.int64))
-        avgdl = float(pdf["avgdl"].iloc[0])
         scores = np.zeros(len(matched), dtype=np.float64)
         for tid in distinct_exact:
             docs, tfs, dls, _, _ = per_term[tid]
@@ -341,20 +262,12 @@ def phrase_prefix_range_scorer(slot_tids: list[int], last_tids: list[int],
             [per_term[t][2] for t in cand_tids]
         ).astype(np.float64)
         sel = np.isin(gd, matched)
-        gd, gtf, gdl = gd[sel], gtf[sel], gdl[sel]
-        uniq, inv = np.unique(gd, return_inverse=True)
-        tf_sum = np.zeros(len(uniq), dtype=np.float64)
-        np.add.at(tf_sum, inv, gtf)
+        uniq, tf_sum, inv = sum_by_doc(gd[sel], gtf[sel])
         dl_u = np.zeros(len(uniq), dtype=np.float64)
-        dl_u[inv] = gdl
+        dl_u[inv] = gdl[sel]
         idx = np.searchsorted(matched, uniq)
         scores[idx] += group_idf * bm25.tf_weight_np(tf_sum, dl_u, avgdl)
-        r = np.round(scores, bm25.ROUND_DIGITS)
-        order = np.lexsort((matched, -r))[:k]
-        return pd.DataFrame(
-            {"doc_id": matched[order].astype(np.int64),
-             "score": r[order]}
-        )
+        return topk_frame(matched, scores, k)
 
     return score_range
 
@@ -414,7 +327,7 @@ def _ordered_span(lists: list[np.ndarray], slop: int) -> bool:
 
 
 def span_near_range_scorer(clause_tids: list[int], idf_map: dict,
-                           slop: int, k: int, deleted=None):
+                           avgdl: float, slop: int, k: int, deleted=None):
     """applyInPandas kernel for ordered span-near (Lucene
     ``SpanNearQuery(inOrder=true)``) over ONE doc range: the clause
     terms must occur left-to-right in query order within ``slop``
@@ -427,11 +340,11 @@ def span_near_range_scorer(clause_tids: list[int], idf_map: dict,
     def score_range(key, pdf: pd.DataFrame) -> pd.DataFrame:
         present = set(int(t) for t in pdf["tid"])
         if not all(t in present for t in distinct):
-            return _EMPTY
+            return empty_scores()
         per_term = _decode_terms(pdf, distinct, deleted)
         common = _intersect_docs(per_term, distinct)
         if common.size == 0:
-            return _EMPTY
+            return empty_scores()
         per_doc = []
         for tid in clause_tids:
             _, _, _, inst_docs, inst_pos = per_term[tid]
@@ -448,11 +361,11 @@ def span_near_range_scorer(clause_tids: list[int], idf_map: dict,
             )
         ]
         if not matched:
-            return _EMPTY
-        return _score_docs(
+            return empty_scores()
+        return score_docs(
             per_term, distinct, idf_map,
             np.asarray(matched, dtype=np.int64),
-            float(pdf["avgdl"].iloc[0]), k,
+            avgdl, k,
         )
 
     return score_range
@@ -462,8 +375,8 @@ def span_near_range_scorer(clause_tids: list[int], idf_map: dict,
 # declarative (index-free) phrase path + oracle SQL
 # ---------------------------------------------------------------------
 def span_not_range_scorer(clause_tids: list[int], excl_tid: "int | None",
-                          idf_map: dict, slop: int, pre: int, post: int,
-                          k: int, deleted=None):
+                          idf_map: dict, avgdl: float, slop: int, pre: int,
+                          post: int, k: int, deleted=None):
     """applyInPandas kernel for Lucene ``SpanNotQuery`` with an
     ordered span-near include and a single-term exclude: a doc
     matches iff SOME include span (clause terms left-to-right within
@@ -483,7 +396,7 @@ def span_not_range_scorer(clause_tids: list[int], excl_tid: "int | None",
     def score_range(key, pdf: pd.DataFrame) -> pd.DataFrame:
         present = set(int(t) for t in pdf["tid"])
         if not all(t in present for t in distinct):
-            return _EMPTY
+            return empty_scores()
         want = distinct + (
             [excl_tid] if excl_tid is not None and excl_tid in present
             else []
@@ -491,7 +404,7 @@ def span_not_range_scorer(clause_tids: list[int], excl_tid: "int | None",
         per_term = _decode_terms(pdf, want, deleted)
         common = _intersect_docs(per_term, distinct)
         if common.size == 0:
-            return _EMPTY
+            return empty_scores()
         per_doc = []
         for tid in clause_tids:
             _, _, _, inst_docs, inst_pos = per_term[tid]
@@ -521,11 +434,11 @@ def span_not_range_scorer(clause_tids: list[int], excl_tid: "int | None",
                     continue  # every span overlaps an exclusion
             matched.append(int(doc))
         if not matched:
-            return _EMPTY
-        return _score_docs(
+            return empty_scores()
+        return score_docs(
             per_term, distinct, idf_map,
             np.asarray(matched, dtype=np.int64),
-            float(pdf["avgdl"].iloc[0]), k,
+            avgdl, k,
         )
 
     return score_range
@@ -589,15 +502,13 @@ def phrase_exhaustive(
     scored = proj.where("hit").select(
         "doc_id", F.round(score, bm25.ROUND_DIGITS).alias("score")
     )
-    from tlhop_library_spark.operators.relational import ranked_topk
-
     return ranked_topk(
         scored, [F.desc("score"), F.asc("doc_id")], k
     ).select("rank", "doc_id", "score")
 
 
-def span_first_range_scorer(tid: int, idf_map: dict, end: int, k: int,
-                            deleted=None):
+def span_first_range_scorer(tid: int, idf_map: dict, avgdl: float,
+                            end: int, k: int, deleted=None):
     """applyInPandas kernel for SpanFirstQuery over ONE doc range:
     docs whose FIRST occurrence of the term sits within the first
     ``end`` tokens (0-based position < end, i.e. Lucene
@@ -606,20 +517,19 @@ def span_first_range_scorer(tid: int, idf_map: dict, end: int, k: int,
 
     def score_range(key, pdf: pd.DataFrame) -> pd.DataFrame:
         if int(tid) not in set(int(t) for t in pdf["tid"]):
-            return _EMPTY
+            return empty_scores()
         per_term = _decode_terms(pdf, [tid], deleted)
         docs, _tfs, _dls, inst_docs, inst_pos = per_term[tid]
         if docs.size == 0:
-            return _EMPTY
+            return empty_scores()
         # first instance index per doc: inst_docs ascends by doc and
         # positions ascend within a doc, so unique's first hit is the
         # doc's first occurrence
         _, first_idx = np.unique(inst_docs, return_index=True)
         matched = inst_docs[first_idx][inst_pos[first_idx] < end]
         if matched.size == 0:
-            return _EMPTY
-        return _score_docs(per_term, [tid], idf_map, matched,
-                           float(pdf["avgdl"].iloc[0]), k)
+            return empty_scores()
+        return score_docs(per_term, [tid], idf_map, matched, avgdl, k)
 
     return score_range
 

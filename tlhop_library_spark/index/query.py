@@ -50,7 +50,36 @@ from pyspark.sql.window import Window
 from tlhop_library_spark import bm25
 from tlhop_library_spark.analyzer import py_tokens, tokens_col
 from tlhop_library_spark.codecs import varint_decode
-from tlhop_library_spark.index.build import POS_SEGMENT_SCHEMA, SEGMENT_SCHEMA
+from tlhop_library_spark.index.boolq import (
+    boolean_range_scorer,
+    compile_query,
+    subst_tids,
+)
+from tlhop_library_spark.index.build import (
+    DICT_DDL,
+    POS_SEGMENT_SCHEMA,
+    SEGMENT_SCHEMA,
+)
+from tlhop_library_spark.index.delete import load_tombstones
+from tlhop_library_spark.index.phrase import (
+    phrase_prefix_range_scorer,
+    phrase_range_scorer,
+    proximity_range_scorer,
+    span_first_range_scorer,
+    span_near_range_scorer,
+    span_not_range_scorer,
+)
+from tlhop_library_spark.index.postings import (
+    BlockReader,
+    _cum_reset,
+    empty_scores,
+    iter_chunks,
+    score_docs,
+    sum_by_doc,
+    term_postings,
+    topk_frame,
+)
+from tlhop_library_spark.operators.relational import ranked_topk
 
 #: two rounding ulps — see the block-max margin in _range_scorer
 _EPS = 2.0 * 10.0 ** (-bm25.ROUND_DIGITS)
@@ -136,8 +165,18 @@ class _LocalAnswer(ClassicDataFrame):
         return self._answer_schema
 
     def collect(self) -> list:
+        return self._rows(self._table)
+
+    def take(self, num: int) -> list:
+        # head() and first() go through take(); a negative num keeps
+        # Spark's own error
+        if num < 0:
+            return super().take(num)
+        return self._rows(self._table.slice(0, num))
+
+    def _rows(self, table) -> list:
         names = self._answer_schema.names
-        cols = [c.to_pylist() for c in self._table.columns]
+        cols = [c.to_pylist() for c in table.columns]
         return [_create_row(names, vals) for vals in zip(*cols)]
 
     def count(self) -> int:
@@ -160,8 +199,9 @@ def _local_frame(
     """Driver-held ``columns`` (one array per ``schema`` field; none →
     zero rows) as a DataFrame over an Arrow table kept on the driver.
 
-    ``collect``, ``count``, ``schema`` and ``toArrow`` answer from the
-    table: no Py4J call, no Spark job. Every other call (``where``,
+    ``collect``, ``take`` (so ``head`` and ``first``), ``count``,
+    ``schema`` and ``toArrow`` answer from the table: no Py4J call, no
+    Spark job. Every other call (``where``,
     ``join``, ``select``, ``orderBy``, ``toPandas``, ``write``,
     ``_jdf``...) first builds the Arrow local relation, once per
     answer. The optimizer sees an empty one is empty, so a plan over a
@@ -197,6 +237,25 @@ def _merge_topk(parts: list, k: int) -> tuple[np.ndarray, np.ndarray]:
     d = np.concatenate([p["doc_id"].to_numpy(np.int64) for p in parts])
     order = np.lexsort((d, -r))[:k]
     return d[order], r[order]
+
+
+def _ranges_apply(seg: DataFrame, scorer,
+                  schema: "StructType | str" = _SCORE_SCHEMA) -> DataFrame:
+    """Run a per-range kernel over a (pruned) segment frame: one
+    ``applyInPandas`` group per doc range, output ``schema``."""
+    return seg.groupBy("range_id").applyInPandas(
+        lambda key, pdf: scorer(key, pdf), schema=schema
+    )
+
+
+def _rank(local: DataFrame, k: int) -> DataFrame:
+    """Global top-k of per-range winners as (rank, doc_id, score):
+    TakeOrderedAndProject over the ≤ k·n_ranges local winners (k per
+    range leave the executors; kernels emit rounded scores), then rank
+    the ≤ k survivors."""
+    return ranked_topk(
+        local, [F.desc("score"), F.asc("doc_id")], k
+    ).select("rank", "doc_id", "score")
 
 
 # ---------------------------------------------------------------------
@@ -264,8 +323,6 @@ def score_exhaustive(
     scored = proj.where(any_hit).select(
         "doc_id", F.round(score, bm25.ROUND_DIGITS).alias("score")
     )
-    from tlhop_library_spark.operators.relational import ranked_topk
-
     return ranked_topk(
         scored, [F.desc("score"), F.asc("doc_id")], k
     ).select("rank", "doc_id", "score")
@@ -386,61 +443,6 @@ ORDER BY rank
 """
 
 
-def conjunctive_range_scorer(tids: list[int], idf_map: dict, k: int,
-                             deleted: "np.ndarray | None" = None):
-    """applyInPandas kernel for AND-semantics retrieval over ONE doc
-    range: decode the query terms' chunks (merging multi-chunk terms —
-    appended boundary ranges — in doc order), intersect the per-term
-    doc lists rarest-first, and BM25-score only the docs containing
-    EVERY term. Reuses the positional index's decode/intersect/score
-    kernels minus the position streams (works on plain and positional
-    indexes alike; column pruning keeps pos_bytes unread)."""
-    from tlhop_library_spark.index.phrase import (
-        _score_docs,
-        decode_chunk,
-    )
-
-    def score_range(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        empty = pd.DataFrame({"doc_id": [], "score": []}).astype(
-            {"doc_id": "int64", "score": "float64"}
-        )
-        avgdl = float(pdf["avgdl"].iloc[0])
-        parts: dict[int, list] = {}
-        for ri in range(len(pdf)):
-            row = pdf.iloc[ri]
-            tid = int(row["tid"])
-            if tid not in tids:
-                continue
-            docs_, tfs_, dls_ = decode_chunk(row)
-            if deleted is not None and deleted.size:
-                from tlhop_library_spark.index.delete import mask_deleted
-
-                docs_, tfs_, dls_, _ = mask_deleted(
-                    docs_, tfs_, dls_, deleted
-                )
-            parts.setdefault(tid, []).append((docs_, tfs_, dls_))
-        if set(tids) - set(parts):
-            # a term absent from this range → no doc here has all terms
-            return empty
-        per_term = {}
-        for tid, chunks in parts.items():
-            chunks.sort(key=lambda c: int(c[0][0]) if len(c[0]) else 0)
-            per_term[tid] = tuple(
-                np.concatenate([c[i] for c in chunks]) for i in range(3)
-            ) + (None, None)  # shape-compatible with phrase kernels
-        lists = sorted((per_term[t][0] for t in tids), key=len)
-        common = lists[0]
-        for arr in lists[1:]:
-            if common.size == 0:
-                return empty
-            common = common[np.isin(common, arr, assume_unique=True)]
-        if common.size == 0:
-            return empty
-        return _score_docs(per_term, tids, idf_map, common, avgdl, k)
-
-    return score_range
-
-
 def oracle_sql_bm25_conjunctive(
     query_text: str, k: int = 10, table: str = "documents",
     doc_col: str = "doc_id",
@@ -455,57 +457,34 @@ def oracle_sql_bm25_conjunctive(
     )
 
 
-def msm_range_scorer(tids: list[int], idf_map: dict, k: int,
+
+def msm_range_scorer(tids: list[int], idf_map: dict, avgdl: float, k: int,
                      min_match: int,
                      deleted: "np.ndarray | None" = None):
     """applyInPandas kernel for minimum-should-match retrieval over
     ONE doc range (Lucene ``BooleanQuery.setMinimumNumberShouldMatch``
     semantics): a doc qualifies iff it contains at least ``min_match``
     DISTINCT query terms; qualifying docs are BM25-scored over every
-    query term they contain. ``min_match == len(tids)`` degenerates to
-    :func:`conjunctive_range_scorer`; ``min_match == 1`` to plain OR
-    retrieval. Doc-space range partitioning makes the per-range count
-    exact — a doc's postings live in exactly one range."""
-    from tlhop_library_spark.index.phrase import _score_docs, decode_chunk
+    query term they contain. ``min_match == len(tids)`` is AND
+    retrieval (:meth:`IndexReader.search_and`); ``min_match == 1``
+    plain OR retrieval. Doc-space range partitioning makes the
+    per-range count exact — a doc's postings live in exactly one
+    range."""
 
     def score_range(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        empty = pd.DataFrame({"doc_id": [], "score": []}).astype(
-            {"doc_id": "int64", "score": "float64"}
-        )
-        avgdl = float(pdf["avgdl"].iloc[0])
-        parts: dict[int, list] = {}
-        for ri in range(len(pdf)):
-            row = pdf.iloc[ri]
-            tid = int(row["tid"])
-            if tid not in tids:
-                continue
-            docs_, tfs_, dls_ = decode_chunk(row)
-            if deleted is not None and deleted.size:
-                from tlhop_library_spark.index.delete import mask_deleted
-
-                docs_, tfs_, dls_, _ = mask_deleted(
-                    docs_, tfs_, dls_, deleted
-                )
-            parts.setdefault(tid, []).append((docs_, tfs_, dls_))
+        per_term = term_postings(pdf, deleted, tids)
         # unlike AND, a range missing some terms can still qualify —
         # only fewer present terms than min_match makes it empty
-        if len(parts) < min_match:
-            return empty
-        per_term = {}
-        for tid, chunks in parts.items():
-            chunks.sort(key=lambda c: int(c[0][0]) if len(c[0]) else 0)
-            per_term[tid] = tuple(
-                np.concatenate([c[i] for c in chunks]) for i in range(3)
-            ) + (None, None)  # shape-compatible with phrase kernels
+        if len(per_term) < min_match:
+            return empty_scores()
         present = sorted(per_term)
         # per-doc distinct-term count: each term's doc list is unique,
         # so concatenating and counting multiplicities counts terms
         alld = np.concatenate([per_term[t][0] for t in present])
         uniq, cnt = np.unique(alld, return_counts=True)
-        matched = uniq[cnt >= min_match]
-        if matched.size == 0:
-            return empty
-        return _score_docs(per_term, present, idf_map, matched, avgdl, k)
+        return score_docs(
+            per_term, present, idf_map, uniq[cnt >= min_match], avgdl, k
+        )
 
     return score_range
 
@@ -526,49 +505,23 @@ def similarity_range_scorer(weight_of: dict, k: "int | None",
     (score DESC, doc_id ASC) total order) — per-range heaps stay size
     k at ANY paging depth, unlike offset paging whose heaps grow with
     the offset."""
-    from tlhop_library_spark.index.phrase import decode_chunk
 
     def score_range(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        empty = pd.DataFrame({"doc_id": [], "score": []}).astype(
-            {"doc_id": "int64", "score": "float64"}
-        )
         parts_d, parts_s = [], []
-        for ri in range(len(pdf)):
-            row = pdf.iloc[ri]
-            tid = int(row["tid"])
-            if tid not in weight_of:
-                continue
-            docs_, tfs_, dls_ = decode_chunk(row)
-            if deleted is not None and deleted.size:
-                from tlhop_library_spark.index.delete import mask_deleted
-
-                docs_, tfs_, dls_, _ = mask_deleted(
-                    docs_, tfs_, dls_, deleted
-                )
-            if not len(docs_):
-                continue
-            parts_d.append(docs_)
-            parts_s.append(weight_of[tid](tfs_, dls_))
+        for tid, docs, tfs, dls in iter_chunks(pdf, deleted, weight_of):
+            parts_d.append(docs)
+            parts_s.append(weight_of[tid](tfs, dls))
         if not parts_d:
-            return empty
-        alldocs = np.concatenate(parts_d)
-        allsc = np.concatenate(parts_s)
-        uniq, inv = np.unique(alldocs, return_inverse=True)
-        sums = np.zeros(len(uniq), dtype=np.float64)
-        np.add.at(sums, inv, allsc)
-        r = np.round(sums, bm25.ROUND_DIGITS)
+            return empty_scores()
+        uniq, sums, _ = sum_by_doc(
+            np.concatenate(parts_d), np.concatenate(parts_s)
+        )
         if after is not None:
+            r = np.round(sums, bm25.ROUND_DIGITS)
             a_s, a_d = float(after[0]), int(after[1])
             keep = (r < a_s) | ((r == a_s) & (uniq > a_d))
-            uniq, r = uniq[keep], r[keep]
-            if not len(uniq):
-                return empty
-        order = np.lexsort((uniq, -r))
-        if k is not None:
-            order = order[:k]
-        return pd.DataFrame(
-            {"doc_id": uniq[order].astype(np.int64), "score": r[order]}
-        )
+            uniq, sums = uniq[keep], sums[keep]
+        return topk_frame(uniq, sums, k)
 
     return score_range
 
@@ -587,58 +540,24 @@ def dismax_range_scorer(weight_of: dict, k: int, tie_breaker: float,
     must never be asked to merge a same-doc split: for nonlinear BM25
     weights, weight(tf₁)+weight(tf₂) ≠ weight(tf₁+tf₂) — disjointness
     is the invariant that makes per-chunk weighting exact."""
-    from tlhop_library_spark.index.phrase import decode_chunk
 
     def score_range(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        empty = pd.DataFrame({"doc_id": [], "score": []}).astype(
-            {"doc_id": "int64", "score": "float64"}
-        )
-        by_tid: dict[int, list] = {}
-        for ri in range(len(pdf)):
-            row = pdf.iloc[ri]
-            tid = int(row["tid"])
-            if tid not in weight_of:
-                continue
-            docs_, tfs_, dls_ = decode_chunk(row)
-            if deleted is not None and deleted.size:
-                from tlhop_library_spark.index.delete import mask_deleted
-
-                docs_, tfs_, dls_, _ = mask_deleted(
-                    docs_, tfs_, dls_, deleted
-                )
-            if len(docs_):
-                by_tid.setdefault(tid, []).append((docs_, tfs_, dls_))
-        if not by_tid:
-            return empty
         td, tw = [], []
-        for tid, parts in by_tid.items():
-            d = np.concatenate([p[0] for p in parts])
-            w = weight_of[tid](
-                np.concatenate([p[1] for p in parts]),
-                np.concatenate([p[2] for p in parts]),
-            )
-            ud, inv = np.unique(d, return_inverse=True)
-            uw = np.zeros(len(ud), dtype=np.float64)
-            np.add.at(uw, inv, w)
+        for tid, (docs, tfs, dls) in term_postings(
+            pdf, deleted, weight_of
+        ).items():
+            ud, uw, _ = sum_by_doc(docs, weight_of[tid](tfs, dls))
             td.append(ud)
             tw.append(uw)
-        alld = np.concatenate(td)
+        if not td:
+            return empty_scores()
         allw = np.concatenate(tw)
-        uniq, inv = np.unique(alld, return_inverse=True)
-        ssum = np.zeros(len(uniq), dtype=np.float64)
+        uniq, ssum, inv = sum_by_doc(np.concatenate(td), allw)
         smax = np.full(len(uniq), -np.inf, dtype=np.float64)
-        np.add.at(ssum, inv, allw)
         np.maximum.at(smax, inv, allw)
-        r = np.round(
-            smax + tie_breaker * (ssum - smax), bm25.ROUND_DIGITS
-        )
-        order = np.lexsort((uniq, -r))[:k]
-        return pd.DataFrame(
-            {"doc_id": uniq[order].astype(np.int64), "score": r[order]}
-        )
+        return topk_frame(uniq, smax + tie_breaker * (ssum - smax), k)
 
     return score_range
-
 
 _BOOST_RE = None
 
@@ -827,8 +746,6 @@ def decay_rank_hits(
         "doc_id",
         F.round(F.col("score") * factor, bm25.ROUND_DIGITS).alias("score"),
     )
-    from tlhop_library_spark.operators.relational import ranked_topk
-
     return ranked_topk(
         scored, [F.desc("score"), F.asc("doc_id")], k
     ).select("rank", "doc_id", "score")
@@ -854,8 +771,6 @@ def group_topk_hits(
     ranked = j.withColumn(
         "hit_rank", F.row_number().over(w)
     ).where(F.col("hit_rank") <= per_group)
-    from tlhop_library_spark.operators.relational import ranked_topk
-
     top_groups = ranked_topk(
         ranked.where(F.col("hit_rank") == 1),
         [F.desc("score"), F.asc("doc_id")],
@@ -879,46 +794,81 @@ def counted_range_scorer(weight_of: dict,
     is unique, so multiplicity over the concatenation counts terms).
     Feeds ``terms_set`` retrieval, where the k-cut can only happen
     AFTER the per-doc minimum-should-match join."""
-    from tlhop_library_spark.index.phrase import decode_chunk
 
     def score_range(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        empty = pd.DataFrame(
-            {"doc_id": [], "score": [], "n_matched": []}
-        ).astype({"doc_id": "int64", "score": "float64",
-                  "n_matched": "int32"})
-        parts_d, parts_s = [], []
-        for ri in range(len(pdf)):
-            row = pdf.iloc[ri]
-            tid = int(row["tid"])
-            if tid not in weight_of:
-                continue
-            docs_, tfs_, dls_ = decode_chunk(row)
-            if deleted is not None and deleted.size:
-                from tlhop_library_spark.index.delete import mask_deleted
-
-                docs_, tfs_, dls_, _ = mask_deleted(
-                    docs_, tfs_, dls_, deleted
-                )
-            if not len(docs_):
-                continue
-            parts_d.append(docs_)
-            parts_s.append(weight_of[tid](tfs_, dls_))
-        if not parts_d:
-            return empty
-        alldocs = np.concatenate(parts_d)
-        allsc = np.concatenate(parts_s)
-        uniq, inv, cnt = np.unique(
-            alldocs, return_inverse=True, return_counts=True
+        parts_d, parts_s = [np.empty(0, np.int64)], [np.empty(0)]
+        for tid, docs, tfs, dls in iter_chunks(pdf, deleted, weight_of):
+            parts_d.append(docs)
+            parts_s.append(weight_of[tid](tfs, dls))
+        uniq, sums, inv = sum_by_doc(
+            np.concatenate(parts_d), np.concatenate(parts_s)
         )
-        sums = np.zeros(len(uniq), dtype=np.float64)
-        np.add.at(sums, inv, allsc)
         return pd.DataFrame({
             "doc_id": uniq.astype(np.int64),
             "score": np.round(sums, bm25.ROUND_DIGITS),
-            "n_matched": cnt.astype(np.int32),
+            "n_matched": np.bincount(inv, minlength=len(uniq)).astype(
+                np.int32
+            ),
         })
 
     return score_range
+
+def term_groups_range_scorer(tid_group: dict[int, int],
+                             group_idf: dict[int, float], avgdl: float,
+                             k: int, deleted: "np.ndarray | None" = None):
+    """applyInPandas kernel for SynonymQuery-style groups over ONE
+    doc range: ``tid_group`` maps each member tid to its group; per
+    doc a group's members' tfs are SUMMED into one pseudo-term tf,
+    weighted once with the group's idf (``group_idf``), and the
+    groups' weights add up to the doc's score."""
+
+    def score_range(key, pdf: pd.DataFrame) -> pd.DataFrame:
+        per_group: dict[int, list] = {}
+        for tid, docs, tfs, dls in iter_chunks(pdf, deleted, tid_group):
+            per_group.setdefault(tid_group[tid], []).append((docs, tfs, dls))
+        parts_d, parts_s = [], []
+        for gi, chunks in per_group.items():
+            docs, tfs, dls = (np.concatenate(c) for c in zip(*chunks))
+            # SUM tf per doc across the group's members (a doc's dl is
+            # identical in every member's posting)
+            uniq, tf_sum, inv = sum_by_doc(docs, tfs.astype(np.float64))
+            dl_u = np.zeros(len(uniq), dtype=np.float64)
+            dl_u[inv] = dls.astype(np.float64)
+            parts_d.append(uniq)
+            parts_s.append(
+                group_idf[gi] * bm25.tf_weight_np(tf_sum, dl_u, avgdl)
+            )
+        if not parts_d:
+            return empty_scores()
+        uniq, sums, _ = sum_by_doc(
+            np.concatenate(parts_d), np.concatenate(parts_s)
+        )
+        return topk_frame(uniq, sums, k)
+
+    return score_range
+
+
+_DOC_POSTINGS_DDL = "doc_id long, tid long, tf long, dl long"
+
+
+def _doc_postings(ids: np.ndarray):
+    """applyInPandas kernel: one (doc_id, tid, tf, dl) row per posting
+    of the range whose doc is in the sorted array ``ids`` — the decode
+    half of term vectors, explain and more-like-this."""
+
+    def emit(key, pdf: pd.DataFrame) -> pd.DataFrame:
+        cols = [[np.empty(0, np.int64)] for _ in range(4)]
+        for tid, docs, tfs, dls in iter_chunks(pdf):
+            m = np.isin(docs, ids, assume_unique=True)
+            hit = (docs[m], np.full(int(m.sum()), tid), tfs[m], dls[m])
+            for out, v in zip(cols, hit):
+                out.append(v.astype(np.int64))
+        return pd.DataFrame({
+            name: np.concatenate(v)
+            for name, v in zip(("doc_id", "tid", "tf", "dl"), cols)
+        })
+
+    return emit
 
 
 _COUNTED_SCHEMA = StructType(
@@ -948,8 +898,6 @@ def boosting_rank_hits(
             bm25.ROUND_DIGITS,
         ).alias("score"),
     )
-    from tlhop_library_spark.operators.relational import ranked_topk
-
     return ranked_topk(
         demoted, [F.desc("score"), F.asc("doc_id")], k
     ).select("rank", "doc_id", "score")
@@ -992,8 +940,6 @@ def random_rank_hits(hits: DataFrame, k: int, seed: int) -> DataFrame:
             "score"
         ),
     )
-    from tlhop_library_spark.operators.relational import ranked_topk
-
     return ranked_topk(
         scored, [F.desc("score"), F.asc("doc_id")], k
     ).select("rank", "doc_id", "score")
@@ -1017,8 +963,6 @@ def terms_set_rank_hits(
         .where(F.col("n_matched") >= F.col("__req"))
         .select("doc_id", "score")
     )
-    from tlhop_library_spark.operators.relational import ranked_topk
-
     return ranked_topk(
         kept, [F.desc("score"), F.asc("doc_id")], k
     ).select("rank", "doc_id", "score")
@@ -1137,8 +1081,6 @@ def diversified_rank_hits(
         )
         .select("doc_id", "score")
     )
-    from tlhop_library_spark.operators.relational import ranked_topk
-
     return ranked_topk(
         kept, [F.desc("score"), F.asc("doc_id")], k
     ).select("rank", "doc_id", "score")
@@ -1189,8 +1131,6 @@ def rank_feature_rank_hits(
             bm25.ROUND_DIGITS,
         ).alias("score"),
     )
-    from tlhop_library_spark.operators.relational import ranked_topk
-
     return ranked_topk(
         scored, [F.desc("score"), F.asc("doc_id")], k
     ).select("rank", "doc_id", "score")
@@ -1217,8 +1157,6 @@ def pinned_rank_hits(
     ids) — it ships as a broadcast literal frame; the organic stream
     is never collected. One anti-join + union + ``ranked_topk``."""
     if not pinned_ids:
-        from tlhop_library_spark.operators.relational import ranked_topk
-
         return ranked_topk(
             hits.select("doc_id", "score"),
             [F.desc("score"), F.asc("doc_id")], k,
@@ -1243,8 +1181,6 @@ def pinned_rank_hits(
     organic = hits.join(
         F.broadcast(pin.select("doc_id")), "doc_id", "left_anti"
     ).select("doc_id", "score")
-    from tlhop_library_spark.operators.relational import ranked_topk
-
     return ranked_topk(
         live_pins.unionByName(organic),
         [F.desc("score"), F.asc("doc_id")], k,
@@ -1271,8 +1207,6 @@ def multi_terms_agg_hits(
     agg = j.groupBy(*fields).agg(
         F.count("*").cast("long").alias("doc_count")
     )
-    from tlhop_library_spark.operators.relational import ranked_topk
-
     return ranked_topk(
         agg,
         [F.desc("doc_count")] + [F.asc(f_) for f_ in fields],
@@ -1383,8 +1317,6 @@ def terms_stats_agg_hits(
         F.sum(m).alias("sum_v"),
         F.round(F.sum(m) / F.count(m), 4).alias("avg_v"),
     )
-    from tlhop_library_spark.operators.relational import ranked_topk
-
     return ranked_topk(
         agg, [F.desc("doc_count"), F.asc(key_field)], size
     ).select(
@@ -1644,8 +1576,6 @@ def top_metrics_agg_hits(
             F.col(metric_field).cast("double").alias("metric"),
         )
     )
-    from tlhop_library_spark.operators.relational import ranked_topk
-
     order = [
         F.asc("sort_value") if asc else F.desc("sort_value"),
         F.asc("doc_id"),
@@ -1875,8 +1805,6 @@ def rare_terms_agg_hits(
         .agg(F.count("*").cast("long").alias("doc_count"))
         .where(F.col("doc_count") <= int(max_doc_count))
     )
-    from tlhop_library_spark.operators.relational import ranked_topk
-
     return ranked_topk(
         agg, [F.asc("doc_count"), F.asc(field)], max_buckets
     ).select("rank", field, "doc_count")
@@ -2334,8 +2262,6 @@ def composite_agg_hits(
     counts = b.groupBy(F.col(field).alias("key")).agg(
         F.count("*").cast("long").alias("n_docs")
     )
-    from tlhop_library_spark.operators.relational import ranked_topk
-
     return ranked_topk(counts, [F.asc("key")], size).select(
         "rank", "key", "n_docs"
     )
@@ -2398,8 +2324,11 @@ def pipeline_aggs_hits(
     - ``derivative``      — metric − previous bucket's metric, NULL
       for the first bucket (ES ``derivative``),
     - ``moving_avg``      — mean of the trailing ``window`` buckets
-      including the current one (ES ``moving_fn`` with
-      ``MovingFunctions.unweightedAvg``),
+      INCLUDING the current one (``MovingFunctions.unweightedAvg``).
+      Deviation from ES, documented: ES ``moving_fn`` at its default
+      ``shift=0`` averages the ``window`` buckets BEFORE the current
+      one; this column equals ``moving_fn`` with ``shift=1``, and the
+      SQL oracle computes the same window,
     - ``per_doc``         — metric / doc_count (an ES
       ``bucket_script`` over two sub-metrics).
 
@@ -3508,55 +3437,30 @@ ORDER BY topk.rank, contrib.term
 """
 
 
-def filtered_range_scorer(idf_map: dict[int, float], k: int,
+def filtered_range_scorer(idf_map: dict[int, float], avgdl: float, k: int,
                           deleted: "np.ndarray | None" = None):
     """Cogrouped kernel for ONE doc range: (segment chunks, allowed
     doc_ids) → local top-k among the allowed set. The allow-list never
     leaves the executors — each range sees only its own slice."""
-    from tlhop_library_spark.index.phrase import decode_chunk
 
     def score_range(key, seg_pdf: pd.DataFrame,
                     allow_pdf: pd.DataFrame) -> pd.DataFrame:
-        empty = pd.DataFrame({"doc_id": [], "score": []}).astype(
-            {"doc_id": "int64", "score": "float64"}
-        )
         if seg_pdf.empty or allow_pdf.empty:
-            return empty
+            return empty_scores()
         allowed = np.unique(allow_pdf["doc_id"].to_numpy(np.int64))
-        avgdl = float(seg_pdf["avgdl"].iloc[0])
         parts_d, parts_s = [], []
-        for ri in range(len(seg_pdf)):
-            row = seg_pdf.iloc[ri]
-            docs_, tfs_, dls_ = decode_chunk(row)
-            if deleted is not None and deleted.size:
-                from tlhop_library_spark.index.delete import mask_deleted
-
-                docs_, tfs_, dls_, _ = mask_deleted(
-                    docs_, tfs_, dls_, deleted
-                )
-            sel = np.isin(docs_, allowed)
-            if not sel.any():
-                continue
-            w = (
-                bm25.tf_weight_np(tfs_[sel], dls_[sel], avgdl)
-                * idf_map[int(row["tid"])]
+        for tid, docs, tfs, dls in iter_chunks(seg_pdf, deleted):
+            sel = np.isin(docs, allowed)
+            parts_d.append(docs[sel])
+            parts_s.append(
+                bm25.tf_weight_np(tfs[sel], dls[sel], avgdl) * idf_map[tid]
             )
-            parts_d.append(docs_[sel])
-            parts_s.append(w)
-        if not parts_d:
-            return empty
-        alldocs = np.concatenate(parts_d)
-        uniq, inv = np.unique(alldocs, return_inverse=True)
-        sums = np.zeros(len(uniq), dtype=np.float64)
-        np.add.at(sums, inv, np.concatenate(parts_s))
-        r = np.round(sums, bm25.ROUND_DIGITS)
-        order = np.lexsort((uniq, -r))[:k]
-        return pd.DataFrame(
-            {"doc_id": uniq[order].astype(np.int64), "score": r[order]}
+        uniq, sums, _ = sum_by_doc(
+            np.concatenate(parts_d), np.concatenate(parts_s)
         )
+        return topk_frame(uniq, sums, k)
 
     return score_range
-
 
 def oracle_sql_bm25_snippets(
     query_text: str, k: int = 10, table: str = "documents",
@@ -3575,10 +3479,10 @@ FROM ({inner}) h JOIN {table} d ON h.doc_id = d.doc_id
 # ---------------------------------------------------------------------
 # Path 2: indexed reader
 # ---------------------------------------------------------------------
-def _range_scorer(idf_map: dict[str, float], k: int, mode: str,
-                  acc_decoded=None, acc_total=None,
-                  bound_scale: float = 1.0,
-                  deleted: "np.ndarray | None" = None):
+def _range_scorer(idf_map: dict[int, float], k: int, mode: str,
+                  avgdl: float, bound_scale: float = 1.0,
+                  deleted: "np.ndarray | None" = None,
+                  acc_decoded=None, acc_total=None):
     """applyInPandas kernel: all chunks of the query terms for ONE
     doc-range → local top-k (doc_id, score).
 
@@ -3594,43 +3498,12 @@ def _range_scorer(idf_map: dict[str, float], k: int, mode: str,
     (index/append.py). Scores are unaffected — they are recomputed
     from the tf/dl streams with current avgdl either way."""
 
-    def _decode_block(row, bi):
-        if acc_decoded is not None:
-            acc_decoded.add(1)
-        off_d = row["block_doc_offsets"]
-        off_t = row["block_tf_offsets"]
-        off_l = row["block_dl_offsets"]
-        cnt = row["block_counts"][bi]
-        d_end = off_d[bi + 1] if bi + 1 < len(off_d) else len(row["doc_bytes"])
-        t_end = off_t[bi + 1] if bi + 1 < len(off_t) else len(row["tf_bytes"])
-        l_end = off_l[bi + 1] if bi + 1 < len(off_l) else len(row["dl_bytes"])
-        gaps = varint_decode(row["doc_bytes"][off_d[bi]:d_end], cnt)
-        docs = np.cumsum(gaps, dtype=np.uint64)
-        tfs = varint_decode(row["tf_bytes"][off_t[bi]:t_end], cnt)
-        dls = varint_decode(row["dl_bytes"][off_l[bi]:l_end], cnt)
-        docs = docs.astype(np.int64)
-        if deleted is not None and deleted.size:
-            # tombstone mask at the decode boundary: every downstream
-            # consumer (exhaustive sum, BMW accumulate/verify, top-k)
-            # then sees only live docs — deletes can never displace a
-            # live doc from the top-k, and block UBs (computed over the
-            # pre-delete superset) stay valid upper bounds
-            from tlhop_library_spark.index.delete import mask_deleted
-
-            docs, tfs, dls, _ = mask_deleted(docs, tfs, dls, deleted)
-        return docs, tfs, dls
-
     def score_range(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        avgdl = float(pdf["avgdl"].iloc[0])
-        # one row-Series per CHUNK, fetched once — the kernel touches
-        # rows per BLOCK (up to thousands per stopword chunk) and
-        # pdf.iloc per block was ~30% of kernel time in profiles
-        rows = [pdf.iloc[ri] for ri in range(len(pdf))]
+        tids = pdf["tid"].tolist()
         # gather per-block tasks: (ub, chunk_row_idx, block_idx)
         blocks = []
-        for ri, row in enumerate(rows):
-            idf = idf_map[row["tid"]]
-            bmax = row["block_max_w"]
+        for ri, bmax in enumerate(pdf["block_max_w"].tolist()):
+            idf = idf_map[tids[ri]]
             for bi in range(len(bmax)):
                 blocks.append((idf * float(bmax[bi]) * bound_scale, ri, bi))
         if acc_total is not None:
@@ -3642,54 +3515,23 @@ def _range_scorer(idf_map: dict[str, float], k: int, mode: str,
         if mode == "auto":
             local_mode = "bmw" if len(blocks) >= 64 else "exhaustive"
 
-        empty = pd.DataFrame({"doc_id": [], "score": []}).astype(
-            {"doc_id": "int64", "score": "float64"}
-        )
-
-        def _topk(doc_arr: np.ndarray, score_arr: np.ndarray) -> pd.DataFrame:
-            # select by the SAME ordering the oracle uses:
-            # round(score, ROUND_DIGITS) desc, doc_id asc
-            r = np.round(score_arr, bm25.ROUND_DIGITS)
-            order = np.lexsort((doc_arr, -r))[:k]
-            return pd.DataFrame(
-                {"doc_id": doc_arr[order].astype(np.int64),
-                 "score": r[order]}
-            )
-
         if local_mode == "exhaustive":
             # exhaustive decodes EVERY block, so decode whole chunks —
-            # one varint call per stream per CHUNK instead of three
-            # per 128-posting block (the per-call fixed overhead was
-            # the kernel's hottest line in profiles)
-            from tlhop_library_spark.index.phrase import decode_chunk
-
+            # one varint call per stream for all the range's chunks
+            # instead of three per 128-posting block (the per-call
+            # fixed overhead was the kernel's hottest line in profiles)
+            if acc_decoded is not None:
+                acc_decoded.add(len(blocks))
             parts_d, parts_s = [], []
-            for ri, row in enumerate(rows):
-                n_blk = len(row["block_max_w"])
-                if n_blk == 0:
-                    continue
-                if acc_decoded is not None:
-                    acc_decoded.add(n_blk)
-                docs, tfs, dls = decode_chunk(row)
-                if deleted is not None and deleted.size:
-                    from tlhop_library_spark.index.delete import (
-                        mask_deleted,
-                    )
-
-                    docs, tfs, dls, _ = mask_deleted(
-                        docs, tfs, dls, deleted
-                    )
-                w = bm25.tf_weight_np(tfs, dls, avgdl) * idf_map[row["tid"]]
-                parts_d.append(docs.astype(np.int64, copy=False))
-                parts_s.append(w)
+            for tid, docs, tfs, dls in iter_chunks(pdf, deleted):
+                parts_d.append(docs)
+                parts_s.append(bm25.tf_weight_np(tfs, dls, avgdl) * idf_map[tid])
             if not parts_d:
-                return empty
-            alldocs = np.concatenate(parts_d)
-            allsc = np.concatenate(parts_s)
-            uniq, inv = np.unique(alldocs, return_inverse=True)
-            sums = np.zeros(len(uniq), dtype=np.float64)
-            np.add.at(sums, inv, allsc)
-            return _topk(uniq, sums)
+                return empty_scores()
+            uniq, sums, _ = sum_by_doc(
+                np.concatenate(parts_d), np.concatenate(parts_s)
+            )
+            return topk_frame(uniq, sums, k)
 
         # --- bmw mode: exact prune-then-verify block-max scan ---------
         # Within one doc range a term has exactly one chunk whose blocks
@@ -3718,10 +3560,10 @@ def _range_scorer(idf_map: dict[str, float], k: int, mode: str,
         # (round-1 shape) is gone.
         PRUNE_CHUNK = 16
         blocks.sort(key=lambda x: -x[0])
-        terms_in_range = pdf["tid"].tolist()
-        remaining: dict[str, list[float]] = {}
+        reader = BlockReader(pdf)
+        remaining: dict[int, list[float]] = {}
         for ub, ri, bi in blocks:
-            remaining.setdefault(terms_in_range[ri], []).append(ub)
+            remaining.setdefault(tids[ri], []).append(ub)
         rem_best = {t: v[0] for t, v in remaining.items()}
         consumed = {t: 0 for t in remaining}
 
@@ -3746,11 +3588,10 @@ def _range_scorer(idf_map: dict[str, float], k: int, mode: str,
 
         def _merge_pending():
             nonlocal acc_docs, acc_scores, pend_d, pend_s, pend_n
-            new_docs = np.concatenate([acc_docs] + pend_d)
-            new_scores = np.concatenate([acc_scores] + pend_s)
-            acc_docs, inv = np.unique(new_docs, return_inverse=True)
-            acc_scores = np.zeros(len(acc_docs), dtype=np.float64)
-            np.add.at(acc_scores, inv, new_scores)
+            acc_docs, acc_scores, _ = sum_by_doc(
+                np.concatenate([acc_docs] + pend_d),
+                np.concatenate([acc_scores] + pend_s),
+            )
             pend_d, pend_s, pend_n = [], [], 0
 
         while pos < len(blocks):
@@ -3767,30 +3608,12 @@ def _range_scorer(idf_map: dict[str, float], k: int, mode: str,
                     break
             chunk = blocks[pos : pos + PRUNE_CHUNK]
             # batched decode: one varint call per stream for the whole
-            # 16-block chunk (LEB128 streams concatenate losslessly;
-            # doc gaps restart per block → _cum_reset on the counts).
-            # Identical arrays to per-block _decode_block, ~16× fewer
-            # fixed-overhead numpy decode calls.
-            d_parts, t_parts, l_parts = [], [], []
-            cnts = np.empty(len(chunk), dtype=np.int64)
+            # 16-block chunk, ~16× fewer fixed-overhead numpy decode
+            # calls than a call per block
             idfs = np.empty(len(chunk), dtype=np.float64)
             for ci, (ub, ri, bi) in enumerate(chunk):
-                row = rows[ri]
-                term = terms_in_range[ri]
-                off_d = row["block_doc_offsets"]
-                off_t = row["block_tf_offsets"]
-                off_l = row["block_dl_offsets"]
-                db, tb_b, lb = (row["doc_bytes"], row["tf_bytes"],
-                                row["dl_bytes"])
-                nb_r = len(off_d)
-                d_end = off_d[bi + 1] if bi + 1 < nb_r else len(db)
-                t_end = off_t[bi + 1] if bi + 1 < nb_r else len(tb_b)
-                l_end = off_l[bi + 1] if bi + 1 < nb_r else len(lb)
-                d_parts.append(db[off_d[bi]:d_end])
-                t_parts.append(tb_b[off_t[bi]:t_end])
-                l_parts.append(lb[off_l[bi]:l_end])
-                cnts[ci] = row["block_counts"][bi]
-                idfs[ci] = idf_map[row["tid"]]
+                term = tids[ri]
+                idfs[ci] = idf_map[term]
                 processed.add((ri, bi))
                 consumed[term] += 1
                 tb = remaining[term]
@@ -3799,24 +3622,12 @@ def _range_scorer(idf_map: dict[str, float], k: int, mode: str,
                 )
             if acc_decoded is not None:
                 acc_decoded.add(len(chunk))
-            n_flat = int(cnts.sum())
-            gaps = varint_decode(b"".join(d_parts), n_flat)
-            from tlhop_library_spark.index.phrase import _cum_reset
-
-            docs_f = _cum_reset(gaps.astype(np.int64), cnts)
-            tfs_f = varint_decode(b"".join(t_parts), n_flat)
-            dls_f = varint_decode(b"".join(l_parts), n_flat)
-            idf_f = np.repeat(idfs, cnts)
-            if deleted is not None and deleted.size:
-                keep = ~np.isin(docs_f, deleted)
-                if not keep.all():
-                    docs_f, tfs_f, dls_f, idf_f = (
-                        docs_f[keep], tfs_f[keep], dls_f[keep],
-                        idf_f[keep],
-                    )
+            docs_f, tfs_f, dls_f, owner = reader.decode(
+                [(ri, bi) for _, ri, bi in chunk], deleted
+            )
             pend_d.append(docs_f)
             pend_s.append(
-                bm25.tf_weight_np(tfs_f, dls_f, avgdl) * idf_f
+                bm25.tf_weight_np(tfs_f, dls_f, avgdl) * idfs[owner]
             )
             pend_n += len(docs_f)
             pos += len(chunk)
@@ -3826,7 +3637,7 @@ def _range_scorer(idf_map: dict[str, float], k: int, mode: str,
             _merge_pending()
 
         if len(acc_docs) == 0:
-            return empty
+            return empty_scores()
 
         ub_remaining = sum(rem_best.values())
         # Single-term ranges skip phase B outright: a doc appears in
@@ -3847,50 +3658,51 @@ def _range_scorer(idf_map: dict[str, float], k: int, mode: str,
             keep = acc_scores + ub_remaining >= theta - _EPS
             cand_arr = acc_docs[keep]           # sorted (slice of sorted)
             cand_scores = acc_scores[keep].copy()
-            if len(cand_arr):
-                for ub, ri, bi in blocks:
-                    if (ri, bi) in processed:
-                        continue
-                    row = rows[ri]
-                    # exact span test against the SORTED candidate set
-                    # (not a [min,max] envelope: when a rare term's
-                    # docs set θ, candidates are spread over the whole
-                    # doc space and an envelope excludes nothing — the
-                    # round-4 stress showed phase B decoding every
-                    # skipped stopword block just to find isin empty):
-                    # some candidate lies in [first_doc, last_doc] iff
-                    # the first candidate ≥ first_doc is ≤ last_doc
-                    j = int(
-                        np.searchsorted(
-                            cand_arr, int(row["block_first_docs"][bi])
-                        )
-                    )
-                    if j >= len(cand_arr) or int(cand_arr[j]) > int(
-                        row["block_last_docs"][bi]
-                    ):
-                        continue
-                    docs, tfs, dls = _decode_block(row, bi)
-                    sel = np.isin(docs, cand_arr)
-                    if not sel.any():
-                        continue
-                    w = (
-                        bm25.tf_weight_np(tfs[sel], dls[sel], avgdl)
-                        * idf_map[terms_in_range[ri]]
-                    )
-                    # docs within one block are unique → direct fancy
-                    # index add (no np.add.at needed)
-                    idx = np.searchsorted(cand_arr, docs[sel])
-                    cand_scores[idx] += w
+            first_docs = pdf["block_first_docs"].tolist()
+            last_docs = pdf["block_last_docs"].tolist()
+            picks = []
+            for ub, ri, bi in blocks:
+                if (ri, bi) in processed or not len(cand_arr):
+                    continue
+                # exact span test against the SORTED candidate set
+                # (not a [min,max] envelope: when a rare term's
+                # docs set θ, candidates are spread over the whole
+                # doc space and an envelope excludes nothing — the
+                # round-4 stress showed phase B decoding every
+                # skipped stopword block just to find isin empty):
+                # some candidate lies in [first_doc, last_doc] iff
+                # the first candidate ≥ first_doc is ≤ last_doc
+                j = int(np.searchsorted(cand_arr, int(first_docs[ri][bi])))
+                if j < len(cand_arr) and int(cand_arr[j]) <= int(
+                    last_docs[ri][bi]
+                ):
+                    picks.append((ri, bi))
+            if picks:
+                # the surviving blocks decode in one batch; a doc is in
+                # ≤ 1 block per term but may be in blocks of several
+                # terms, so contributions add with np.add.at, in block
+                # order
+                if acc_decoded is not None:
+                    acc_decoded.add(len(picks))
+                docs, tfs, dls, owner = reader.decode(picks, deleted)
+                sel = np.isin(docs, cand_arr)
+                idf_p = np.array([idf_map[tids[ri]] for ri, _ in picks])
+                w = (
+                    bm25.tf_weight_np(tfs[sel], dls[sel], avgdl)
+                    * idf_p[owner[sel]]
+                )
+                np.add.at(
+                    cand_scores, np.searchsorted(cand_arr, docs[sel]), w
+                )
             # restrict output to candidates (non-candidates may have
             # inexact partials; they are provably out of the top-k)
             acc_docs, acc_scores = cand_arr, cand_scores
             if len(acc_docs) == 0:
-                return empty
+                return empty_scores()
 
-        return _topk(acc_docs, acc_scores)
+        return topk_frame(acc_docs, acc_scores, k)
 
     return score_range
-
 
 class HitStreamModes:
     """Every mode that consumes the matching set as a hit stream —
@@ -4357,12 +4169,17 @@ class IndexReader(HitStreamModes):
         self.index_dir = index_dir
         with open(os.path.join(index_dir, "stats.json")) as f:
             self.stats = json.load(f)
-        self._dict = spark.read.parquet(os.path.join(index_dir, "dictionary"))
-        self._segments = spark.read.parquet(os.path.join(index_dir, "segments"))
+        # known schemas: a schema-less read starts a footer-reading
+        # inference job per table on every reader open
+        self._dict = spark.read.schema(DICT_DDL).parquet(
+            os.path.join(index_dir, "dictionary")
+        )
+        self._segments = spark.read.schema(
+            POS_SEGMENT_SCHEMA if self.stats.get("positions")
+            else SEGMENT_SCHEMA
+        ).parquet(os.path.join(index_dir, "segments"))
         # live-docs mask (delete.py): sorted tombstone ids or None;
         # rides into every scoring kernel's closure
-        from tlhop_library_spark.index.delete import load_tombstones
-
         self._deleted = load_tombstones(index_dir)
         self._dict_mem: dict[str, tuple[int, int, int]] | None = None
         if preload_dictionary:
@@ -4381,14 +4198,24 @@ class IndexReader(HitStreamModes):
             except Exception:
                 self._dict_mem = None
 
-    def _bound_scale(self) -> float:
-        """Pruning-bound inflation after incremental appends: stored
-        block_max_w were computed with each group's encode-time avgdl;
-        max(1, avgdl_now/min_encode_avgdl) keeps them true upper
-        bounds (see index/append.py). Exactly 1.0 for a cold build."""
-        avgdl = float(self.stats["avgdl"])
-        enc = float(self.stats.get("min_encode_avgdl", avgdl))
+    def _bound_scale(self, avgdl: "float | None" = None) -> float:
+        """Pruning-bound inflation for scoring at ``avgdl`` (default the
+        index's own): stored block_max_w were computed with each group's
+        encode-time avgdl; max(1, avgdl/min_encode_avgdl) keeps them
+        true upper bounds for ANY query-time avgdl (tf_weight is
+        monotone in avgdl) — after incremental appends (see
+        index/append.py) and under federation-global stats alike.
+        Exactly 1.0 for a cold build scored with its own stats."""
+        if avgdl is None:
+            avgdl = float(self.stats["avgdl"])
+        enc = float(self.stats.get("min_encode_avgdl", avgdl) or avgdl)
         return max(1.0, avgdl / enc) if enc > 0 else 1.0
+
+    def _idfs(self, info) -> dict[int, float]:
+        """tid → BM25 idf for resolved term info (term → (df, ...,
+        tid)), from this index's own n_docs."""
+        n_docs = self.stats["n_docs"]
+        return {v[-1]: bm25.idf(n_docs, v[0]) for v in info.values()}
 
     def lookup_terms(self, terms: list[str]) -> dict[str, tuple[int, int, int]]:
         """term → (df, bucket, tid); driver-memory map when preloaded,
@@ -4452,32 +4279,18 @@ class IndexReader(HitStreamModes):
         seg = self._segments.where(
             F.col("range_id") == int(doc_id) // range_size
         ).select(*[f.name for f in SEGMENT_SCHEMA.fields])
-        fb_ids = np.array([int(doc_id)], dtype=np.int64)
-        from tlhop_library_spark.index.phrase import decode_chunk
-
-        def doc_terms(key, pdf: pd.DataFrame) -> pd.DataFrame:
-            tids_out, w_out = [], []
-            for ri in range(len(pdf)):
-                row = pdf.iloc[ri]
-                docs_, tfs_, dls_ = decode_chunk(row)
-                m = np.isin(docs_, fb_ids, assume_unique=True)
-                if not m.any():
-                    continue
-                tids_out.append(int(row["tid"]))
-                w_out.append(
-                    float(tfs_[m][0]) / float(dls_[m][0])
-                )
-            return pd.DataFrame(
-                {"tid": pd.Series(tids_out, dtype="int64"),
-                 "w": pd.Series(w_out, dtype="float64")}
-            )
-
         n_docs = self.stats["n_docs"]
         cand = (
-            seg.groupBy("range_id")
-            .applyInPandas(doc_terms, schema="tid long, w double")
+            _ranges_apply(
+                seg, _doc_postings(np.array([int(doc_id)], dtype=np.int64)),
+                _DOC_POSTINGS_DDL,
+            )
             .groupBy("tid")
-            .agg(F.sum("w").alias("w"))
+            .agg(
+                F.sum(
+                    F.col("tf").cast("double") / F.col("dl").cast("double")
+                ).alias("w")
+            )
             .join(self._dict.select("tid", "term", "df", "bucket"), "tid")
             .withColumn(
                 "w",
@@ -4494,21 +4307,10 @@ class IndexReader(HitStreamModes):
         info = {
             r["term"]: (r["df"], r["bucket"], r["tid"]) for r in cand
         }
-        idf_map = {
-            tid: bm25.idf(n_docs, df) for (df, _, tid) in info.values()
-        }
         local = self._local_winners(
-            info, idf_map, float(self.stats["avgdl"]), k + 1, mode
+            info, self._idfs(info), float(self.stats["avgdl"]), k + 1, mode
         ).where(F.col("doc_id") != int(doc_id))
-        from tlhop_library_spark.operators.relational import ranked_topk
-
-        return ranked_topk(
-            local.withColumn(
-                "score", F.round("score", bm25.ROUND_DIGITS)
-            ),
-            [F.desc("score"), F.asc("doc_id")],
-            k,
-        ).select("rank", "doc_id", "score")
+        return _rank(local, k)
 
     def term_vectors(self, doc_ids: list[int]) -> DataFrame:
         """Lucene TermVectors API: (doc_id, term, tf, dl) for every
@@ -4520,8 +4322,6 @@ class IndexReader(HitStreamModes):
         requested ids inside the kernel, ships one row per (doc,
         term); the term names attach via a dictionary join. Tombstoned
         docs are excluded."""
-        from tlhop_library_spark.index.phrase import decode_chunk
-
         ids = np.unique(np.array([int(d) for d in doc_ids], dtype=np.int64))
         if self._deleted is not None and self._deleted.size:
             ids = ids[~np.isin(ids, self._deleted)]
@@ -4532,37 +4332,7 @@ class IndexReader(HitStreamModes):
         seg = self._segments.where(
             F.col("range_id").isin(ranges)
         ).select(*[f.name for f in SEGMENT_SCHEMA.fields])
-
-        def vec(key, pdf: pd.DataFrame) -> pd.DataFrame:
-            d_out, t_out, tf_out, dl_out = [], [], [], []
-            for ri in range(len(pdf)):
-                row = pdf.iloc[ri]
-                docs_, tfs_, dls_ = decode_chunk(row)
-                m = np.isin(docs_, ids, assume_unique=True)
-                if not m.any():
-                    continue
-                hit = docs_[m]
-                d_out.append(hit)
-                t_out.append(np.full(len(hit), int(row["tid"])))
-                tf_out.append(tfs_[m])
-                dl_out.append(dls_[m])
-            if not d_out:
-                return pd.DataFrame(
-                    {"doc_id": pd.Series([], dtype="int64"),
-                     "tid": pd.Series([], dtype="int64"),
-                     "tf": pd.Series([], dtype="int64"),
-                     "dl": pd.Series([], dtype="int64")}
-                )
-            return pd.DataFrame(
-                {"doc_id": np.concatenate(d_out).astype(np.int64),
-                 "tid": np.concatenate(t_out).astype(np.int64),
-                 "tf": np.concatenate(tf_out).astype(np.int64),
-                 "dl": np.concatenate(dl_out).astype(np.int64)}
-            )
-
-        raw = seg.groupBy("range_id").applyInPandas(
-            vec, schema="doc_id long, tid long, tf long, dl long"
-        )
+        raw = _ranges_apply(seg, _doc_postings(ids), _DOC_POSTINGS_DDL)
         # a (doc, term)'s postings may span append-boundary chunks
         summed = raw.groupBy("doc_id", "tid").agg(
             F.sum("tf").alias("tf"), F.max("dl").alias("dl")
@@ -4605,10 +4375,10 @@ class IndexReader(HitStreamModes):
     def _search_term_groups(
         self, groups: list[list[str]], k: int
     ) -> DataFrame:
-        """Shared SynonymQuery-group scoring kernel: each group of
-        member terms scores as ONE pseudo-term (tf summed across the
-        group's members per doc, idf from the max ASSIGNED-member df);
-        a term named in several groups lands in the LAST one. Used by
+        """Shared SynonymQuery-group scoring: each group of member
+        terms scores as ONE pseudo-term (tf summed across the group's
+        members per doc, idf from the max ASSIGNED-member df); a term
+        named in several groups lands in the LAST one. Used by
         :meth:`search_synonyms` (explicit synonym groups) and
         :meth:`search_bool_prefix` (prefix-expansion group)."""
         all_terms = sorted({m for g in groups for m in g})
@@ -4616,7 +4386,6 @@ class IndexReader(HitStreamModes):
         if not info:
             return self._empty()
         n_docs = self.stats["n_docs"]
-        avgdl = float(self.stats["avgdl"])
         # term → group assignment first (a term named in several
         # groups lands in the LAST one), then idf from the max df of
         # the ASSIGNED members — mirrored exactly by the SQL oracle
@@ -4636,77 +4405,11 @@ class IndexReader(HitStreamModes):
         }
         if not group_idf:
             return self._empty()
-        buckets = sorted({b for _, b, _ in info.values()})
-        tids = sorted({t for _, _, t in info.values()})
-        seg = self._segments.where(
-            F.col("bucket").isin(buckets) & F.col("tid").isin(tids)
-        ).select(*[f.name for f in SEGMENT_SCHEMA.fields])
-        deleted = self._deleted
-        from tlhop_library_spark.index.phrase import decode_chunk
-
-        def score_range(key, pdf: pd.DataFrame) -> pd.DataFrame:
-            emptyp = pd.DataFrame({"doc_id": [], "score": []}).astype(
-                {"doc_id": "int64", "score": "float64"}
-            )
-            # gather per-group member postings
-            per_group: dict[int, list] = {}
-            for ri in range(len(pdf)):
-                row = pdf.iloc[ri]
-                gi = tid_group.get(int(row["tid"]))
-                if gi is None:
-                    continue
-                docs_, tfs_, dls_ = decode_chunk(row)
-                if deleted is not None and deleted.size:
-                    from tlhop_library_spark.index.delete import (
-                        mask_deleted,
-                    )
-
-                    docs_, tfs_, dls_, _ = mask_deleted(
-                        docs_, tfs_, dls_, deleted
-                    )
-                if len(docs_):
-                    per_group.setdefault(gi, []).append(
-                        (docs_, tfs_, dls_)
-                    )
-            parts_d, parts_s = [], []
-            for gi, chunks in per_group.items():
-                docs_ = np.concatenate([c[0] for c in chunks])
-                tfs_ = np.concatenate([c[1] for c in chunks])
-                dls_ = np.concatenate([c[2] for c in chunks])
-                # SUM tf per doc across the group's members (a doc's
-                # dl is identical in every member's posting)
-                uniq, inv = np.unique(docs_, return_inverse=True)
-                tf_sum = np.zeros(len(uniq), dtype=np.float64)
-                np.add.at(tf_sum, inv, tfs_.astype(np.float64))
-                dl_u = np.zeros(len(uniq), dtype=np.float64)
-                dl_u[inv] = dls_.astype(np.float64)
-                parts_d.append(uniq)
-                parts_s.append(
-                    group_idf[gi]
-                    * bm25.tf_weight_np(tf_sum, dl_u, avgdl)
-                )
-            if not parts_d:
-                return emptyp
-            alldocs = np.concatenate(parts_d)
-            allsc = np.concatenate(parts_s)
-            uniq, inv = np.unique(alldocs, return_inverse=True)
-            sums = np.zeros(len(uniq), dtype=np.float64)
-            np.add.at(sums, inv, allsc)
-            r = np.round(sums, bm25.ROUND_DIGITS)
-            order = np.lexsort((uniq, -r))[:k]
-            return pd.DataFrame(
-                {"doc_id": uniq[order].astype(np.int64),
-                 "score": r[order]}
-            )
-
-        local = seg.groupBy("range_id").applyInPandas(
-            score_range, schema=_SCORE_SCHEMA
+        scorer = term_groups_range_scorer(
+            tid_group, group_idf, float(self.stats["avgdl"]), k,
+            self._deleted,
         )
-        from tlhop_library_spark.operators.relational import ranked_topk
-
-        return ranked_topk(
-            local, [F.desc("score"), F.asc("doc_id")], k
-        ).select("rank", "doc_id", "score")
+        return _rank(_ranges_apply(self._pruned_segments(info), scorer), k)
 
     def search_page(
         self, query_text: str, page_size: int = 10, offset: int = 0,
@@ -4741,11 +4444,7 @@ class IndexReader(HitStreamModes):
         scorer = similarity_range_scorer(
             weight_of, k, deleted=self._deleted
         )
-        local = self._pruned_segments(info).groupBy("range_id").applyInPandas(
-            lambda key, pdf: scorer(key, pdf), schema=_SCORE_SCHEMA
-        )
-        from tlhop_library_spark.operators.relational import ranked_topk
-
+        local = _ranges_apply(self._pruned_segments(info), scorer)
         return ranked_topk(
             local.select("doc_id"), [F.asc("doc_id")], k
         ).select(
@@ -4781,14 +4480,7 @@ class IndexReader(HitStreamModes):
             self._bm25_weight_fns(info), k, deleted=self._deleted,
             after=(float(after[0]), int(after[1])),
         )
-        local = self._pruned_segments(info).groupBy("range_id").applyInPandas(
-            lambda key, pdf: scorer(key, pdf), schema=_SCORE_SCHEMA
-        )
-        from tlhop_library_spark.operators.relational import ranked_topk
-
-        return ranked_topk(
-            local, [F.desc("score"), F.asc("doc_id")], k
-        ).select("rank", "doc_id", "score")
+        return _rank(_ranges_apply(self._pruned_segments(info), scorer), k)
 
     def search_expanded(
         self, query_text: str, k: int = 10, fb_docs: int = 5,
@@ -4877,8 +4569,6 @@ class IndexReader(HitStreamModes):
             nrows = len(pdf)
             if nrows == 0:
                 return empty_out
-            from tlhop_library_spark.index.phrase import _cum_reset
-
             bf_l = pdf["block_first_docs"].tolist()
             bl_l = pdf["block_last_docs"].tolist()
             nb = np.fromiter((len(x) for x in bf_l), dtype=np.int64,
@@ -4985,15 +4675,7 @@ class IndexReader(HitStreamModes):
         local = self._local_winners(
             new_info, idf_map, float(self.stats["avgdl"]), k, mode
         )
-        from tlhop_library_spark.operators.relational import ranked_topk
-
-        return ranked_topk(
-            local.withColumn(
-                "score", F.round("score", bm25.ROUND_DIGITS)
-            ),
-            [F.desc("score"), F.asc("doc_id")],
-            k,
-        ).select("rank", "doc_id", "score")
+        return _rank(local, k)
 
     def term_stats(self, terms: list[str] | None = None) -> DataFrame:
         """Per-term corpus statistics straight from the dictionary —
@@ -5065,38 +4747,9 @@ class IndexReader(HitStreamModes):
         ``keep`` — the decode half of :meth:`explain`, shared with
         :class:`ShardedIndexReader` (which passes federation-global
         idf values)."""
-        buckets = sorted({b for _, b, _ in info.values()})
-        tids = sorted({t for _, _, t in info.values()})
-        seg = self._segments.where(
-            F.col("bucket").isin(buckets) & F.col("tid").isin(tids)
-        ).select(*[f.name for f in SEGMENT_SCHEMA.fields])
-        from tlhop_library_spark.index.phrase import decode_chunk
-
-        def emit(key, pdf: pd.DataFrame) -> pd.DataFrame:
-            cols = {"doc_id": [], "tid": [], "tf": [], "dl": []}
-            for ri in range(len(pdf)):
-                row = pdf.iloc[ri]
-                docs_, tfs_, dls_ = decode_chunk(row)
-                m = np.isin(docs_, keep, assume_unique=True)
-                if not m.any():
-                    continue
-                cols["doc_id"].append(docs_[m])
-                cols["tf"].append(tfs_[m])
-                cols["dl"].append(dls_[m])
-                cols["tid"].append(
-                    np.full(int(m.sum()), int(row["tid"]), dtype=np.int64)
-                )
-            if not cols["doc_id"]:
-                return pd.DataFrame(
-                    {c: pd.Series([], dtype="int64") for c in cols}
-                )
-            return pd.DataFrame(
-                {c: np.concatenate(v).astype(np.int64)
-                 for c, v in cols.items()}
-            )
-
-        rows = seg.groupBy("range_id").applyInPandas(
-            emit, schema="doc_id long, tid long, tf long, dl long"
+        rows = _ranges_apply(
+            self._pruned_segments(info), _doc_postings(keep),
+            _DOC_POSTINGS_DDL,
         )
         lut = self.spark.createDataFrame(
             [
@@ -5124,44 +4777,27 @@ class IndexReader(HitStreamModes):
         info = self.lookup_terms(terms)
         if not info or (match == "all" and len(info) < len(terms)):
             return zero
-        buckets = sorted({b for _, b, _ in info.values()})
-        tids = sorted({t for _, _, t in info.values()})
-        seg = self._segments.where(
-            F.col("bucket").isin(buckets) & F.col("tid").isin(tids)
-        ).select(*[f.name for f in SEGMENT_SCHEMA.fields])
         deleted = self._deleted
-        n_terms = len(tids)
-        from tlhop_library_spark.index.phrase import decode_chunk
+        n_terms = len(info)
 
         def count_range(key, pdf: pd.DataFrame) -> pd.DataFrame:
-            per_tid: dict[int, list] = {}
-            for ri in range(len(pdf)):
-                row = pdf.iloc[ri]
-                docs_, _, _ = decode_chunk(row)
-                per_tid.setdefault(int(row["tid"]), []).append(docs_)
-            out = pd.DataFrame({"n": pd.Series([0], dtype="int64")})
-            if not per_tid:
-                return out
-            if match == "all" and len(per_tid) < n_terms:
-                return out
             lists = sorted(
-                (np.concatenate(v) for v in per_tid.values()), key=len
+                (v[0] for v in term_postings(pdf, deleted).values()),
+                key=len,
             )
-            if match == "any":
-                hits = np.unique(np.concatenate(lists))
+            if not lists or (match == "all" and len(lists) < n_terms):
+                n = 0
+            elif match == "any":
+                n = np.unique(np.concatenate(lists)).size
             else:
                 hits = lists[0]
                 for arr in lists[1:]:
-                    if hits.size == 0:
-                        return out
                     hits = hits[np.isin(hits, arr)]
-            if deleted is not None and deleted.size:
-                hits = hits[~np.isin(hits, deleted)]
-            out["n"] = np.int64(hits.size)
-            return out
+                n = hits.size
+            return pd.DataFrame({"n": pd.Series([n], dtype="int64")})
 
-        counts = seg.groupBy("range_id").applyInPandas(
-            count_range, schema="n long"
+        counts = _ranges_apply(
+            self._pruned_segments(info), count_range, "n long"
         )
         return counts.agg(
             F.coalesce(F.sum("n"), F.lit(0)).cast("long").alias("n_docs")
@@ -5176,24 +4812,10 @@ class IndexReader(HitStreamModes):
         expansion, and any caller that rewrites terms before scoring."""
         if not info:
             return self._empty()
-        n_docs = self.stats["n_docs"]
-        idf_map = {
-            tid: bm25.idf(n_docs, df) for (df, _, tid) in info.values()
-        }
-        local = self._local_winners(
-            info, idf_map, float(self.stats["avgdl"]), k, mode,
+        return _rank(self._local_winners(
+            info, self._idfs(info), float(self.stats["avgdl"]), k, mode,
             with_pruning_stats,
-        )
-        from tlhop_library_spark.operators.relational import ranked_topk
-
-        # global merge: TakeOrderedAndProject over the ≤ k·n_ranges
-        # local winners (k per range leave the executors), then rank
-        # the ≤k survivors
-        return ranked_topk(
-            local.withColumn("score", F.round("score", bm25.ROUND_DIGITS)),
-            [F.desc("score"), F.asc("doc_id")],
-            k,
-        ).select("rank", "doc_id", "score")
+        ), k)
 
     def _local_winners(
         self, info: dict[str, tuple[int, int, int]],
@@ -5203,37 +4825,18 @@ class IndexReader(HitStreamModes):
         """Per-range local top-k winners (doc_id, score) for a resolved
         term set, scored with the CALLER's idf_map/avgdl — the corpus
         stats for a plain search, or the federation-global stats when
-        called from :class:`ShardedIndexReader` (index/sharded.py).
-
-        Stored ``block_max_w`` bounds bake each group's encode-time
-        avgdl in; ``max(1, avgdl/min_encode_avgdl)`` keeps them true
-        upper bounds for ANY query-time avgdl ≥ 0 (tf_weight is
-        monotone in avgdl) — the same mechanism the append path uses,
-        so pruning stays exact under global-stats scoring too."""
-        buckets = sorted({b for _, b, _ in info.values()})
-        tids = sorted({t for _, _, t in info.values()})
-        # explicit column pruning: a POSITIONAL index carries pos_bytes /
-        # block_pos_offsets; plain BM25 must never read (or ship to
-        # Python) those streams
-        seg = self._segments.where(
-            F.col("bucket").isin(buckets) & F.col("tid").isin(tids)
-        ).select(
-            *[f.name for f in SEGMENT_SCHEMA.fields]
-        ).withColumn("avgdl", F.lit(avgdl))
+        called from :class:`ShardedIndexReader` (index/sharded.py);
+        :meth:`_bound_scale` keeps block-max pruning exact for either."""
         acc_d = acc_t = None
         if with_pruning_stats:
             sc = self.spark.sparkContext
             acc_d, acc_t = sc.accumulator(0), sc.accumulator(0)
             self._acc = (acc_d, acc_t)
-        enc = float(self.stats.get("min_encode_avgdl", avgdl) or avgdl)
-        bound_scale = max(1.0, avgdl / enc) if enc > 0 else 1.0
         scorer = _range_scorer(
-            idf_map, k, mode, acc_d, acc_t,
-            bound_scale=bound_scale, deleted=self._deleted,
+            idf_map, k, mode, avgdl, self._bound_scale(avgdl),
+            self._deleted, acc_d, acc_t,
         )
-        return seg.groupBy("range_id").applyInPandas(
-            lambda key, pdf: scorer(key, pdf), schema=_SCORE_SCHEMA
-        )
+        return _ranges_apply(self._pruned_segments(info), scorer)
 
     def _pa_segments(self):
         """Memoized pyarrow dataset over the segment tree (hive
@@ -5277,23 +4880,26 @@ class IndexReader(HitStreamModes):
             os.path.join(self.index_dir, "metrics")
         )
 
-    def _local_chunks(self, info, schema_fields) -> "pd.DataFrame | None":
-        """Driver-side chunk fetch for a resolved term set: pyarrow
-        scan pruned to the terms' (bucket, tid) sets, avgdl attached."""
+    def _local_parts(self, info, scorer,
+                     fields=SEGMENT_SCHEMA.fields) -> list:
+        """Driver-side per-range kernel outputs for a resolved term
+        set: a pyarrow scan pruned to the terms' (bucket, tid) sets,
+        then ``scorer`` per range — no Spark job."""
         import pyarrow.dataset as ds
 
-        buckets = sorted({b for _, b, _ in info.values()})
-        tids = sorted({t for _, _, t in info.values()})
+        if not info:
+            return []
+        buckets = sorted({v[-2] for v in info.values()})
+        tids = sorted({v[-1] for v in info.values()})
         tbl = self._pa_segments().to_table(
-            columns=[f.name for f in schema_fields],
+            columns=[f.name for f in fields],
             filter=ds.field("bucket").isin(buckets)
             & ds.field("tid").isin(tids),
         )
-        if tbl.num_rows == 0:
-            return None
-        pdf = tbl.to_pandas()
-        pdf["avgdl"] = float(self.stats["avgdl"])
-        return pdf
+        return [
+            scorer((rid,), g)
+            for rid, g in tbl.to_pandas().groupby("range_id", sort=False)
+        ]
 
     def _merge_local_topk(self, parts: list, k: int) -> DataFrame:
         """Merge per-range kernel outputs exactly like the distributed
@@ -5301,6 +4907,14 @@ class IndexReader(HitStreamModes):
         d, r = _merge_topk(parts, k)
         rank = np.arange(1, len(d) + 1, dtype=np.int32)
         return _local_frame(self.spark, _RANKED_SCHEMA, [rank, d, r])
+
+    def _serve_local(self, info, scorer, fields, k: int) -> DataFrame:
+        """The driver-served answer of a per-range kernel over the
+        terms ``info`` resolves: :meth:`_local_parts` merged by
+        :meth:`_merge_local_topk`."""
+        return self._merge_local_topk(
+            self._local_parts(info, scorer, fields), k
+        )
 
     def search_local(
         self, query_text: str, k: int = 10, mode: str = "auto"
@@ -5319,26 +4933,12 @@ class IndexReader(HitStreamModes):
         postings are small; for head terms use :meth:`search_serve`,
         which routes by estimated posting bytes — a 10^12-doc "the"
         must stay on the distributed scan."""
-        terms = sorted(set(py_tokens(query_text)))
-        info = self.lookup_terms(terms)
-        if not info:
-            return self._merge_local_topk([], k)
-        n_docs = self.stats["n_docs"]
-        idf_map = {
-            tid: bm25.idf(n_docs, df) for (df, _, tid) in info.values()
-        }
-        pdf = self._local_chunks(info, SEGMENT_SCHEMA.fields)
-        if pdf is None:
-            return self._merge_local_topk([], k)
+        info = self.lookup_terms(sorted(set(py_tokens(query_text))))
         scorer = _range_scorer(
-            idf_map, k, mode, None, None,
-            bound_scale=self._bound_scale(), deleted=self._deleted,
+            self._idfs(info), k, mode, float(self.stats["avgdl"]),
+            self._bound_scale(), self._deleted,
         )
-        parts = [
-            scorer((rid,), g)
-            for rid, g in pdf.groupby("range_id", sort=False)
-        ]
-        return self._merge_local_topk(parts, k)
+        return self._serve_local(info, scorer, SEGMENT_SCHEMA.fields, k)
 
     def search_phrase_local(
         self, phrase_text: str, k: int = 10
@@ -5346,69 +4946,24 @@ class IndexReader(HitStreamModes):
         """Serving-path twin of :meth:`search_phrase`: the positional
         chunks of the phrase's terms are read driver-side and the SAME
         phrase kernel runs per range — rank-identical, no Spark job."""
-        from tlhop_library_spark.index.phrase import phrase_range_scorer
-
-        if not self.stats.get("positions"):
-            raise ValueError(
-                "phrase/proximity queries need a positional index"
-            )
         slots = py_tokens(phrase_text)
-        if not slots:
-            return self._merge_local_topk([], k)
-        info = self.lookup_terms(sorted(set(slots)))
-        if len(info) < len(set(slots)):
-            return self._merge_local_topk([], k)
-        n_docs = self.stats["n_docs"]
-        idf_map = {
-            tid: bm25.idf(n_docs, df) for (df, _, tid) in info.values()
-        }
-        pdf = self._local_chunks(info, POS_SEGMENT_SCHEMA.fields)
-        if pdf is None:
-            return self._merge_local_topk([], k)
+        info = self._positional_info(slots)
         scorer = phrase_range_scorer(
-            [info[t][2] for t in slots], idf_map, k,
-            deleted=self._deleted,
+            [info[t][2] for t in slots if t in info], self._idfs(info),
+            float(self.stats["avgdl"]), k, self._deleted,
         )
-        parts = [
-            scorer((rid,), g)
-            for rid, g in pdf.groupby("range_id", sort=False)
-        ]
-        return self._merge_local_topk(parts, k)
+        return self._serve_local(info, scorer, POS_SEGMENT_SCHEMA.fields, k)
 
     def search_proximity_local(
         self, query_text: str, window: int, k: int = 10
     ) -> DataFrame:
         """Serving-path twin of :meth:`search_proximity`."""
-        from tlhop_library_spark.index.phrase import (
-            proximity_range_scorer,
-        )
-
-        if not self.stats.get("positions"):
-            raise ValueError(
-                "phrase/proximity queries need a positional index"
-            )
-        terms = sorted(set(py_tokens(query_text)))
-        if not terms:
-            return self._merge_local_topk([], k)
-        info = self.lookup_terms(terms)
-        if len(info) < len(terms):
-            return self._merge_local_topk([], k)
-        n_docs = self.stats["n_docs"]
-        idf_map = {
-            tid: bm25.idf(n_docs, df) for (df, _, tid) in info.values()
-        }
-        pdf = self._local_chunks(info, POS_SEGMENT_SCHEMA.fields)
-        if pdf is None:
-            return self._merge_local_topk([], k)
+        info = self._positional_info(sorted(set(py_tokens(query_text))))
         scorer = proximity_range_scorer(
-            sorted(info[t][2] for t in terms), idf_map, window, k,
-            deleted=self._deleted,
+            sorted(v[2] for v in info.values()), self._idfs(info),
+            float(self.stats["avgdl"]), window, k, self._deleted,
         )
-        parts = [
-            scorer((rid,), g)
-            for rid, g in pdf.groupby("range_id", sort=False)
-        ]
-        return self._merge_local_topk(parts, k)
+        return self._serve_local(info, scorer, POS_SEGMENT_SCHEMA.fields, k)
 
     def search_serve(
         self, query_text: str, k: int = 10, mode: str = "auto",
@@ -5432,8 +4987,9 @@ class IndexReader(HitStreamModes):
 
         A driver-served answer (the driver route, and every query with
         no dictionary term) is a DataFrame over an Arrow table held on
-        the driver. ``collect()``, ``count()``, ``schema`` and
-        ``toArrow()`` stay on the driver: no Py4J call, no Spark job,
+        the driver. ``collect()``, ``take()``/``head()``/``first()``,
+        ``count()``, ``schema`` and ``toArrow()`` stay on the driver:
+        no Py4J call, no Spark job,
         zero matches included. Any other DataFrame call (``where``,
         ``join``, ``orderBy``, ``toPandas``, ``write``...) first builds
         the answer's Arrow local relation in the JVM, once, and then
@@ -5667,8 +5223,6 @@ class IndexReader(HitStreamModes):
         agg = scored.groupBy("suggestion").agg(
             F.round(F.sum("logp"), 4).alias("score")
         )
-        from tlhop_library_spark.operators.relational import ranked_topk
-
         return ranked_topk(
             agg, [F.desc("score"), F.asc("suggestion")], n
         ).select("rank", "suggestion", "score")
@@ -5758,8 +5312,6 @@ class IndexReader(HitStreamModes):
                 ),
             )
         )
-        from tlhop_library_spark.operators.relational import ranked_topk
-
         return ranked_topk(
             scored, [F.desc("score"), F.asc("term")], m
         ).select(
@@ -5775,8 +5327,6 @@ class IndexReader(HitStreamModes):
         (term, range) are doc-disjoint, so partials sum exactly);
         ``hits`` is the matching doc_id stream. The full segment scan
         is broadcast-semi-join-pruned to ranges containing a hit."""
-        from tlhop_library_spark.index.phrase import decode_chunk
-
         hits = self._matching_scores(query_text).select("doc_id")
         range_size = int(self.stats["range_size"])
         hits_r = hits.select(
@@ -5791,21 +5341,14 @@ class IndexReader(HitStreamModes):
         ).join(F.broadcast(hit_ranges), "range_id", "left_semi")
 
         def fg_kernel(key, seg_pdf: pd.DataFrame, hit_pdf: pd.DataFrame):
-            out = {"tid": pd.Series([], dtype="int64"),
-                   "fg": pd.Series([], dtype="int64")}
-            if not len(seg_pdf) or not len(hit_pdf):
-                return pd.DataFrame(out)
-            ids = np.unique(hit_pdf["doc_id"].to_numpy(np.int64))
             tids, fgs = [], []
-            for ri in range(len(seg_pdf)):
-                row = seg_pdf.iloc[ri]
-                docs_, _, _ = decode_chunk(row)
-                n = int(np.isin(docs_, ids, assume_unique=True).sum())
-                if n:
-                    tids.append(int(row["tid"]))
-                    fgs.append(n)
-            if not tids:
-                return pd.DataFrame(out)
+            if len(seg_pdf) and len(hit_pdf):
+                ids = np.unique(hit_pdf["doc_id"].to_numpy(np.int64))
+                for tid, docs, _, _ in iter_chunks(seg_pdf):
+                    n = int(np.isin(docs, ids, assume_unique=True).sum())
+                    if n:
+                        tids.append(tid)
+                        fgs.append(n)
             return pd.DataFrame(
                 {"tid": np.array(tids, dtype=np.int64),
                  "fg": np.array(fgs, dtype=np.int64)}
@@ -5886,10 +5429,8 @@ class IndexReader(HitStreamModes):
         scorer = counted_range_scorer(
             self._bm25_weight_fns(info), deleted=self._deleted
         )
-        return self._pruned_segments(info).groupBy(
-            "range_id"
-        ).applyInPandas(
-            lambda key, pdf: scorer(key, pdf), schema=_COUNTED_SCHEMA
+        return _ranges_apply(
+            self._pruned_segments(info), scorer, _COUNTED_SCHEMA
         )
 
     def facet_counts(
@@ -5906,28 +5447,15 @@ class IndexReader(HitStreamModes):
         info = self.lookup_terms(terms)
         if not info:
             return _local_frame(self.spark, _FACET_SCHEMA)
-        buckets = sorted({b for _, b, _ in info.values()})
-        tids = sorted({tid for _, _, tid in info.values()})
-        seg = self._segments.where(
-            F.col("bucket").isin(buckets) & F.col("tid").isin(tids)
-        ).select(*[f.name for f in SEGMENT_SCHEMA.fields])
         deleted = self._deleted
-        from tlhop_library_spark.index.phrase import decode_chunk
 
         def matching_docs(key, pdf: pd.DataFrame) -> pd.DataFrame:
-            parts = []
-            for ri in range(len(pdf)):
-                docs_, _, _ = decode_chunk(pdf.iloc[ri])
-                parts.append(docs_)
-            if not parts:
-                return pd.DataFrame({"doc_id": []}).astype({"doc_id": "int64"})
-            uniq = np.unique(np.concatenate(parts))
-            if deleted is not None and deleted.size:
-                uniq = uniq[~np.isin(uniq, deleted)]
-            return pd.DataFrame({"doc_id": uniq.astype(np.int64)})
+            docs = [np.empty(0, np.int64)]
+            docs += [c[1] for c in iter_chunks(pdf, deleted)]
+            return pd.DataFrame({"doc_id": np.unique(np.concatenate(docs))})
 
-        hits = seg.groupBy("range_id").applyInPandas(
-            matching_docs, schema="doc_id long"
+        hits = _ranges_apply(
+            self._pruned_segments(info), matching_docs, "doc_id long"
         )
         meta = docs.select(
             F.col("doc_id").cast("long").alias("doc_id"),
@@ -5941,39 +5469,11 @@ class IndexReader(HitStreamModes):
         self, query_text: str, k: int = 10
     ) -> DataFrame:
         """AND-semantics top-k: only docs containing EVERY query term,
-        BM25-ranked. (rank, doc_id, score). Candidate docs shrink to
-        the rarest term's df, so the per-range kernel intersects
-        rarest-first instead of block-max scanning."""
-        terms = sorted(set(py_tokens(query_text)))
-        info = self.lookup_terms(terms)
-        if not terms or len(info) < len(terms):
-            # some term matches nothing → AND is empty
-            return self._empty()
-        n_docs = self.stats["n_docs"]
-        avgdl = self.stats["avgdl"]
-        idf_map = {
-            tid: bm25.idf(n_docs, df) for (df, _, tid) in info.values()
-        }
-        buckets = sorted({b for _, b, _ in info.values()})
-        tids = sorted(idf_map)
-        seg = self._segments.where(
-            F.col("bucket").isin(buckets) & F.col("tid").isin(tids)
-        ).select(
-            *[f.name for f in SEGMENT_SCHEMA.fields]
-        ).withColumn("avgdl", F.lit(avgdl))
-        scorer = conjunctive_range_scorer(
-            tids, idf_map, k, deleted=self._deleted
-        )
-        local = seg.groupBy("range_id").applyInPandas(
-            lambda key, pdf: scorer(key, pdf), schema=_SCORE_SCHEMA
-        )
-        from tlhop_library_spark.operators.relational import ranked_topk
-
-        return ranked_topk(
-            local.withColumn("score", F.round("score", bm25.ROUND_DIGITS)),
-            [F.desc("score"), F.asc("doc_id")],
-            k,
-        ).select("rank", "doc_id", "score")
+        BM25-ranked. (rank, doc_id, score). Minimum-should-match with
+        the threshold at the number of distinct query terms
+        (:meth:`search_msm`): an absent term matches nothing, and a
+        doc qualifies only when it holds every term."""
+        return self.search_msm(query_text, k, len(set(py_tokens(query_text))))
 
     def lookup_terms_full(
         self, terms: list[str]
@@ -6013,22 +5513,10 @@ class IndexReader(HitStreamModes):
             similarity, info, self.stats["n_docs"],
             int(self.stats["sum_dl"]),
         )
-        buckets = sorted({b for _, _, b, _ in info.values()})
-        tids = sorted(weight_of)
-        seg = self._segments.where(
-            F.col("bucket").isin(buckets) & F.col("tid").isin(tids)
-        ).select(*[f.name for f in SEGMENT_SCHEMA.fields])
         scorer = similarity_range_scorer(
             weight_of, k, deleted=self._deleted
         )
-        local = seg.groupBy("range_id").applyInPandas(
-            lambda key, pdf: scorer(key, pdf), schema=_SCORE_SCHEMA
-        )
-        from tlhop_library_spark.operators.relational import ranked_topk
-
-        return ranked_topk(
-            local, [F.desc("score"), F.asc("doc_id")], k
-        ).select("rank", "doc_id", "score")
+        return _rank(_ranges_apply(self._pruned_segments(info), scorer), k)
 
     def search_rescore(
         self, query_text: str, k: int = 10, window: int = 50,
@@ -6064,9 +5552,7 @@ class IndexReader(HitStreamModes):
         scorer = similarity_range_scorer(
             weight_of, None, deleted=self._deleted
         )
-        sec = self._pruned_segments(info).groupBy("range_id").applyInPandas(
-            lambda key, pdf: scorer(key, pdf), schema=_SCORE_SCHEMA
-        )
+        sec = _ranges_apply(self._pruned_segments(info), scorer)
         combined = (
             sec.select("doc_id", F.col("score").alias("__s2"))
             .join(
@@ -6086,8 +5572,6 @@ class IndexReader(HitStreamModes):
                 ).alias("score"),
             )
         )
-        from tlhop_library_spark.operators.relational import ranked_topk
-
         return ranked_topk(
             combined, [F.desc("score"), F.asc("doc_id")], k
         ).select("rank", "doc_id", "score")
@@ -6104,13 +5588,16 @@ class IndexReader(HitStreamModes):
             boosts=boosts,
         )
 
-    def _pruned_segments(self, info):
-        """(bucket, tid)-pruned segment scan for a resolved query."""
-        buckets = sorted({b for *_, b, _ in info.values()})
-        tids = sorted({t for *_, t in info.values()})
+    def _pruned_segments(self, info, schema: StructType = SEGMENT_SCHEMA):
+        """(bucket, tid)-pruned segment scan for a resolved query,
+        column-pruned to ``schema``: a POSITIONAL index carries
+        pos_bytes / block_pos_offsets, which plain BM25 must never read
+        (or ship to Python)."""
+        buckets = sorted({v[-2] for v in info.values()})
+        tids = sorted({v[-1] for v in info.values()})
         return self._segments.where(
             F.col("bucket").isin(buckets) & F.col("tid").isin(tids)
-        ).select(*[f.name for f in SEGMENT_SCHEMA.fields])
+        ).select(*[f.name for f in schema.fields])
 
     def search_boosted(self, boosted_query: str, k: int = 10) -> DataFrame:
         """Top-k under per-term query boosts — Lucene ``term^2.5``
@@ -6124,14 +5611,7 @@ class IndexReader(HitStreamModes):
         scorer = similarity_range_scorer(
             self._bm25_weight_fns(info, boosts), k, deleted=self._deleted
         )
-        local = self._pruned_segments(info).groupBy("range_id").applyInPandas(
-            lambda key, pdf: scorer(key, pdf), schema=_SCORE_SCHEMA
-        )
-        from tlhop_library_spark.operators.relational import ranked_topk
-
-        return ranked_topk(
-            local, [F.desc("score"), F.asc("doc_id")], k
-        ).select("rank", "doc_id", "score")
+        return _rank(_ranges_apply(self._pruned_segments(info), scorer), k)
 
     def search_dismax(
         self, query_text: str, k: int = 10, tie_breaker: float = 0.0
@@ -6148,14 +5628,7 @@ class IndexReader(HitStreamModes):
             self._bm25_weight_fns(info), k, float(tie_breaker),
             deleted=self._deleted,
         )
-        local = self._pruned_segments(info).groupBy("range_id").applyInPandas(
-            lambda key, pdf: scorer(key, pdf), schema=_SCORE_SCHEMA
-        )
-        from tlhop_library_spark.operators.relational import ranked_topk
-
-        return ranked_topk(
-            local, [F.desc("score"), F.asc("doc_id")], k
-        ).select("rank", "doc_id", "score")
+        return _rank(_ranges_apply(self._pruned_segments(info), scorer), k)
 
     def _matching_scores(self, query_text: str) -> DataFrame:
         """(doc_id, score) for EVERY doc matching the OR query — the
@@ -6170,9 +5643,7 @@ class IndexReader(HitStreamModes):
         scorer = similarity_range_scorer(
             self._bm25_weight_fns(info), None, deleted=self._deleted
         )
-        return self._pruned_segments(info).groupBy("range_id").applyInPandas(
-            lambda key, pdf: scorer(key, pdf), schema=_SCORE_SCHEMA
-        )
+        return _ranges_apply(self._pruned_segments(info), scorer)
 
     def search_sorted_by(
         self, query_text: str, docs: DataFrame, field: str, k: int = 10,
@@ -6197,8 +5668,6 @@ class IndexReader(HitStreamModes):
             docs.select("doc_id", F.col(field).cast("long").alias(field)),
             "doc_id",
         )
-        from tlhop_library_spark.operators.relational import ranked_topk
-
         order = (
             F.asc_nulls_last(field) if ascending
             else F.desc_nulls_last(field)
@@ -6247,8 +5716,6 @@ class IndexReader(HitStreamModes):
             .where(F.col("__rn") == 1)
             .drop("__rn")
         )
-        from tlhop_library_spark.operators.relational import ranked_topk
-
         return ranked_topk(
             best, [F.desc("score"), F.asc("doc_id")], k
         ).select("rank", group_field, "doc_id", "score")
@@ -6297,31 +5764,12 @@ class IndexReader(HitStreamModes):
         # threshold counts the query's clauses, not the resolvable ones)
         if not info or len(info) < m:
             return self._empty()
-        n_docs = self.stats["n_docs"]
-        avgdl = self.stats["avgdl"]
-        idf_map = {
-            tid: bm25.idf(n_docs, df) for (df, _, tid) in info.values()
-        }
-        buckets = sorted({b for _, b, _ in info.values()})
-        tids = sorted(idf_map)
-        seg = self._segments.where(
-            F.col("bucket").isin(buckets) & F.col("tid").isin(tids)
-        ).select(
-            *[f.name for f in SEGMENT_SCHEMA.fields]
-        ).withColumn("avgdl", F.lit(avgdl))
+        idf_map = self._idfs(info)
         scorer = msm_range_scorer(
-            tids, idf_map, k, m, deleted=self._deleted
+            sorted(idf_map), idf_map, float(self.stats["avgdl"]), k, m,
+            deleted=self._deleted,
         )
-        local = seg.groupBy("range_id").applyInPandas(
-            lambda key, pdf: scorer(key, pdf), schema=_SCORE_SCHEMA
-        )
-        from tlhop_library_spark.operators.relational import ranked_topk
-
-        return ranked_topk(
-            local.withColumn("score", F.round("score", bm25.ROUND_DIGITS)),
-            [F.desc("score"), F.asc("doc_id")],
-            k,
-        ).select("rank", "doc_id", "score")
+        return _rank(_ranges_apply(self._pruned_segments(info), scorer), k)
 
     def search_boolean(self, query_text: str, k: int = 10) -> DataFrame:
         """Boolean-matched BM25 top-k over a Lucene-flavored
@@ -6330,12 +5778,6 @@ class IndexReader(HitStreamModes):
         ValueError. Scale shape = plain indexed search: one pruned
         segment scan, per-range kernels, k rows per range leave the
         executors."""
-        from tlhop_library_spark.index.boolq import (
-            boolean_range_scorer,
-            compile_query,
-            subst_tids,
-        )
-
         nnf, all_terms, pos_terms = compile_query(query_text)
         info = self.lookup_terms(all_terms)
         tid_of = {t: tid for t, (_, _, tid) in info.items()}
@@ -6345,29 +5787,11 @@ class IndexReader(HitStreamModes):
         )
         if not pos_tids:
             return self._empty()
-        n_docs = self.stats["n_docs"]
-        avgdl = self.stats["avgdl"]
-        idf_map = {
-            tid: bm25.idf(n_docs, df) for (df, _, tid) in info.values()
-        }
-        buckets = sorted({b for _, b, _ in info.values()})
-        seg = self._segments.where(
-            F.col("bucket").isin(buckets)
-            & F.col("tid").isin(sorted(idf_map))
-        ).select(
-            *[f.name for f in SEGMENT_SCHEMA.fields]
-        ).withColumn("avgdl", F.lit(avgdl))
         scorer = boolean_range_scorer(
-            nnf_tid, pos_tids, idf_map, k, deleted=self._deleted
+            nnf_tid, pos_tids, self._idfs(info), float(self.stats["avgdl"]),
+            k, deleted=self._deleted,
         )
-        local = seg.groupBy("range_id").applyInPandas(
-            lambda key, pdf: scorer(key, pdf), schema=_SCORE_SCHEMA
-        )
-        from tlhop_library_spark.operators.relational import ranked_topk
-
-        return ranked_topk(
-            local, [F.desc("score"), F.asc("doc_id")], k
-        ).select("rank", "doc_id", "score")
+        return _rank(_ranges_apply(self._pruned_segments(info), scorer), k)
 
     def search_filtered(
         self, query_text: str, allowed: DataFrame, k: int = 10
@@ -6386,18 +5810,6 @@ class IndexReader(HitStreamModes):
         info = self.lookup_terms(terms)
         if not info:
             return self._empty()
-        n_docs = self.stats["n_docs"]
-        avgdl = self.stats["avgdl"]
-        idf_map = {
-            tid: bm25.idf(n_docs, df) for (df, _, tid) in info.values()
-        }
-        buckets = sorted({b for _, b, _ in info.values()})
-        seg = self._segments.where(
-            F.col("bucket").isin(buckets)
-            & F.col("tid").isin(sorted(idf_map))
-        ).select(
-            *[f.name for f in SEGMENT_SCHEMA.fields]
-        ).withColumn("avgdl", F.lit(avgdl))
         range_size = int(self.stats["range_size"])
         allow = allowed.select(
             F.col("doc_id").cast("long").alias("doc_id"),
@@ -6405,20 +5817,19 @@ class IndexReader(HitStreamModes):
             .cast("int")
             .alias("range_id"),
         )
-        scorer = filtered_range_scorer(idf_map, k, deleted=self._deleted)
+        scorer = filtered_range_scorer(
+            self._idfs(info), float(self.stats["avgdl"]), k,
+            deleted=self._deleted,
+        )
         local = (
-            seg.groupBy("range_id")
+            self._pruned_segments(info).groupBy("range_id")
             .cogroup(allow.groupBy("range_id"))
             .applyInPandas(
                 lambda key, left, right: scorer(key, left, right),
                 schema=_SCORE_SCHEMA,
             )
         )
-        from tlhop_library_spark.operators.relational import ranked_topk
-
-        return ranked_topk(
-            local, [F.desc("score"), F.asc("doc_id")], k
-        ).select("rank", "doc_id", "score")
+        return _rank(local, k)
 
     def search_snippets(
         self, query_text: str, docs: DataFrame, k: int = 10,
@@ -6443,30 +5854,28 @@ class IndexReader(HitStreamModes):
             )
         )
 
-    def _positional_seg(self, terms: list[str],
-                        optional: "frozenset[str]" = frozenset()):
-        """(info, seg) for a positional-operator query: dictionary
-        lookup + chunk scan pruned to the terms' (bucket, tid) sets,
-        WITH the position streams selected. Terms in ``optional``
-        (e.g. a span-not exclude) may be absent from the dictionary
-        without bailing — only a missing REQUIRED term means no doc
-        can match."""
+    def _positional_info(self, terms: list[str],
+                         optional: "frozenset[str]" = frozenset()):
+        """Dictionary info of a positional-operator query's ``terms``,
+        or ``{}`` when a REQUIRED term is absent (no doc can match).
+        Terms in ``optional`` (e.g. a span-not exclude) may be absent.
+        Raises on an index built without positions."""
         if not self.stats.get("positions"):
             raise ValueError(
                 "phrase/proximity queries need a positional index — "
                 "build with IndexBuilder(..., positions=True)"
             )
-        info = self.lookup_terms(terms)
+        info = self.lookup_terms(sorted(set(terms))) if terms else {}
         if any(t not in info for t in terms if t not in optional):
-            return info, None  # a missing term ⇒ no doc can match
-        buckets = sorted({b for _, b, _ in info.values()})
-        tids = sorted(t for _, _, t in info.values())
-        seg = self._segments.where(
-            F.col("bucket").isin(buckets) & F.col("tid").isin(tids)
-        ).select(
-            *[f.name for f in POS_SEGMENT_SCHEMA.fields]
-        ).withColumn("avgdl", F.lit(self.stats["avgdl"]))
-        return info, seg
+            return {}
+        return info
+
+    def _positional_rank(self, info, scorer, k: int) -> DataFrame:
+        """Distributed answer of a positional kernel: the pruned scan
+        WITH the position streams, per-range kernels, global top-k."""
+        return _rank(_ranges_apply(
+            self._pruned_segments(info, POS_SEGMENT_SCHEMA), scorer
+        ), k)
 
     def search_phrase(self, phrase_text: str, k: int = 10) -> DataFrame:
         """Exact-phrase top-k: docs whose token stream contains the
@@ -6476,28 +5885,17 @@ class IndexReader(HitStreamModes):
         Rank-identical to ``phrase.phrase_exhaustive`` and the DuckDB
         oracle (same frozen spec). Scale shape = plain indexed search:
         per-range kernels, k rows per range leave the executors."""
-        from tlhop_library_spark.index.phrase import phrase_range_scorer
-
         slots = py_tokens(phrase_text)
         if not slots:
             return self._empty()
-        info, seg = self._positional_seg(sorted(set(slots)))
-        if seg is None:
+        info = self._positional_info(slots)
+        if not info:
             return self._empty()
-        n_docs = self.stats["n_docs"]
-        idf_map = {tid: bm25.idf(n_docs, df) for (df, _, tid) in info.values()}
-        phrase_tids = [info[t][2] for t in slots]
         scorer = phrase_range_scorer(
-            phrase_tids, idf_map, k, deleted=self._deleted
+            [info[t][2] for t in slots], self._idfs(info),
+            float(self.stats["avgdl"]), k, self._deleted,
         )
-        local = seg.groupBy("range_id").applyInPandas(
-            lambda key, pdf: scorer(key, pdf), schema=_SCORE_SCHEMA
-        )
-        from tlhop_library_spark.operators.relational import ranked_topk
-
-        return ranked_topk(
-            local, [F.desc("score"), F.asc("doc_id")], k
-        ).select("rank", "doc_id", "score")
+        return self._positional_rank(info, scorer, k)
 
     def search_proximity(
         self, query_text: str, window: int, k: int = 10
@@ -6505,28 +5903,17 @@ class IndexReader(HitStreamModes):
         """Top-k over docs where every distinct query term occurs
         within SOME ``window``-token span (anchor-normalized cover —
         see phrase._min_cover). Returns (rank, doc_id, score)."""
-        from tlhop_library_spark.index.phrase import proximity_range_scorer
-
         terms = sorted(set(py_tokens(query_text)))
         if not terms:
             return self._empty()
-        info, seg = self._positional_seg(terms)
-        if seg is None:
+        info = self._positional_info(terms)
+        if not info:
             return self._empty()
-        n_docs = self.stats["n_docs"]
-        idf_map = {tid: bm25.idf(n_docs, df) for (df, _, tid) in info.values()}
-        tids = [info[t][2] for t in terms]
         scorer = proximity_range_scorer(
-            tids, idf_map, window, k, deleted=self._deleted
+            [info[t][2] for t in terms], self._idfs(info),
+            float(self.stats["avgdl"]), window, k, self._deleted,
         )
-        local = seg.groupBy("range_id").applyInPandas(
-            lambda key, pdf: scorer(key, pdf), schema=_SCORE_SCHEMA
-        )
-        from tlhop_library_spark.operators.relational import ranked_topk
-
-        return ranked_topk(
-            local, [F.desc("score"), F.asc("doc_id")], k
-        ).select("rank", "doc_id", "score")
+        return self._positional_rank(info, scorer, k)
 
     def search_span_near(
         self, query_text: str, slop: int = 0, k: int = 10
@@ -6543,32 +5930,17 @@ class IndexReader(HitStreamModes):
         shape = plain indexed search (pruned positional chunk scan,
         per-range kernels, ≤ k rows per range leave the
         executors)."""
-        from tlhop_library_spark.index.phrase import (
-            span_near_range_scorer,
-        )
-
         clauses = py_tokens(query_text)
         if not clauses:
             return self._empty()
-        info, seg = self._positional_seg(sorted(set(clauses)))
-        if seg is None:
+        info = self._positional_info(clauses)
+        if not info:
             return self._empty()
-        n_docs = self.stats["n_docs"]
-        idf_map = {
-            tid: bm25.idf(n_docs, df) for (df, _, tid) in info.values()
-        }
-        clause_tids = [info[t][2] for t in clauses]
         scorer = span_near_range_scorer(
-            clause_tids, idf_map, int(slop), k, deleted=self._deleted
+            [info[t][2] for t in clauses], self._idfs(info),
+            float(self.stats["avgdl"]), int(slop), k, self._deleted,
         )
-        local = seg.groupBy("range_id").applyInPandas(
-            lambda key, pdf: scorer(key, pdf), schema=_SCORE_SCHEMA
-        )
-        from tlhop_library_spark.operators.relational import ranked_topk
-
-        return ranked_topk(
-            local, [F.desc("score"), F.asc("doc_id")], k
-        ).select("rank", "doc_id", "score")
+        return self._positional_rank(info, scorer, k)
 
     def search_span_not(
         self, include_text: str, exclude_term: str, slop: int = 0,
@@ -6584,10 +5956,6 @@ class IndexReader(HitStreamModes):
         (tested). Needs a positional index; scale shape = plain
         indexed search (pruned positional chunk scan, per-range
         kernels, ≤ k rows per range leave the executors)."""
-        from tlhop_library_spark.index.phrase import (
-            span_not_range_scorer,
-        )
-
         clauses = py_tokens(include_text)
         excl = py_tokens(exclude_term)
         if len(excl) != 1:
@@ -6596,30 +5964,19 @@ class IndexReader(HitStreamModes):
             )
         if not clauses:
             return self._empty()
-        terms = sorted(set(clauses) | {excl[0]})
-        info, seg = self._positional_seg(
-            terms, optional=frozenset(excl)
+        info = self._positional_info(
+            sorted(set(clauses) | {excl[0]}), optional=frozenset(excl)
         )
-        if seg is None:
+        if not info:
             return self._empty()
-        n_docs = self.stats["n_docs"]
-        idf_map = {
-            info[t][2]: bm25.idf(n_docs, info[t][0])
-            for t in set(clauses)
-        }
+        idf_map = self._idfs({t: info[t] for t in set(clauses)})
         excl_tid = info[excl[0]][2] if excl[0] in info else None
         scorer = span_not_range_scorer(
             [info[t][2] for t in clauses], excl_tid, idf_map,
-            int(slop), int(pre), int(post), k, deleted=self._deleted,
+            float(self.stats["avgdl"]), int(slop), int(pre), int(post), k,
+            self._deleted,
         )
-        local = seg.groupBy("range_id").applyInPandas(
-            lambda key, pdf: scorer(key, pdf), schema=_SCORE_SCHEMA
-        )
-        from tlhop_library_spark.operators.relational import ranked_topk
-
-        return ranked_topk(
-            local, [F.desc("score"), F.asc("doc_id")], k
-        ).select("rank", "doc_id", "score")
+        return self._positional_rank(info, scorer, k)
 
     def search_phrase_prefix(
         self, query_text: str, k: int = 10, max_expansions: int = 50
@@ -6643,10 +6000,6 @@ class IndexReader(HitStreamModes):
             MIN_TOKEN_LEN,
             _PY_NON_WORD_RE,
         )
-        from tlhop_library_spark.index.phrase import (
-            phrase_prefix_range_scorer,
-        )
-
         raw = [
             t
             for t in _PY_NON_WORD_RE.split(
@@ -6675,40 +6028,17 @@ class IndexReader(HitStreamModes):
         if len(info) < len(set(exact)):
             # a missing exact term ⇒ no doc can match
             return self._empty()
-        n_docs = self.stats["n_docs"]
-        idf_map = {
-            tid: bm25.idf(n_docs, df) for (df, _, tid) in info.values()
-        }
         group_idf = bm25.idf(
-            n_docs, max(df for (df, _, _) in cand_info.values())
-        )
-        slot_tids = [info[t][2] for t in exact]
-        last_tids = sorted(t for (_, _, t) in cand_info.values())
-        buckets = sorted(
-            {b for (_, b, _) in info.values()}
-            | {b for (_, b, _) in cand_info.values()}
-        )
-        tids = sorted(set(slot_tids) | set(last_tids))
-
-
-        fields = [f.name for f in POS_SEGMENT_SCHEMA.fields]
-        seg = self._segments.where(
-            F.col("bucket").isin(buckets) & F.col("tid").isin(tids)
-        ).select(*fields).withColumn(
-            "avgdl", F.lit(self.stats["avgdl"])
+            self.stats["n_docs"],
+            max(df for (df, _, _) in cand_info.values()),
         )
         scorer = phrase_prefix_range_scorer(
-            slot_tids, last_tids, idf_map, group_idf, k,
-            deleted=self._deleted,
+            [info[t][2] for t in exact],
+            sorted(t for (_, _, t) in cand_info.values()),
+            self._idfs(info), float(self.stats["avgdl"]), group_idf, k,
+            self._deleted,
         )
-        local = seg.groupBy("range_id").applyInPandas(
-            lambda key, pdf: scorer(key, pdf), schema=_SCORE_SCHEMA
-        )
-        from tlhop_library_spark.operators.relational import ranked_topk
-
-        return ranked_topk(
-            local, [F.desc("score"), F.asc("doc_id")], k
-        ).select("rank", "doc_id", "score")
+        return self._positional_rank({**cand_info, **info}, scorer, k)
 
     def search_bool_prefix(
         self, query_text: str, k: int = 10, max_expansions: int = 50
@@ -6770,30 +6100,17 @@ class IndexReader(HitStreamModes):
         tokens (0-based position < end), BM25-ranked on the term.
         Needs a positional index. Returns (rank, doc_id, score);
         scale shape = plain indexed search."""
-        from tlhop_library_spark.index.phrase import (
-            span_first_range_scorer,
-        )
-
         toks = py_tokens(term_text)
         if len(toks) != 1:
             raise ValueError("search_span_first takes exactly one term")
-        info, seg = self._positional_seg(toks)
-        if seg is None:
+        info = self._positional_info(toks)
+        if not info:
             return self._empty()
-        n_docs = self.stats["n_docs"]
-        (df, _b, tid) = info[toks[0]]
         scorer = span_first_range_scorer(
-            tid, {tid: bm25.idf(n_docs, df)}, int(end), k,
-            deleted=self._deleted,
+            info[toks[0]][2], self._idfs(info), float(self.stats["avgdl"]),
+            int(end), k, self._deleted,
         )
-        local = seg.groupBy("range_id").applyInPandas(
-            lambda key, pdf: scorer(key, pdf), schema=_SCORE_SCHEMA
-        )
-        from tlhop_library_spark.operators.relational import ranked_topk
-
-        return ranked_topk(
-            local, [F.desc("score"), F.asc("doc_id")], k
-        ).select("rank", "doc_id", "score")
+        return self._positional_rank(info, scorer, k)
 
     def last_pruning_stats(self) -> dict:
         """(blocks decoded, total blocks) of the last stats-enabled
@@ -6823,8 +6140,6 @@ class IndexReader(HitStreamModes):
         single term-set disjunction), scored per (query_id, range), then
         top-k'd per query — amortizing job/scan overhead across the set.
         """
-        n_docs = self.stats["n_docs"]
-        avgdl = self.stats["avgdl"]
         per_q = {}
         all_terms: set[str] = set()
         for qid, text, k in queries:
@@ -6834,16 +6149,7 @@ class IndexReader(HitStreamModes):
         info = self.lookup_terms(sorted(all_terms))
         if not info:
             return _local_frame(self.spark, _BATCH_RANKED_SCHEMA)
-        idf_map = {
-            tid: bm25.idf(n_docs, df) for (df, _, tid) in info.values()
-        }
-        buckets = sorted({b for _, b, _ in info.values()})
-        seg = self._segments.where(
-            F.col("bucket").isin(buckets)
-            & F.col("tid").isin(sorted(idf_map))
-        ).select(
-            *[f.name for f in SEGMENT_SCHEMA.fields]
-        ).withColumn("avgdl", F.lit(avgdl))
+        seg = self._pruned_segments(info)
         # fan out chunks to the queries that want them
         q_of_tid: dict[int, list[int]] = {}
         for qid, (terms, _) in per_q.items():
@@ -6864,8 +6170,8 @@ class IndexReader(HitStreamModes):
         )
         k_max = max(k for _, (_, k) in per_q.items())
         scorer = _range_scorer(
-            idf_map, k_max, mode, bound_scale=self._bound_scale(),
-            deleted=self._deleted,
+            self._idfs(info), k_max, mode, float(self.stats["avgdl"]),
+            self._bound_scale(), self._deleted,
         )
         local = fanned.groupBy("query_id", "range_id").applyInPandas(
             lambda key, pdf: scorer((key[1],), pdf).assign(query_id=key[0]),
@@ -6896,7 +6202,6 @@ class IndexReader(HitStreamModes):
         row-identical to :meth:`search_many`. Amortizes the chunk read
         across the batch; per-query marginal cost is pure numpy, so
         batch q/s is bounded by IO once, not a Spark job per query."""
-        n_docs = self.stats["n_docs"]
         avgdl = float(self.stats["avgdl"])
         per_q = {}
         all_terms: set[str] = set()
@@ -6909,9 +6214,7 @@ class IndexReader(HitStreamModes):
             return _local_frame(self.spark, _BATCH_RANKED_SCHEMA)
         import pyarrow.dataset as ds
 
-        idf_all = {
-            tid: bm25.idf(n_docs, df) for (df, _, tid) in info.values()
-        }
+        idf_all = self._idfs(info)
         buckets = sorted({b for _, b, _ in info.values()})
         cols = [f.name for f in SEGMENT_SCHEMA.fields]
         tbl = self._pa_segments().to_table(
@@ -6930,10 +6233,8 @@ class IndexReader(HitStreamModes):
             if sub.empty:
                 continue
             scorer = _range_scorer(
-                idf_map, k, mode, None, None,
-                bound_scale=self._bound_scale(), deleted=self._deleted,
+                idf_map, k, mode, avgdl, self._bound_scale(), self._deleted,
             )
-            sub = sub.assign(avgdl=avgdl)
             d, r = _merge_topk(
                 [
                     scorer((rid,), g)

@@ -59,8 +59,15 @@ from pyspark.sql import functions as F
 
 from tlhop_library_spark import bm25
 from tlhop_library_spark.analyzer import py_tokens
+from tlhop_library_spark.index.build import POS_SEGMENT_SCHEMA
+from tlhop_library_spark.index.phrase import (
+    phrase_prefix_range_scorer,
+    phrase_range_scorer,
+    proximity_range_scorer,
+    span_near_range_scorer,
+    span_not_range_scorer,
+)
 from tlhop_library_spark.index.query import (
-    SEGMENT_SCHEMA,
     _COUNTED_SCHEMA,
     _EXPLAIN_SCHEMA,
     _SCORE_SCHEMA,
@@ -70,18 +77,15 @@ from tlhop_library_spark.index.query import (
     IndexReader,
     _local_frame,
     _range_scorer,
+    _rank,
+    _ranges_apply,
     counted_range_scorer,
+    dismax_range_scorer,
+    similarity_range_scorer,
 )
+from tlhop_library_spark.operators.relational import ranked_topk
 
 __all__ = ["ShardedIndexReader"]
-
-
-def _ranges_apply(reader, ginfo, scorer, schema) -> DataFrame:
-    """Run a per-range kernel over one shard's (bucket, tid)-pruned
-    segment chunks."""
-    return reader._pruned_segments(ginfo).groupBy(
-        "range_id"
-    ).applyInPandas(lambda key, pdf: scorer(key, pdf), schema=schema)
 
 
 class ShardedIndexReader(HitStreamModes):
@@ -157,14 +161,7 @@ class ShardedIndexReader(HitStreamModes):
             )
         if not parts:
             return self._empty()
-        local = reduce(DataFrame.unionByName, parts)
-        from tlhop_library_spark.operators.relational import ranked_topk
-
-        return ranked_topk(
-            local.withColumn("score", F.round("score", bm25.ROUND_DIGITS)),
-            [F.desc("score"), F.asc("doc_id")],
-            k,
-        ).select("rank", "doc_id", "score")
+        return _rank(reduce(DataFrame.unionByName, parts), k)
 
     # ------------------------------------------------------------------
     def _positional_local(
@@ -180,8 +177,6 @@ class ShardedIndexReader(HitStreamModes):
         union index. ``required`` defaults to every query term;
         span-not passes only its include terms (a shard may lack the
         exclude term and still match)."""
-        from tlhop_library_spark.index.build import POS_SEGMENT_SCHEMA
-
         for r in self.readers:
             if not r.stats.get("positions"):
                 raise ValueError(
@@ -195,36 +190,17 @@ class ShardedIndexReader(HitStreamModes):
         for r, info in zip(self.readers, infos):
             if any(t not in info for t in required):
                 continue
-            scorer = make_scorer(r, info, idf_by_term)
-            buckets = sorted({b for _, b, _ in info.values()})
-            tids = sorted({t for _, _, t in info.values()})
-            seg = r._segments.where(
-                F.col("bucket").isin(buckets) & F.col("tid").isin(tids)
-            ).select(
-                *[fld.name for fld in POS_SEGMENT_SCHEMA.fields]
-            ).withColumn("avgdl", F.lit(self.avgdl))
-            def _wrap(s):
-                return lambda key, pdf: s(key, pdf)
-
-            parts.append(
-                seg.groupBy("range_id").applyInPandas(
-                    _wrap(scorer), schema=_SCORE_SCHEMA
-                )
-            )
+            parts.append(_ranges_apply(
+                r._pruned_segments(info, POS_SEGMENT_SCHEMA),
+                make_scorer(r, info, idf_by_term),
+            ))
         if not parts:
             return self._empty()
-        local = reduce(DataFrame.unionByName, parts)
-        from tlhop_library_spark.operators.relational import ranked_topk
-
-        return ranked_topk(
-            local, [F.desc("score"), F.asc("doc_id")], k
-        ).select("rank", "doc_id", "score")
+        return _rank(reduce(DataFrame.unionByName, parts), k)
 
     def search_phrase(self, phrase_text: str, k: int = 10) -> DataFrame:
         """Federated exact-phrase top-k — rank-identical to
         ``IndexReader.search_phrase`` on a single union index."""
-        from tlhop_library_spark.index.phrase import phrase_range_scorer
-
         slots = py_tokens(phrase_text)
         if not slots:
             return self._empty()
@@ -234,7 +210,7 @@ class ShardedIndexReader(HitStreamModes):
                 tid: idf_by_term[t] for t, (_, _, tid) in info.items()
             }
             return phrase_range_scorer(
-                [info[t][2] for t in slots], idf_map, k,
+                [info[t][2] for t in slots], idf_map, self.avgdl, k,
                 deleted=r._deleted,
             )
 
@@ -245,10 +221,6 @@ class ShardedIndexReader(HitStreamModes):
     ) -> DataFrame:
         """Federated proximity top-k — rank-identical to
         ``IndexReader.search_proximity`` on a single union index."""
-        from tlhop_library_spark.index.phrase import (
-            proximity_range_scorer,
-        )
-
         if not py_tokens(query_text):
             return self._empty()
 
@@ -257,8 +229,8 @@ class ShardedIndexReader(HitStreamModes):
                 tid: idf_by_term[t] for t, (_, _, tid) in info.items()
             }
             return proximity_range_scorer(
-                sorted(info[t][2] for t in info), idf_map, window, k,
-                deleted=r._deleted,
+                sorted(info[t][2] for t in info), idf_map, self.avgdl,
+                window, k, deleted=r._deleted,
             )
 
         return self._positional_local(query_text, k, make)
@@ -330,8 +302,6 @@ class ShardedIndexReader(HitStreamModes):
                 ),
             )
         )
-        from tlhop_library_spark.operators.relational import ranked_topk
-
         return ranked_topk(
             scored, [F.desc("score"), F.asc("term")], m
         ).select(
@@ -424,10 +394,6 @@ class ShardedIndexReader(HitStreamModes):
             MIN_TOKEN_LEN,
             _PY_NON_WORD_RE,
         )
-        from tlhop_library_spark.index.build import POS_SEGMENT_SCHEMA
-        from tlhop_library_spark.index.phrase import (
-            phrase_prefix_range_scorer,
-        )
 
         for r in self.readers:
             if not r.stats.get("positions"):
@@ -484,40 +450,19 @@ class ShardedIndexReader(HitStreamModes):
                 continue  # shard missing an exact term ⇒ no match in it
             if not ci:
                 continue  # no completion in this shard
-            slot_tids = [info[t][-1] for t in exact]
-            idf_map = {info[t][-1]: idf_map_by_term[t] for t in set(exact)}
-            last_tids = sorted(tid for (_df, _b, tid) in ci.values())
-            buckets = sorted(
-                {b for (_df, _cf, b, _t) in info.values()}
-                | {b for (_df, b, _t) in ci.values()}
-            ) if exact else sorted({b for (_df, b, _t) in ci.values()})
-            tids = sorted(set(slot_tids) | set(last_tids))
-            seg = r._segments.where(
-                F.col("bucket").isin(buckets) & F.col("tid").isin(tids)
-            ).select(
-                *[f.name for f in POS_SEGMENT_SCHEMA.fields]
-            ).withColumn("avgdl", F.lit(self.avgdl))
             scorer = phrase_prefix_range_scorer(
-                slot_tids, last_tids, idf_map, group_idf, k,
-                deleted=r._deleted,
+                [info[t][-1] for t in exact],
+                sorted(tid for (_df, _b, tid) in ci.values()),
+                {info[t][-1]: idf_map_by_term[t] for t in set(exact)},
+                self.avgdl, group_idf, k, deleted=r._deleted,
             )
-
-            def _wrap(s):
-                return lambda key, pdf: s(key, pdf)
-
-            parts.append(
-                seg.groupBy("range_id").applyInPandas(
-                    _wrap(scorer), schema=_SCORE_SCHEMA
-                )
-            )
+            parts.append(_ranges_apply(
+                r._pruned_segments({**ci, **info}, POS_SEGMENT_SCHEMA),
+                scorer,
+            ))
         if not parts:
             return self._empty()
-        local = reduce(DataFrame.unionByName, parts)
-        from tlhop_library_spark.operators.relational import ranked_topk
-
-        return ranked_topk(
-            local, [F.desc("score"), F.asc("doc_id")], k
-        ).select("rank", "doc_id", "score")
+        return _rank(reduce(DataFrame.unionByName, parts), k)
 
     def suggest_phrase(
         self, query_text: str, docs: DataFrame, n: int = 3,
@@ -579,8 +524,6 @@ class ShardedIndexReader(HitStreamModes):
         agg = scored.groupBy("suggestion").agg(
             F.round(F.sum("logp"), 4).alias("score")
         )
-        from tlhop_library_spark.operators.relational import ranked_topk
-
         return ranked_topk(
             agg, [F.desc("score"), F.asc("suggestion")], n
         ).select("rank", "suggestion", "score")
@@ -613,10 +556,6 @@ class ShardedIndexReader(HitStreamModes):
         """Federated ordered span-near — rank-identical to
         ``IndexReader.search_span_near`` on a single union index
         (clause order preserved per shard, global idf/avgdl)."""
-        from tlhop_library_spark.index.phrase import (
-            span_near_range_scorer,
-        )
-
         clauses = py_tokens(query_text)
         if not clauses:
             return self._empty()
@@ -626,8 +565,8 @@ class ShardedIndexReader(HitStreamModes):
                 tid: idf_by_term[t] for t, (_, _, tid) in info.items()
             }
             return span_near_range_scorer(
-                [info[t][2] for t in clauses], idf_map, int(slop), k,
-                deleted=r._deleted,
+                [info[t][2] for t in clauses], idf_map, self.avgdl,
+                int(slop), k, deleted=r._deleted,
             )
 
         return self._positional_local(query_text, k, make)
@@ -642,10 +581,6 @@ class ShardedIndexReader(HitStreamModes):
         shard, so per-shard rejection is global rejection; only the
         include terms are required per shard (a shard lacking the
         exclude term simply never rejects)."""
-        from tlhop_library_spark.index.phrase import (
-            span_not_range_scorer,
-        )
-
         clauses = py_tokens(include_text)
         excl = py_tokens(exclude_term)
         if len(excl) != 1:
@@ -664,7 +599,8 @@ class ShardedIndexReader(HitStreamModes):
             )
             return span_not_range_scorer(
                 [info[t][2] for t in clauses], excl_tid, idf_map,
-                int(slop), int(pre), int(post), k, deleted=r._deleted,
+                self.avgdl, int(slop), int(pre), int(post), k,
+                deleted=r._deleted,
             )
 
         return self._positional_local(
@@ -721,11 +657,6 @@ class ShardedIndexReader(HitStreamModes):
         weights, see :meth:`_shard_weights`). ``tie_breaker`` switches
         to the DisMax kernel; ``after`` pushes a cursor predicate into
         the kernels."""
-        from tlhop_library_spark.index.query import (
-            dismax_range_scorer,
-            similarity_range_scorer,
-        )
-
         parts = []
         for r, ginfo, weight_of in self._shard_weights(
             infos, gdf, gcf, similarity, boosts
@@ -738,7 +669,7 @@ class ShardedIndexReader(HitStreamModes):
                 scorer = similarity_range_scorer(
                     weight_of, k, deleted=r._deleted, after=after
                 )
-            parts.append(_ranges_apply(r, ginfo, scorer, _SCORE_SCHEMA))
+            parts.append(_ranges_apply(r._pruned_segments(ginfo), scorer))
         if not parts:
             return self._empty()
         local = reduce(DataFrame.unionByName, parts)
@@ -746,11 +677,7 @@ class ShardedIndexReader(HitStreamModes):
             # hit-stream mode (no k-cut): the rescore join consumes
             # every (doc_id, score) row
             return local
-        from tlhop_library_spark.operators.relational import ranked_topk
-
-        return ranked_topk(
-            local, [F.desc("score"), F.asc("doc_id")], k
-        ).select("rank", "doc_id", "score")
+        return _rank(local, k)
 
     def search_rescore(
         self, query_text: str, k: int = 10, window: int = 50,
@@ -784,8 +711,6 @@ class ShardedIndexReader(HitStreamModes):
                 ).alias("score"),
             )
         )
-        from tlhop_library_spark.operators.relational import ranked_topk
-
         return ranked_topk(
             combined, [F.desc("score"), F.asc("doc_id")], k
         ).select("rank", "doc_id", "score")
@@ -808,7 +733,8 @@ class ShardedIndexReader(HitStreamModes):
         infos, gdf, gcf = self._resolve_full(query_text)
         parts = [
             _ranges_apply(
-                r, ginfo, counted_range_scorer(weight_of, deleted=r._deleted),
+                r._pruned_segments(ginfo),
+                counted_range_scorer(weight_of, deleted=r._deleted),
                 _COUNTED_SCHEMA,
             )
             for r, ginfo, weight_of in self._shard_weights(infos, gdf, gcf)
@@ -951,25 +877,14 @@ class ShardedIndexReader(HitStreamModes):
         infos, idf_by_term = self._resolve(query_text)
         parts = []
         for r, info in zip(self.readers, infos):
-            if not info:
-                continue
+            # tids are per-shard (content-hashed); key this shard's
+            # kernel by ITS tids, values from the global idf table
             idf_map = {
                 tid: idf_by_term[t] for t, (_, _, tid) in info.items()
             }
-            pdf = r._local_chunks(info, SEGMENT_SCHEMA.fields)
-            if pdf is None:
-                continue
-            pdf["avgdl"] = self.avgdl  # global, not the shard's own
-            enc = float(
-                r.stats.get("min_encode_avgdl", self.avgdl) or self.avgdl
-            )
-            scale = max(1.0, self.avgdl / enc) if enc > 0 else 1.0
             scorer = _range_scorer(
-                idf_map, k, mode, None, None,
-                bound_scale=scale, deleted=r._deleted,
+                idf_map, k, mode, self.avgdl, r._bound_scale(self.avgdl),
+                r._deleted,
             )
-            parts.extend(
-                scorer((rid,), g)
-                for rid, g in pdf.groupby("range_id", sort=False)
-            )
+            parts += r._local_parts(info, scorer)
         return self.readers[0]._merge_local_topk(parts, k)

@@ -44,6 +44,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from tlhop_library_spark.analyzer import tokens_col
+from tlhop_library_spark.operators.relational import ranked_topk
 
 END = "</w>"
 
@@ -64,8 +65,6 @@ def word_counts(
     )
     if max_words is None:
         return counts
-    from tlhop_library_spark.operators.relational import ranked_topk
-
     return ranked_topk(
         counts, [F.desc("n"), F.asc("word")], max_words
     ).drop("rank")

@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from tlhop_library_spark.analyzer import tokens_col
+from tlhop_library_spark.operators.relational import ranked_topk
 
 ROUND = 4
 
@@ -90,8 +91,6 @@ def pmi_collocations(
     bigrams with c12 ≥ min_count; order (pmi DESC, w1 ASC, w2 ASC),
     top rows as (w1, w2, c12, pmi).
     """
-    from tlhop_library_spark.operators.relational import ranked_topk
-
     t = _tokens(docs)
     pairs = (
         t.where(F.size("toks") >= 2)
@@ -392,8 +391,6 @@ def kmv_distinct(
     approx_count_distinct whose HLL++ registers are
     implementation-defined).
     """
-    from tlhop_library_spark.operators.relational import ranked_topk
-
     hashes = (
         df.select(kmv_hash(F.col(col), salt).alias("h"))
         .where(F.col("h") > 0)

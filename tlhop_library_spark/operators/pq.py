@@ -43,6 +43,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from tlhop_library_spark.operators.relational import ranked_topk
+
 __all__ = [
     "deterministic_codebooks",
     "train_pq",
@@ -208,8 +210,6 @@ def pq_topk(
         .groupBy("vec_id")
         .agg(F.round(F.sum("d"), _ROUND_S).alias("adc_dist"))
     )
-    from tlhop_library_spark.operators.relational import ranked_topk
-
     return ranked_topk(
         scored, [F.asc("adc_dist"), F.asc("vec_id")], topk
     ).select("rank", "vec_id", "adc_dist")
@@ -407,8 +407,6 @@ def ivf_pq_topk_residual(
         .groupBy("vec_id")
         .agg(F.round(F.sum("d"), _ROUND_S).alias("adc_dist"))
     )
-    from tlhop_library_spark.operators.relational import ranked_topk
-
     return ranked_topk(
         scored, [F.asc("adc_dist"), F.asc("vec_id")], k
     ).select("rank", "vec_id", "adc_dist")
@@ -457,8 +455,6 @@ def rerank_exact(
     scored = cand.select(
         "vec_id", F.round(dist2, _ROUND_S).alias("l2_dist")
     )
-    from tlhop_library_spark.operators.relational import ranked_topk
-
     return ranked_topk(
         scored, [F.asc("l2_dist"), F.asc("vec_id")], k
     ).select("rank", "vec_id", "l2_dist")

@@ -46,6 +46,7 @@ from tlhop_library_spark.operators.pq import (
     ivf_pq_topk_residual,
     pq_encode_residual,
 )
+from tlhop_library_spark.operators.relational import ranked_topk
 
 __all__ = [
     "write_pq_store",
@@ -223,8 +224,6 @@ class ShardedPQStoreReader:
         u = parts[0]
         for p in parts[1:]:
             u = u.unionByName(p)
-        from tlhop_library_spark.operators.relational import ranked_topk
-
         return ranked_topk(
             u, [F.asc("adc_dist"), F.asc("vec_id")], k
         ).select("rank", "vec_id", "adc_dist")

@@ -37,6 +37,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from tlhop_library_spark.operators.relational import ranked_topk
+
 _RANKINGS_SCHEMA = StructType(
     [
         StructField("query_id", LongType()),
@@ -183,8 +185,6 @@ def bm25_self_eval(
     from tlhop_library_spark import bm25
     from tlhop_library_spark.analyzer import py_tokens, tokens_col
     from tlhop_library_spark.index.query import _local_frame
-    from tlhop_library_spark.operators.relational import ranked_topk
-
     spark = docs.sparkSession
     per_query = [
         (int(qid), sorted(set(py_tokens(qt)))) for qid, qt in queries

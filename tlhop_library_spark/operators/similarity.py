@@ -29,6 +29,8 @@ from pyspark.sql.types import (
 )
 from pyspark.sql.window import Window
 
+from tlhop_library_spark.operators.relational import ranked_topk
+
 
 def _dot(a, b):
     return F.aggregate(
@@ -65,8 +67,6 @@ def cosine_topk(
             4,
         ).alias("cosine"),
     )
-    from tlhop_library_spark.operators.relational import ranked_topk
-
     # TakeOrderedAndProject: per-partition heaps, k rows per executor —
     # never a single-partition window over every scored vector
     return ranked_topk(
@@ -512,8 +512,6 @@ def rrf_fuse(
     keep their own scale stories."""
     from functools import reduce
 
-    from tlhop_library_spark.operators.relational import ranked_topk
-
     if not rankings:
         raise ValueError("rrf_fuse needs at least one ranking")
     parts = [
@@ -604,8 +602,6 @@ def quantized_cosine_topk(
             _dot(dq, qv) / (_norm(dq) * F.lit(qn)), 4
         ).alias("cosine"),
     ).where(F.col("cosine").isNotNull())
-    from tlhop_library_spark.operators.relational import ranked_topk
-
     return ranked_topk(
         scored, [F.desc("cosine"), F.asc("vec_id")], k
     ).select("rank", "vec_id", "cosine")
