@@ -22,7 +22,7 @@ def test_clean_build_passes(spark, index_dir):
     assert set(st) == {
         "chunk_decode", "block_metadata", "range_alignment",
         "blockmax_bounds", "dictionary_df", "stats_doclengths",
-        "manifest_lineage",
+        "manifest_lineage", "artifacts",
     }
     assert all(v == "ok" for v in st.values()), st
 

@@ -3,7 +3,7 @@ from tlhop_library_spark.index.aliases import (
     reader_for_alias,
     update_aliases,
 )
-from tlhop_library_spark.index.append import add_documents, read_doc_lengths
+from tlhop_library_spark.index.append import add_documents
 from tlhop_library_spark.index.build import IndexBuilder, build_index
 from tlhop_library_spark.index.delete import (
     delete_by_query,
@@ -15,6 +15,7 @@ from tlhop_library_spark.index.fsck import (
     IndexCorruption,
     verify_index,
 )
+from tlhop_library_spark.index.layout import read_doc_lengths
 from tlhop_library_spark.index.merge import merge_index_ranges
 from tlhop_library_spark.index.multifield import (
     MultiFieldIndexReader,

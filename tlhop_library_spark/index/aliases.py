@@ -23,6 +23,8 @@ import json
 import os
 import tempfile
 
+from tlhop_library_spark.index.layout import STATS, is_index
+
 try:  # POSIX-only; the registry contract needs it for writers
     import fcntl
 except ImportError:  # pragma: no cover - non-POSIX host
@@ -86,10 +88,8 @@ def _update_aliases_locked(
         op, body = next(iter(act.items()))
         alias, index = body["alias"], body["index"]
         if op == "add":
-            if not os.path.isfile(os.path.join(index, "stats.json")):
-                raise ValueError(
-                    f"{index} is not an index (no stats.json)"
-                )
+            if not is_index(index):
+                raise ValueError(f"{index} is not an index (no {STATS})")
             cur = aliases.setdefault(alias, [])
             if index not in cur:
                 cur.append(index)

@@ -2,7 +2,7 @@
 existing index WITHOUT rebuilding old segments.
 
 Why this is cheap here: term ids are content hashes (tid =
-xxhash64(term), build.py), so the "dictionary" needs no global
+xxhash64(term), build.py), so the dictionary needs no global
 renumbering pass when the vocabulary grows — a new batch's postings
 encode independently and land in a new segment group, and the
 vocabulary-sized tables (term_names, dictionary) are re-derived from
@@ -41,7 +41,6 @@ table" is the posting-list segment store itself.
 
 from __future__ import annotations
 
-import json
 import math
 import os
 import shutil
@@ -50,21 +49,13 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from tlhop_library_spark.analyzer import tokens_col
-from tlhop_library_spark.index.build import DOCLEN_DDL, NAMES_DDL, IndexBuilder
-
-
-def read_doc_lengths(spark: SparkSession, index_dir: str) -> DataFrame:
-    """(doc_id, dl) across the base build and every appended batch."""
-    read = spark.read.schema(DOCLEN_DDL)
-    base = read.parquet(os.path.join(index_dir, "doc_lengths"))
-    batches_dir = os.path.join(index_dir, "doc_lengths_batches")
-    if os.path.isdir(batches_dir):
-        for name in sorted(os.listdir(batches_dir)):
-            sub = os.path.join(batches_dir, name)
-            if os.path.isdir(sub):
-                base = base.unionByName(read.parquet(sub))
-    return base
+from tlhop_library_spark.index import layout
+from tlhop_library_spark.index.build import (
+    IndexBuilder,
+    append_manifest,
+    check_term_collisions,
+    write_dictionary,
+)
 
 
 def add_documents(
@@ -80,9 +71,7 @@ def add_documents(
     a no-op.
     """
     t0 = time.time()
-    stats_path = os.path.join(index_dir, "stats.json")
-    with open(stats_path) as f:
-        stats = json.load(f)
+    stats = layout.read_stats(index_dir)
     builder = IndexBuilder(
         spark,
         index_dir,
@@ -90,28 +79,11 @@ def add_documents(
         n_ranges=int(stats["n_ranges"]),
         n_jobs=int(stats.get("n_jobs", 1)),
         positions=bool(stats.get("positions", False)),
+        stored_fields=stats.get("stored_fields"),
     )
     range_size = int(stats["range_size"])
-
-    stored_fields = list(stats.get("stored_fields") or [])
-    if stored_fields:
-        missing = [c for c in stored_fields if c not in new_docs.columns]
-        if missing:
-            raise ValueError(
-                f"index stores fields {stored_fields}; append batch is "
-                f"missing {missing}"
-            )
-    src = new_docs
-    docs = new_docs.select(
-        F.col("doc_id").cast("long").alias("doc_id"), "text"
-    ).where(F.col("text").isNotNull())
-    parallelism = spark.sparkContext.defaultParallelism
-    if docs.rdd.getNumPartitions() < parallelism:
-        docs = docs.repartition(2 * parallelism)
-    with_tokens = docs.select(
-        "doc_id", tokens_col(F.col("text")).alias("tokens")
-    ).withColumn("dl", F.size("tokens"))
-    with_tokens = with_tokens.persist()
+    builder._check_stored(new_docs)
+    with_tokens = builder._tokenized(new_docs).persist()
 
     row = with_tokens.agg(
         F.count("*").alias("n"),
@@ -136,21 +108,17 @@ def add_documents(
 
     # 1. delta doc_lengths batch (idempotent overwrite of its own dir);
     #    this write also materializes the token cache for the encode
-    batch_dir = os.path.join(index_dir, "doc_lengths_batches", gname)
+    batch_dir = layout.DOC_LENGTHS_BATCHES.path(index_dir, gname)
     with_tokens.select("doc_id", "dl").write.mode("overwrite").parquet(
         batch_dir
     )
-    if stored_fields:
-        # stored-fields delta batch, same idempotent-overwrite contract
-        src.where(F.col("text").isNotNull()).select(
-            F.col("doc_id").cast("long").alias("doc_id"), *stored_fields
-        ).write.mode("overwrite").parquet(
-            os.path.join(index_dir, "stored_batches", gname)
-        )
+    builder._write_stored(
+        new_docs, layout.STORED_BATCHES.path(index_dir, gname)
+    )
 
     # 2. combined corpus stats from the doc_lengths UNION (crash-safe
     #    source of truth — never arithmetic accumulation on stats.json)
-    combined = read_doc_lengths(spark, index_dir).agg(
+    combined = layout.read_doc_lengths(spark, index_dir).agg(
         F.count("*").alias("n"),
         F.sum("dl").alias("sum_dl"),
         F.max("doc_id").alias("max_doc"),
@@ -167,15 +135,11 @@ def add_documents(
     # 3. encode the delta postings with the COMBINED avgdl (tightest
     #    valid bounds for the new chunks) into staging, atomic rename in
     completed = builder._completed_groups()
-    gdir = os.path.join(builder.segments_path, f"bucket_group={gname}")
+    gdir = layout.group_path(index_dir, gname)
     if gname not in completed or not os.path.isdir(gdir):
-        staging = os.path.join(index_dir, "segments_staging", gname)
-        seg = builder._encode_group_df(exploded, avgdl, range_size)
-        seg.write.mode("overwrite").parquet(staging)
-        for cached in builder._pending_unpersist:
-            cached.unpersist()
-        builder._pending_unpersist.clear()
-        os.makedirs(builder.segments_path, exist_ok=True)
+        staging = layout.SEGMENTS_STAGING.path(index_dir, gname)
+        builder._write_group(exploded, avgdl, range_size, staging)
+        os.makedirs(layout.SEGMENTS.path(index_dir), exist_ok=True)
         if os.path.isdir(gdir):
             shutil.rmtree(gdir)
         os.rename(staging, gdir)
@@ -183,9 +147,9 @@ def add_documents(
     # 4. term_names: union-distinct rewrite via rename-aside swap
     #    (idempotent; one valid copy exists at every instant), then the
     #    64-bit-hash collision check over the UNION
-    names_path = builder.names_path
+    names_path = layout.TERM_NAMES.path(index_dir)
     new_names = exploded.select("tid", "term").distinct()
-    old_names = spark.read.schema(NAMES_DDL).parquet(names_path)
+    old_names = layout.TERM_NAMES.read(spark, index_dir)
     tmp = names_path + ".tmp"
     old_names.unionByName(new_names).distinct().write.mode(
         "overwrite"
@@ -195,35 +159,15 @@ def add_documents(
     os.rename(names_path, old)
     os.rename(tmp, names_path)
     shutil.rmtree(old, ignore_errors=True)
-    names_back = spark.read.schema(NAMES_DDL).parquet(names_path)
-    collisions = (
-        names_back.groupBy("tid")
-        .agg(F.countDistinct("term").alias("n"))
-        .where(F.col("n") > 1)
-        .count()
-    )
-    if collisions:
-        raise RuntimeError(
-            f"{collisions} xxhash64 term collisions introduced by the "
-            "appended batch — rebuild with a 128-bit term id"
-        )
+    check_term_collisions(spark, index_dir)
 
     # 5. dictionary re-derived over ALL segments (vocabulary-sized job;
     #    df/cf per term now cover old + new postings)
-    seg_stats = (
-        spark.read.schema(builder._segment_schema)
-        .parquet(builder.segments_path)
-        .groupBy("tid", "bucket")
-        .agg(F.sum("n_postings").alias("df"), F.sum("sum_tf").alias("cf"))
-    )
-    names = spark.read.schema(NAMES_DDL).parquet(names_path)
-    seg_stats.join(names, "tid").write.mode("overwrite").parquet(
-        builder.dict_path
-    )
+    write_dictionary(spark, index_dir, builder.positions)
 
     # 6. manifest lineage row for the delta group
     if gname not in completed:
-        builder._append_manifest(gname, gdir)
+        append_manifest(spark, index_dir, gname, gdir, builder.positions)
 
     # 7. stats.json is the commit point
     stats.update(
@@ -243,7 +187,6 @@ def add_documents(
             "last_append_sec": round(time.time() - t0, 3),
         }
     )
-    with open(stats_path, "w") as f:
-        json.dump(stats, f, indent=2)
+    layout.write_stats(index_dir, stats)
     with_tokens.unpersist()
     return stats

@@ -44,28 +44,18 @@ cost no more per posting than long ones.
 
 from __future__ import annotations
 
-import json
 import math
-import os
 import time
 
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
-from pyspark.sql.types import (
-    ArrayType,
-    BinaryType,
-    DoubleType,
-    IntegerType,
-    LongType,
-    StringType,
-    StructField,
-    StructType,
-)
 
 from tlhop_library_spark import bm25
 from tlhop_library_spark.analyzer import ANALYZER_VERSION, tokens_col
+from tlhop_library_spark.index import layout
+from tlhop_library_spark.index.layout import POS_SEGMENT_SCHEMA, SEGMENT_SCHEMA
 
 #: postings per block inside a chunk (block = skippable scoring unit)
 BLOCK_SIZE = 128
@@ -91,50 +81,6 @@ def default_n_ranges(n_docs: int) -> int:
     so range_id stays a small int at any conceivable corpus size."""
     return max(1, min(math.ceil(n_docs / RANGE_DOCS), 1 << 22))
 
-SEGMENT_SCHEMA = StructType(
-    [
-        StructField("tid", LongType()),
-        StructField("bucket", IntegerType()),
-        StructField("range_id", IntegerType()),
-        StructField("n_postings", LongType()),
-        StructField("sum_tf", LongType()),
-        StructField("first_doc", LongType()),
-        StructField("last_doc", LongType()),
-        StructField("doc_bytes", BinaryType()),
-        StructField("tf_bytes", BinaryType()),
-        StructField("dl_bytes", BinaryType()),
-        StructField("block_first_docs", ArrayType(LongType())),
-        StructField("block_last_docs", ArrayType(LongType())),
-        StructField("block_counts", ArrayType(IntegerType())),
-        StructField("block_doc_offsets", ArrayType(IntegerType())),
-        StructField("block_tf_offsets", ArrayType(IntegerType())),
-        StructField("block_dl_offsets", ArrayType(IntegerType())),
-        StructField("block_max_w", ArrayType(DoubleType())),
-        StructField("max_w", DoubleType()),
-    ]
-)
-
-#: positional variant: per-posting in-document token positions, stored as
-#: one varint stream per chunk (per posting: tf delta-gapped positions,
-#: first absolute) with per-block restart offsets — the position count of
-#: posting i IS tf_i, so no extra length stream is needed.
-POS_SEGMENT_SCHEMA = StructType(
-    SEGMENT_SCHEMA.fields
-    + [
-        StructField("pos_bytes", BinaryType()),
-        StructField("block_pos_offsets", ArrayType(IntegerType())),
-    ]
-)
-
-
-#: schemas of the tables the build writes and reads back: a read with a
-#: known schema skips the footer-reading Spark job of schema inference
-DOCLEN_DDL = "doc_id long, dl int"
-NAMES_DDL = "tid long, term string"
-#: the dictionary: per-(tid, bucket) segment stats joined with the names
-DICT_DDL = "tid long, bucket int, df long, cf long, term string"
-
-
 def _encode_one(tid, bucket, range_id, doc_ids, tfs, dls, w,
                 pos_gaps=None) -> dict:
     """Encode one (term, range) posting run (already doc_id-sorted) as
@@ -154,16 +100,8 @@ def _encode_one(tid, bucket, range_id, doc_ids, tfs, dls, w,
 
 
 class IndexBuilder:
-    """Builds (and resumes) an index at ``index_dir``.
-
-    Layout::
-
-        index_dir/
-          stats.json                 # N, avgdl, analyzer version, params
-          doc_lengths/               # parquet (doc_id, dl)
-          dictionary/                # parquet (term, df, cf, bucket)
-          segments/bucket_group=G/   # parquet segment rows (partitioned)
-          manifest/                  # parquet lineage+metrics, 1 row/group
+    """Builds (and resumes) an index at ``index_dir`` (layout:
+    ``index/layout.py``).
 
     ``n_buckets`` controls query-time file pruning; ``n_ranges`` is the
     salt width (doc-space shards); ``n_jobs`` is the checkpoint
@@ -224,43 +162,6 @@ class IndexBuilder:
         #: encode caches awaiting release after the segment write
         self._pending_unpersist: list[DataFrame] = []
 
-    # -- paths ---------------------------------------------------------
-    @property
-    def stats_path(self):
-        return os.path.join(self.index_dir, "stats.json")
-
-    @property
-    def dict_path(self):
-        return os.path.join(self.index_dir, "dictionary")
-
-    @property
-    def names_path(self):
-        return os.path.join(self.index_dir, "term_names")
-
-    @property
-    def doclen_path(self):
-        return os.path.join(self.index_dir, "doc_lengths")
-
-    @property
-    def segments_path(self):
-        return os.path.join(self.index_dir, "segments")
-
-    @property
-    def manifest_path(self):
-        return os.path.join(self.index_dir, "manifest")
-
-    @property
-    def metrics_path(self):
-        return os.path.join(self.index_dir, "metrics")
-
-    @property
-    def stored_path(self):
-        return os.path.join(self.index_dir, "stored")
-
-    @property
-    def _segment_schema(self) -> StructType:
-        return POS_SEGMENT_SCHEMA if self.positions else SEGMENT_SCHEMA
-
     # -- encode plan (shared by build and index.append) ------------------
     def _exploded(self, with_tokens: DataFrame) -> DataFrame:
         """(doc_id, dl, term, tid[, pos]) token instances, dictionary-
@@ -291,7 +192,7 @@ class IndexBuilder:
 
         bucket_expr = F.pmod(F.col("tid"), F.lit(self.n_buckets)).cast("int")
         range_expr = F.floor(F.col("doc_id") / F.lit(range_size)).cast("int")
-        seg_schema = self._segment_schema
+        seg_schema = layout.segment_schema(self.positions)
         encoder = make_stream_encoder(
             avgdl, seg_schema,
             n_buckets=self.n_buckets, range_size=range_size,
@@ -339,6 +240,51 @@ class IndexBuilder:
             n_encode_parts, "bucket", "tid"
         ).sortWithinPartitions("bucket", "tid")
 
+    def _write_group(self, part, avgdl, range_size, path, n_tokens=None):
+        """Encode ``part`` and write its segment rows to ``path``, then
+        release the encode caches."""
+        self._encode_group_df(part, avgdl, range_size, n_tokens).write.mode(
+            "overwrite"
+        ).parquet(path)
+        for cached in self._pending_unpersist:
+            cached.unpersist()
+        self._pending_unpersist.clear()
+
+    # -- input (shared by build and index.append) ------------------------
+    def _tokenized(self, docs: DataFrame) -> DataFrame:
+        """(doc_id, tokens, dl) of the docs with non-null text."""
+        docs = docs.select(
+            F.col("doc_id").cast("long").alias("doc_id"), "text"
+        ).where(F.col("text").isNotNull())
+        # scan-parallelism safety net: unsplittable inputs (one parquet
+        # row group, gzip json, ...) would serialize tokenization into a
+        # single task; one explicit up-front shuffle is far cheaper than
+        # an unparallelized scan. No-op on properly-split inputs.
+        parallelism = self.spark.sparkContext.defaultParallelism
+        if docs.rdd.getNumPartitions() < parallelism:
+            docs = docs.repartition(2 * parallelism)
+        return docs.select(
+            "doc_id", tokens_col(F.col("text")).alias("tokens")
+        ).withColumn("dl", F.size("tokens"))
+
+    def _check_stored(self, docs: DataFrame) -> None:
+        missing = [c for c in self.stored_fields if c not in docs.columns]
+        if missing:
+            raise ValueError(
+                f"stored_fields {missing} missing: not in the input "
+                f"columns {docs.columns}"
+            )
+
+    def _write_stored(self, docs: DataFrame, path: str) -> None:
+        """Stored fields of ``docs`` to ``path``: the same doc filter as
+        the postings (null-text docs are not indexed); an idempotent
+        overwrite keeps resume trivial."""
+        if self.stored_fields:
+            docs.where(F.col("text").isNotNull()).select(
+                F.col("doc_id").cast("long").alias("doc_id"),
+                *self.stored_fields,
+            ).write.mode("overwrite").parquet(path)
+
     # -- build ---------------------------------------------------------
     def build(self, docs: DataFrame, resume: bool = False) -> dict:
         """docs must carry (doc_id long, text string). Returns stats."""
@@ -353,20 +299,8 @@ class IndexBuilder:
             phases[name] = round(now - last, 3)
             last = now
 
-        src = docs
-        docs = docs.select(
-            F.col("doc_id").cast("long").alias("doc_id"), "text"
-        ).where(F.col("text").isNotNull())
-        # scan-parallelism safety net: unsplittable inputs (one parquet
-        # row group, gzip json, ...) would serialize tokenization into a
-        # single task; one explicit up-front shuffle is far cheaper than
-        # an unparallelized scan. No-op on properly-split inputs.
-        parallelism = self.spark.sparkContext.defaultParallelism
-        if docs.rdd.getNumPartitions() < parallelism:
-            docs = docs.repartition(2 * parallelism)
-        with_tokens = docs.select(
-            "doc_id", tokens_col(F.col("text")).alias("tokens")
-        ).withColumn("dl", F.size("tokens"))
+        self._check_stored(docs)
+        with_tokens = self._tokenized(docs)
 
         # DISK_ONLY, not the MEMORY_AND_DISK default: the token cache is
         # the largest intermediate of the whole build (every token of
@@ -386,25 +320,12 @@ class IndexBuilder:
         # pass. Corpus stats then aggregate the written parquet (a
         # two-int-column table) instead of re-scanning the fat cached
         # token arrays — one fewer pass over the heavy data per build.
-        if "doc_lengths" not in completed:
-            with_tokens.select("doc_id", "dl").write.mode("overwrite").parquet(
-                self.doclen_path
-            )
-        if self.stored_fields:
-            missing = [c for c in self.stored_fields if c not in src.columns]
-            if missing:
-                raise ValueError(
-                    f"stored_fields {missing} not in the input columns "
-                    f"{src.columns}"
-                )
-            # same doc filter as the postings (null-text docs are not
-            # indexed); idempotent overwrite keeps resume trivial
-            src.where(F.col("text").isNotNull()).select(
-                F.col("doc_id").cast("long").alias("doc_id"),
-                *self.stored_fields,
-            ).write.mode("overwrite").parquet(self.stored_path)
+        with_tokens.select("doc_id", "dl").write.mode("overwrite").parquet(
+            layout.DOC_LENGTHS.path(self.index_dir)
+        )
+        self._write_stored(docs, layout.STORED.path(self.index_dir))
         mark("tokenize_doc_lengths")
-        row = spark.read.schema(DOCLEN_DDL).parquet(self.doclen_path).agg(
+        row = layout.DOC_LENGTHS.read(spark, self.index_dir).agg(
             F.count("*").alias("n"),
             F.sum("dl").alias("sum_dl"),
             F.max("doc_id").alias("max_doc"),
@@ -433,23 +354,12 @@ class IndexBuilder:
 
         # (tid → term) names table: vocabulary-sized, map-side combined;
         # collision check makes the 64-bit hash safe to rely on
-        if "term_names" not in completed:
-            names = exploded.select("tid", "term").distinct()
-            names.write.mode("overwrite").parquet(self.names_path)
-            names_back = spark.read.schema(NAMES_DDL).parquet(self.names_path)
-            collisions = (
-                names_back.groupBy("tid")
-                .agg(F.countDistinct("term").alias("n"))
-                .where(F.col("n") > 1)
-                .count()
-            )
-            if collisions:
-                raise RuntimeError(
-                    f"{collisions} xxhash64 term collisions — rebuild "
-                    "with a 128-bit term id (tid = xxhash64(term), "
-                    "xxhash64(reverse(term)))"
-                )
-        mark("term_names")
+        names = exploded.select("tid", "term").distinct()
+        names.write.mode("overwrite").parquet(
+            layout.TERM_NAMES.path(self.index_dir)
+        )
+        check_term_collisions(spark, self.index_dir)
+        mark(layout.TERM_NAMES.name)
 
         # segments per bucket group — the one shuffle, checkpointable.
         for g in range(self.n_jobs):
@@ -459,39 +369,17 @@ class IndexBuilder:
             part = exploded.where(
                 F.pmod(bucket_expr, F.lit(self.n_jobs)) == g
             )
-            seg = self._encode_group_df(
-                part, avgdl, range_size,
+            gdir = layout.group_path(self.index_dir, g)
+            self._write_group(
+                part, avgdl, range_size, gdir,
                 n_tokens=-(-int(sum_dl) // self.n_jobs),
             )
-            gdir = os.path.join(self.segments_path, f"bucket_group={g}")
-            seg.write.mode("overwrite").parquet(gdir)
-            for cached in self._pending_unpersist:
-                cached.unpersist()
-            self._pending_unpersist.clear()
             mark(f"segments_g{g}")
-            self._append_manifest(gname, gdir)
+            append_manifest(spark, self.index_dir, gname, gdir, self.positions)
             mark(f"manifest_g{g}")
 
-        # dictionary derived from the written segments (column-pruned
-        # read of tid/bucket/n_postings/sum_tf) joined with the names
-        # table to restore term strings — both sides vocabulary-sized
-        if "dictionary" not in completed:
-            seg_stats = (
-                spark.read.schema(self._segment_schema)
-                .parquet(self.segments_path)
-                .groupBy("tid", "bucket")
-                .agg(
-                    F.sum("n_postings").alias("df"),
-                    F.sum("sum_tf").alias("cf"),
-                )
-            )
-            names = spark.read.schema(NAMES_DDL).parquet(self.names_path)
-            (
-                seg_stats.join(names, "tid")
-                .write.mode("overwrite")
-                .parquet(self.dict_path)
-            )
-        mark("dictionary")
+        write_dictionary(spark, self.index_dir, self.positions)
+        mark(layout.DICTIONARY.name)
 
         stats = {
             "analyzer": ANALYZER_VERSION,
@@ -518,82 +406,15 @@ class IndexBuilder:
             "build_sec": time.time() - t0,
             "phases": phases,
         }
-        os.makedirs(self.index_dir, exist_ok=True)
-        with open(self.stats_path, "w") as f:
-            json.dump(stats, f, indent=2)
+        layout.write_stats(self.index_dir, stats)
         with_tokens.unpersist()
         return stats
 
-    # -- manifest / resume ---------------------------------------------
-    def _append_manifest(self, gname: str, gdir: str) -> None:
-        seg = self.spark.read.schema(self._segment_schema).parquet(gdir)
-        m = seg.agg(
-            F.count("*").alias("n_chunks"),
-            F.countDistinct("tid").alias("n_terms"),
-            F.sum("n_postings").alias("postings_written"),
-            F.sum(
-                F.octet_length("doc_bytes")
-                + F.octet_length("tf_bytes")
-                + F.octet_length("dl_bytes")
-                + (
-                    F.octet_length("pos_bytes")
-                    if self.positions
-                    else F.lit(0)
-                )
-            ).alias("bytes_written"),
-            (F.max("n_postings") / F.avg("n_postings")).alias("skew_ratio"),
-        ).withColumns(
-            {
-                "segment_group": F.lit(gname),
-                "status": F.lit("complete"),
-                "checkpoint_ts": F.current_timestamp(),
-                "input_snapshot": F.lit(self.index_dir),
-            }
-        )
-        m.coalesce(1).write.mode("append").parquet(self.manifest_path)
-        # per-PARTITION metrics table (north-star contract: postings
-        # written, bytes, skew ratio PER partition, not just per
-        # checkpoint group): one row per bucket in this group,
-        # appended to a parquet metrics table beside the manifest —
-        # the Iceberg-ready hook (TableCatalog would target an
-        # Iceberg table where the runtime jar exists; this host has
-        # none, see COVERAGE.md). The hot-bucket / skewed-term health
-        # signal lives here before it shows up as a straggler.
-        per_bucket = (
-            seg.groupBy("bucket")
-            .agg(
-                F.count("*").alias("n_chunks"),
-                F.countDistinct("tid").alias("n_terms"),
-                F.sum("n_postings").alias("postings_written"),
-                F.sum(
-                    F.octet_length("doc_bytes")
-                    + F.octet_length("tf_bytes")
-                    + F.octet_length("dl_bytes")
-                    + (
-                        F.octet_length("pos_bytes")
-                        if self.positions
-                        else F.lit(0)
-                    )
-                ).alias("bytes_written"),
-                (F.max("n_postings") / F.avg("n_postings")).alias(
-                    "skew_ratio"
-                ),
-            )
-            .withColumns(
-                {
-                    "segment_group": F.lit(gname),
-                    "checkpoint_ts": F.current_timestamp(),
-                }
-            )
-        )
-        per_bucket.coalesce(1).write.mode("append").parquet(
-            self.metrics_path
-        )
-
+    # -- resume --------------------------------------------------------
     def _completed_groups(self) -> set[str]:
         try:
             rows = (
-                self.spark.read.parquet(self.manifest_path)
+                layout.MANIFEST.read(self.spark, self.index_dir)
                 .where(F.col("status") == "complete")
                 .select("segment_group")
                 .collect()
@@ -601,6 +422,90 @@ class IndexBuilder:
             return {r["segment_group"] for r in rows}
         except Exception:
             return set()
+
+
+def check_term_collisions(spark: SparkSession, index_dir: str) -> None:
+    """Fail when two terms share a 64-bit term id in ``term_names``:
+    the collision check that makes ``tid = xxhash64(term)`` safe."""
+    collisions = (
+        layout.TERM_NAMES.read(spark, index_dir)
+        .groupBy("tid")
+        .agg(F.countDistinct("term").alias("n"))
+        .where(F.col("n") > 1)
+        .count()
+    )
+    if collisions:
+        raise RuntimeError(
+            f"{collisions} xxhash64 term collisions — rebuild "
+            "with a 128-bit term id (tid = xxhash64(term), "
+            "xxhash64(reverse(term)))"
+        )
+
+
+def write_dictionary(
+    spark: SparkSession, index_dir: str, positions: bool
+) -> None:
+    """The dictionary, derived from the written segments (column-pruned
+    read of tid/bucket/n_postings/sum_tf) joined with the names table
+    to restore term strings — both sides vocabulary-sized."""
+    seg_stats = (
+        layout.read_segments(spark, index_dir, positions)
+        .groupBy("tid", "bucket")
+        .agg(F.sum("n_postings").alias("df"), F.sum("sum_tf").alias("cf"))
+    )
+    names = layout.TERM_NAMES.read(spark, index_dir)
+    seg_stats.join(names, "tid").write.mode("overwrite").parquet(
+        layout.DICTIONARY.path(index_dir)
+    )
+
+
+def append_manifest(
+    spark: SparkSession, index_dir: str, gname: str, gdir: str,
+    positions: bool,
+) -> None:
+    """Append segment group ``gname``'s lineage row (the manifest) and
+    its per-bucket rows (the metrics table), aggregated from the
+    group's files at ``gdir``."""
+    seg = spark.read.schema(layout.segment_schema(positions)).parquet(gdir)
+    n_bytes = (
+        F.octet_length("doc_bytes")
+        + F.octet_length("tf_bytes")
+        + F.octet_length("dl_bytes")
+        + (F.octet_length("pos_bytes") if positions else F.lit(0))
+    )
+    aggs = [
+        F.count("*").alias("n_chunks"),
+        F.countDistinct("tid").alias("n_terms"),
+        F.sum("n_postings").alias("postings_written"),
+        F.sum(n_bytes).alias("bytes_written"),
+        (F.max("n_postings") / F.avg("n_postings")).alias("skew_ratio"),
+    ]
+    m = seg.agg(*aggs).withColumns(
+        {
+            "segment_group": F.lit(gname),
+            "status": F.lit("complete"),
+            "checkpoint_ts": F.current_timestamp(),
+            "input_snapshot": F.lit(index_dir),
+        }
+    )
+    m.coalesce(1).write.mode("append").parquet(layout.MANIFEST.path(index_dir))
+    # per-PARTITION metrics table (north-star contract: postings
+    # written, bytes, skew ratio PER partition, not just per
+    # checkpoint group): one row per bucket in this group,
+    # appended to a parquet metrics table beside the manifest —
+    # the Iceberg-ready hook (TableCatalog would target an
+    # Iceberg table where the runtime jar is installed, see
+    # COVERAGE.md). The hot-bucket / skewed-term health
+    # signal lives here before it shows up as a straggler.
+    per_bucket = seg.groupBy("bucket").agg(*aggs).withColumns(
+        {
+            "segment_group": F.lit(gname),
+            "checkpoint_ts": F.current_timestamp(),
+        }
+    )
+    per_bucket.coalesce(1).write.mode("append").parquet(
+        layout.METRICS.path(index_dir)
+    )
 
 
 def build_index(spark: SparkSession, docs: DataFrame, index_dir: str, **kw) -> dict:

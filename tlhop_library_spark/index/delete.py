@@ -14,13 +14,14 @@ Lucene-style two-phase lifecycle, re-expressed for the segment store:
    the live postings, so they remain valid upper bounds and BMW
    pruning stays exact.
 
-2. ``expunge_deletes`` is the compaction: an out-of-place rewrite
-   (source index stays valid throughout, like merge_index_ranges)
-   that decodes every chunk, drops tombstoned postings, and re-encodes
-   with FRESHLY recomputed stats — afterwards the index is
-   bit-for-bit semantically identical to a cold build of the surviving
-   docs (asserted by tests/test_index_delete.py), and the tombstone
-   table is gone.
+2. ``expunge_deletes`` is the compaction, the out-of-place
+   ``merge.rewrite_index`` (source stays valid throughout): it
+   re-derives the segments (every chunk decoded, tombstoned postings
+   dropped, re-encoded with FRESHLY recomputed stats), the doc lengths
+   and stored fields (base ∪ appended batches minus the deleted docs),
+   the dictionary, manifest and metrics; drops the tombstones; carries
+   the term names. The result is semantically identical to a cold
+   build of the surviving docs (asserted by tests/test_index_delete.py).
 
 At 10^12-doc scale the tombstone set rides into the scoring kernels
 as a sorted int64 array in the task closure — the analogue of
@@ -30,11 +31,7 @@ deletes are ≲10^8 ids (800 MB broadcast); past that, compact.
 
 from __future__ import annotations
 
-import json
 import math
-import os
-import shutil
-import time
 from collections.abc import Iterator
 
 import numpy as np
@@ -43,15 +40,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from tlhop_library_spark import bm25
-from tlhop_library_spark.index.append import read_doc_lengths
-from tlhop_library_spark.index.build import (
-    DOCLEN_DDL,
-    NAMES_DDL,
-    POS_SEGMENT_SCHEMA,
-    SEGMENT_SCHEMA,
-    IndexBuilder,
-    _encode_one,
-)
+from tlhop_library_spark.index import layout
+from tlhop_library_spark.index.build import _encode_one
+from tlhop_library_spark.index.merge import rewrite_index
 from tlhop_library_spark.index.postings import iter_chunks
 
 
@@ -72,22 +63,19 @@ def delete_documents(
         F.min("doc_id").alias("lo"),
         F.max("doc_id").alias("hi"),
     ).collect()[0]
-    stats_path = os.path.join(index_dir, "stats.json")
-    with open(stats_path) as f:
-        stats = json.load(f)
+    stats = layout.read_stats(index_dir)
     if not row["n"]:
         return stats
     bname = f"del_{row['lo']}_{row['hi']}_{row['n']}"
     if bname in stats.get("tombstone_batches", []):
         return stats
     ids_df.coalesce(1).write.mode("overwrite").parquet(
-        os.path.join(index_dir, "tombstones", bname)
+        layout.TOMBSTONES.path(index_dir, bname)
     )
     stats["tombstone_batches"] = stats.get("tombstone_batches", []) + [
         bname
     ]
-    with open(stats_path, "w") as f:
-        json.dump(stats, f, indent=2)
+    layout.write_stats(index_dir, stats)
     return stats
 
 
@@ -113,13 +101,12 @@ def load_tombstones(index_dir: str) -> np.ndarray | None:
     """Driver-side sorted-unique int64 tombstone ids (None if none) —
     read with pyarrow directly: the set must enter task closures as a
     numpy array anyway, and a Spark job per query would be overhead."""
-    tdir = os.path.join(index_dir, "tombstones")
-    if not os.path.isdir(tdir):
+    if not layout.TOMBSTONES.exists(index_dir):
         return None
     import pyarrow.dataset as ds
 
     arr = (
-        ds.dataset(tdir, format="parquet")
+        ds.dataset(layout.TOMBSTONES.path(index_dir), format="parquet")
         .to_table(columns=["doc_id"])
         .column("doc_id")
         .to_numpy(zero_copy_only=False)
@@ -137,43 +124,15 @@ def expunge_deletes(
     avgdl, df, block maxima) — the result is indistinguishable from a
     cold build of the surviving documents. Out-of-place: the source
     index stays valid throughout."""
-    t0 = time.time()
-    # the rewrite only overwrites the directories it writes
-    # (segments/bucket_group=0, dictionary, ...) — a stale delta group
-    # or manifest from a PREVIOUS index at out_dir would survive and
-    # corrupt the result, so replace a recognizable old index wholesale
-    # and refuse anything else that's non-empty
-    if os.path.isdir(out_dir) and os.listdir(out_dir):
-        if os.path.exists(os.path.join(out_dir, "stats.json")):
-            shutil.rmtree(out_dir)
-        else:
-            raise ValueError(
-                f"expunge target {out_dir!r} is non-empty and not an "
-                "index (no stats.json) — refusing to overwrite"
-            )
-    with open(os.path.join(index_dir, "stats.json")) as f:
-        stats = json.load(f)
+    stats = layout.read_stats(index_dir)
     positions = bool(stats.get("positions"))
-    schema = POS_SEGMENT_SCHEMA if positions else SEGMENT_SCHEMA
+    schema = layout.segment_schema(positions)
     deleted = load_tombstones(index_dir)
     range_size = int(stats["range_size"])
 
-    # surviving doc_lengths → fresh corpus stats (anti-join against the
-    # tombstone table — broadcast-sized by the compaction contract)
-    dl = read_doc_lengths(spark, index_dir)
-    if deleted is not None:
-        tomb = (
-            spark.read.option("recursiveFileLookup", "true")
-            .parquet(os.path.join(index_dir, "tombstones"))
-            .select("doc_id")
-            .distinct()
-        )
-        dl = dl.join(F.broadcast(tomb), "doc_id", "left_anti")
-    os.makedirs(out_dir, exist_ok=True)
-    dl.write.mode("overwrite").parquet(os.path.join(out_dir, "doc_lengths"))
-    row = spark.read.schema(DOCLEN_DDL).parquet(
-        os.path.join(out_dir, "doc_lengths")
-    ).agg(
+    # surviving doc lengths → fresh corpus stats
+    dl = _drop_deleted(layout.read_doc_lengths(spark, index_dir), deleted)
+    row = dl.agg(
         F.count("*").alias("n"),
         F.sum("dl").alias("sum_dl"),
         F.max("doc_id").alias("max_doc"),
@@ -222,46 +181,27 @@ def expunge_deletes(
                 yield pd.DataFrame(out)
 
     seg = (
-        spark.read.schema(schema)
-        .parquet(os.path.join(index_dir, "segments"))
+        layout.read_segments(spark, index_dir, positions)
         .select(*[f.name for f in schema.fields])
         .mapInPandas(rewrite, schema=schema)
         .sortWithinPartitions("tid")
     )
-    gdir = os.path.join(out_dir, "segments", "bucket_group=0")
-    seg.write.mode("overwrite").parquet(gdir)
-
-    # vocabulary tables: names copied, dictionary re-derived
-    shutil.rmtree(os.path.join(out_dir, "term_names"), ignore_errors=True)
-    shutil.copytree(
-        os.path.join(index_dir, "term_names"),
-        os.path.join(out_dir, "term_names"),
-    )
-    seg_stats = (
-        spark.read.schema(schema)
-        .parquet(os.path.join(out_dir, "segments"))
-        .groupBy("tid", "bucket")
-        .agg(F.sum("n_postings").alias("df"), F.sum("sum_tf").alias("cf"))
-    )
-    names = spark.read.schema(NAMES_DDL).parquet(
-        os.path.join(out_dir, "term_names")
-    )
-    seg_stats.join(names, "tid").write.mode("overwrite").parquet(
-        os.path.join(out_dir, "dictionary")
-    )
-
-    builder = IndexBuilder(
-        spark, out_dir,
-        n_buckets=int(stats["n_buckets"]),
-        n_ranges=int(stats["n_ranges"]),
-        positions=positions,
-    )
-    builder._append_manifest("expunge_0", gdir)
-
+    changes = {
+        layout.DOC_LENGTHS: dl,
+        layout.DOC_LENGTHS_BATCHES: None,
+        layout.STORED_BATCHES: None,
+        layout.TOMBSTONES: None,
+    }
+    if stats.get("stored_fields"):
+        changes[layout.STORED] = _drop_deleted(
+            layout.read_with_batches(spark, index_dir, layout.STORED),
+            deleted,
+        )
     new_stats = {
         k: v
         for k, v in stats.items()
-        if k not in ("tombstone_batches", "delta_groups", "phases")
+        if k not in ("tombstone_batches", "delta_groups", "phases",
+                     "build_sec")
     }
     new_stats.update(
         {
@@ -274,9 +214,26 @@ def expunge_deletes(
                 1, int(math.floor(max_doc / range_size)) + 1
             ),
             "expunged_from": index_dir,
-            "build_sec": time.time() - t0,
         }
     )
-    with open(os.path.join(out_dir, "stats.json"), "w") as f:
-        json.dump(new_stats, f, indent=2)
-    return new_stats
+    return rewrite_index(spark, index_dir, out_dir, seg, changes, new_stats)
+
+
+def _drop_deleted(df: DataFrame, deleted: np.ndarray | None) -> DataFrame:
+    """``df`` without the rows whose ``doc_id`` is tombstoned: the
+    sorted id array rides in the task closure, as in the segment
+    rewrite, so no second tombstone read is needed."""
+    if deleted is None:
+        return df
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    dead = pa.array(deleted)
+
+    def live(batches):
+        for b in batches:
+            yield b.filter(
+                pc.invert(pc.is_in(b.column("doc_id"), value_set=dead))
+            )
+
+    return df.mapInArrow(live, df.schema)

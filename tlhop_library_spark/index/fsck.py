@@ -26,11 +26,13 @@ dictionary_df     per-term df in the dictionary == Σ decoded postings
 stats_doclengths  stats.json n_docs / sum_dl == the doc_lengths table
 manifest_lineage  per-group postings_written / bytes_written in the
                   manifest == what the group's segment files contain
+artifacts         every artifact stats.json implies exists (see
+                  ``layout.implied_paths``): stored fields, appended
+                  batches, tombstone batches, the metrics table
 """
 
 from __future__ import annotations
 
-import json
 import os
 from typing import Iterator
 
@@ -40,11 +42,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from tlhop_library_spark import bm25
-from tlhop_library_spark.index.build import (
-    DICT_DDL,
-    POS_SEGMENT_SCHEMA,
-    SEGMENT_SCHEMA,
-)
+from tlhop_library_spark.index import layout
 from tlhop_library_spark.index.postings import decode_chunk
 
 __all__ = ["verify_index", "IndexCorruption"]
@@ -142,16 +140,13 @@ def verify_index(
 ) -> DataFrame:
     """Audit an index directory; returns one row per check:
     (check string, bad long, total long, status string)."""
-    with open(os.path.join(index_dir, "stats.json")) as f:
-        stats = json.load(f)
+    stats = layout.read_stats(index_dir)
     positions = bool(stats.get("positions"))
     avgdl = float(stats["avgdl"])
     enc = float(stats.get("min_encode_avgdl", avgdl) or avgdl)
     bound_scale = max(1.0, avgdl / enc) if enc > 0 else 1.0
 
-    seg = spark.read.schema(
-        POS_SEGMENT_SCHEMA if positions else SEGMENT_SCHEMA
-    ).parquet(os.path.join(index_dir, "segments"))
+    seg = layout.read_segments(spark, index_dir, positions)
     cols = [
         "tid", "range_id", "n_postings", "first_doc", "last_doc",
         "doc_bytes", "tf_bytes", "dl_bytes", "block_counts",
@@ -192,9 +187,7 @@ def verify_index(
         per_tid = audited.groupBy("tid").agg(
             F.sum("n_decoded").alias("n_dec")
         )
-        dic = spark.read.schema(DICT_DDL).parquet(
-            os.path.join(index_dir, "dictionary")
-        ).select("tid", "df")
+        dic = layout.DICTIONARY.read(spark, index_dir).select("tid", "df")
         joined = per_tid.join(dic, "tid", "full_outer")
         dic_bad = joined.where(
             F.col("n_dec").isNull()
@@ -205,9 +198,7 @@ def verify_index(
         rows.append(("dictionary_df", int(dic_bad), int(dic_total)))
 
         # stats ↔ doc_lengths (base ∪ appended batches)
-        from tlhop_library_spark.index.append import read_doc_lengths
-
-        dl = read_doc_lengths(spark, index_dir).agg(
+        dl = layout.read_doc_lengths(spark, index_dir).agg(
             F.count("*").alias("n"), F.sum("dl").alias("s")
         ).collect()[0]
         stats_bad = int(
@@ -219,7 +210,7 @@ def verify_index(
         rows.append(("stats_doclengths", stats_bad, 1))
 
         # manifest lineage ↔ segment contents, per group
-        man = spark.read.parquet(os.path.join(index_dir, "manifest"))
+        man = layout.MANIFEST.read(spark, index_dir)
         man_g = man.where(F.col("status") == "complete").select(
             F.regexp_replace("segment_group", r"^group_", "").alias("g"),
             "postings_written", "bytes_written",
@@ -237,6 +228,10 @@ def verify_index(
             | (F.col("b") != F.col("bytes_written"))
         ).count()
         rows.append(("manifest_lineage", int(man_bad), int(mj.count())))
+
+        implied = layout.implied_paths(index_dir, stats)
+        missing = sum(not os.path.exists(p) for p in implied)
+        rows.append(("artifacts", missing, len(implied)))
     finally:
         audited.unpersist()
 

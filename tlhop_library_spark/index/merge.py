@@ -17,21 +17,77 @@ This is the reference's OPTIMIZE/compaction shape
 (/root/reference/tlhop/converters/shodan_dataset_manager.py:115-146)
 applied to the index's own segment files: an offline rewrite into a
 NEW index directory (the source index stays valid throughout —
-crash-safe by construction), small tables copied, stats updated.
+crash-safe by construction) through ``rewrite_index``, the one
+rewrite merge and ``delete.expunge_deletes`` share. A merge re-derives
+the segments, dictionary, manifest and metrics, and carries everything
+else as is: the tombstones (deletes stay deleted, Lucene live-docs
+semantics), the doc lengths, the stored fields and the stats, the
+latter changed only in the coarser ranges.
 """
 
 from __future__ import annotations
 
-import json
 import math
 import os
 import shutil
 
-import pandas as pd
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from tlhop_library_spark.index.build import POS_SEGMENT_SCHEMA, SEGMENT_SCHEMA
+from tlhop_library_spark.index import layout
+from tlhop_library_spark.index.build import append_manifest, write_dictionary
+
+#: artifacts a rewrite never copies: it re-derives them from its new
+#: segments (an append's staging dir is transient and not carried)
+_NOT_CARRIED = (
+    layout.SEGMENTS, layout.SEGMENTS_STAGING, layout.DICTIONARY,
+    layout.MANIFEST, layout.METRICS,
+)
+
+
+def rewrite_index(
+    spark: SparkSession, src: str, out: str, segments: DataFrame,
+    changes: dict, stats: dict,
+) -> dict:
+    """Write the index at ``src`` into ``out`` with ``segments`` as its
+    one segment group and ``stats`` as its stats. ``changes`` maps an
+    artifact to the frame that replaces it (None drops it); the
+    dictionary, manifest and metrics are re-derived from the new
+    segments; every other artifact is copied as is. An artifact the
+    layout does not declare raises, so none is dropped silently.
+    ``stats.json`` is written last: it is the commit point."""
+    if os.path.abspath(src) == os.path.abspath(out):
+        raise ValueError("a rewrite needs a target other than its source")
+    unknown = layout.undeclared(src)
+    if unknown:
+        raise ValueError(
+            f"{src!r} holds {unknown}, which the index layout does not "
+            "declare — refusing to rewrite it"
+        )
+    # the writes below only overwrite what they name: a stale group or
+    # manifest of an older index at out would survive and corrupt the
+    # result, so replace a recognizable old index wholesale and refuse
+    # anything else that is non-empty
+    if os.path.isdir(out) and os.listdir(out):
+        if not layout.is_index(out):
+            raise ValueError(
+                f"rewrite target {out!r} is non-empty and not an index "
+                "— refusing to overwrite"
+            )
+        shutil.rmtree(out)
+    gdir = layout.group_path(out, 0)
+    segments.write.parquet(gdir)
+    for art in layout.ARTIFACTS:
+        if art in changes:
+            if changes[art] is not None:
+                changes[art].write.parquet(art.path(out))
+        elif art not in _NOT_CARRIED and art.exists(src):
+            shutil.copytree(art.path(src), art.path(out))
+    positions = bool(stats.get("positions"))
+    write_dictionary(spark, out, positions)
+    append_manifest(spark, out, "group_0", gdir, positions)
+    layout.write_stats(out, stats)
+    return stats
 
 
 def merge_index_ranges(
@@ -44,118 +100,60 @@ def merge_index_ranges(
     POSTING, so range order preserves every chain)."""
     if factor < 1:
         raise ValueError("factor must be >= 1")
-    with open(os.path.join(index_dir, "stats.json")) as f:
-        stats = json.load(f)
+    stats = layout.read_stats(index_dir)
     positions = bool(stats.get("positions"))
-    schema = POS_SEGMENT_SCHEMA if positions else SEGMENT_SCHEMA
+    schema = layout.segment_schema(positions)
 
     # drop the bucket_group partition column: the rewrite goes into a
     # single group dir and the kernel's schema is the segment schema exactly
-    seg = spark.read.schema(schema).parquet(
-        os.path.join(index_dir, "segments")
-    ).select(
+    seg = layout.read_segments(spark, index_dir, positions).select(
         *[f.name for f in schema.fields]
     )
 
-    def merge_group(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        # first_doc tiebreak: an appended index can hold TWO chunks of
-        # one (term, range) — doc-disjoint batches; byte-concat is only
-        # the merged sorted list if they concatenate in doc order
-        pdf = pdf.sort_values(["range_id", "first_doc"])
-        if len(pdf) == 1:
-            row = pdf.iloc[0].to_dict()
-            row["range_id"] = int(row["range_id"]) // factor
-            return pd.DataFrame([row])
-        doc_off = tf_off = dl_off = pos_off = 0
-        b_first, b_last, b_counts = [], [], []
-        b_doc, b_tf, b_dl, b_pos, b_max = [], [], [], [], []
-        doc_parts, tf_parts, dl_parts, pos_parts = [], [], [], []
-        for _, r in pdf.iterrows():
-            b_doc.extend(int(x) + doc_off for x in r["block_doc_offsets"])
-            b_tf.extend(int(x) + tf_off for x in r["block_tf_offsets"])
-            b_dl.extend(int(x) + dl_off for x in r["block_dl_offsets"])
-            b_first.extend(int(x) for x in r["block_first_docs"])
-            b_last.extend(int(x) for x in r["block_last_docs"])
-            b_counts.extend(int(x) for x in r["block_counts"])
-            b_max.extend(float(x) for x in r["block_max_w"])
-            doc_parts.append(bytes(r["doc_bytes"]))
-            tf_parts.append(bytes(r["tf_bytes"]))
-            dl_parts.append(bytes(r["dl_bytes"]))
-            doc_off += len(doc_parts[-1])
-            tf_off += len(tf_parts[-1])
-            dl_off += len(dl_parts[-1])
-            if positions:
-                b_pos.extend(int(x) + pos_off for x in r["block_pos_offsets"])
-                pos_parts.append(bytes(r["pos_bytes"]))
-                pos_off += len(pos_parts[-1])
-        first = pdf.iloc[0]
-        return pd.DataFrame(
-            [
-                {
-                    "tid": int(first["tid"]),
-                    "bucket": int(first["bucket"]),
-                    "range_id": int(first["range_id"]) // factor,
-                    "n_postings": int(pdf["n_postings"].sum()),
-                    "sum_tf": int(pdf["sum_tf"].sum()),
-                    "first_doc": int(first["first_doc"]),
-                    "last_doc": int(pdf.iloc[-1]["last_doc"]),
-                    "doc_bytes": b"".join(doc_parts),
-                    "tf_bytes": b"".join(tf_parts),
-                    "dl_bytes": b"".join(dl_parts),
-                    "block_first_docs": b_first,
-                    "block_last_docs": b_last,
-                    "block_counts": b_counts,
-                    "block_doc_offsets": b_doc,
-                    "block_tf_offsets": b_tf,
-                    "block_dl_offsets": b_dl,
-                    "block_max_w": b_max,
-                    "max_w": float(pdf["max_w"].max()),
-                    **(
-                        {
-                            "pos_bytes": b"".join(pos_parts),
-                            "block_pos_offsets": b_pos,
-                        }
-                        if positions
-                        else {}
-                    ),
-                }
-            ]
+    # one JVM aggregate per (term, bucket, merged range): chunks sorted
+    # by (range_id, first_doc) — an appended index can hold TWO chunks
+    # of one (term, range), doc-disjoint batches, and byte-concat is
+    # only the merged sorted list in doc order — then every stream is
+    # concatenated and its block offsets shifted by the bytes of the
+    # chunks before it
+    streams = ["doc", "tf", "dl"] + (["pos"] if positions else [])
+    blocks = ["block_first_docs", "block_last_docs", "block_counts",
+              "block_max_w"]
+    chunk = F.struct(
+        "range_id", "first_doc", *blocks,
+        *[c for s in streams for c in (f"{s}_bytes", f"block_{s}_offsets")],
+    )
+    merged = seg.groupBy(
+        "tid", "bucket",
+        F.floor(F.col("range_id") / factor).cast("int").alias("merged_range"),
+    ).agg(
+        F.sum("n_postings").alias("n_postings"),
+        F.sum("sum_tf").alias("sum_tf"),
+        F.min("first_doc").alias("first_doc"),
+        F.max("last_doc").alias("last_doc"),
+        F.max("max_w").alias("max_w"),
+        F.sort_array(F.collect_list(chunk)).alias("c"),
+    ).withColumnRenamed("merged_range", "range_id")
+    cols = {b: F.expr(f"flatten(transform(c, x -> x.{b}))") for b in blocks}
+    for s in streams:
+        before = (f"aggregate(slice(c, 1, i), 0, "
+                  f"(a, y) -> a + octet_length(y.{s}_bytes))")
+        cols[f"{s}_bytes"] = F.expr(
+            f"aggregate(c, cast('' as binary), (a, x) -> concat(a, x.{s}_bytes))"
         )
-
+        cols[f"block_{s}_offsets"] = F.expr(
+            f"flatten(transform(c, (x, i) -> transform("
+            f"x.block_{s}_offsets, o -> o + {before})))"
+        )
     merged = (
-        seg.withColumn(
-            "merged_range", F.floor(F.col("range_id") / factor).cast("int")
-        )
-        .groupBy("tid", "bucket", "merged_range")
-        .applyInPandas(
-            lambda key, pdf: merge_group(key, pdf.drop(columns=["merged_range"])),
-            schema=schema,
-        )
+        merged.withColumns(cols)
+        .select(*[f.name for f in schema.fields])
         .sortWithinPartitions("tid")
     )
-
-    os.makedirs(out_dir, exist_ok=True)
-    merged.write.mode("overwrite").parquet(
-        os.path.join(out_dir, "segments", "bucket_group=0")
-    )
-    for small in (
-        "dictionary",
-        "doc_lengths",
-        "doc_lengths_batches",
-        "term_names",
-        "manifest",
-    ):
-        src = os.path.join(index_dir, small)
-        if os.path.exists(src):
-            dst = os.path.join(out_dir, small)
-            shutil.rmtree(dst, ignore_errors=True)
-            shutil.copytree(src, dst)
 
     new_stats = dict(stats)
     new_stats["range_size"] = int(stats["range_size"]) * factor
     new_stats["n_ranges"] = math.ceil(int(stats["n_ranges"]) / factor)
     new_stats["merged_from"] = index_dir
     new_stats["merge_factor"] = factor
-    with open(os.path.join(out_dir, "stats.json"), "w") as f:
-        json.dump(new_stats, f, indent=2)
-    return new_stats
+    return rewrite_index(spark, index_dir, out_dir, merged, {}, new_stats)

@@ -43,6 +43,7 @@ from pyspark.sql import functions as F
 
 from tlhop_library_spark import bm25
 from tlhop_library_spark.analyzer import py_tokens
+from tlhop_library_spark.index.layout import read_doc_lengths
 from tlhop_library_spark.index.postings import (
     empty_scores,
     iter_chunks,
@@ -362,9 +363,8 @@ class MultiFieldIndexReader:
         once per weight configuration, exactly like Lucene stores one
         norm per (field, doc) and CombinedFieldQuery merges them at
         read time. The table is (doc_id, dl_c, range_id) — one narrow
-        groupBy over the per-field doc_lengths parquets."""
-        import os
-
+        groupBy over the per-field doc_lengths (base ∪ appended
+        batches)."""
         key = tuple(sorted(
             (f, float(weights.get(f, 1.0))) for f in self.readers
         ))
@@ -380,9 +380,7 @@ class MultiFieldIndexReader:
             w = float(weights.get(f, 1.0))
             if w == 0.0:
                 continue
-            dl = self.spark.read.parquet(
-                os.path.join(r.index_dir, "doc_lengths")
-            )
+            dl = read_doc_lengths(self.spark, r.index_dir)
             parts.append(
                 dl.select(
                     F.col("doc_id").cast("long").alias("doc_id"),

@@ -27,9 +27,7 @@ Two paths, asserted rank-identical by tests:
 from __future__ import annotations
 
 import functools
-import json
 import operator
-import os
 
 import numpy as np
 import pandas as pd
@@ -55,11 +53,8 @@ from tlhop_library_spark.index.boolq import (
     compile_query,
     subst_tids,
 )
-from tlhop_library_spark.index.build import (
-    DICT_DDL,
-    POS_SEGMENT_SCHEMA,
-    SEGMENT_SCHEMA,
-)
+from tlhop_library_spark.index import layout
+from tlhop_library_spark.index.layout import POS_SEGMENT_SCHEMA, SEGMENT_SCHEMA
 from tlhop_library_spark.index.delete import load_tombstones
 from tlhop_library_spark.index.phrase import (
     phrase_prefix_range_scorer,
@@ -4167,17 +4162,13 @@ class IndexReader(HitStreamModes):
         and lookups stay pushdown-filtered Spark jobs)."""
         self.spark = spark
         self.index_dir = index_dir
-        with open(os.path.join(index_dir, "stats.json")) as f:
-            self.stats = json.load(f)
+        self.stats = layout.read_stats(index_dir)
         # known schemas: a schema-less read starts a footer-reading
         # inference job per table on every reader open
-        self._dict = spark.read.schema(DICT_DDL).parquet(
-            os.path.join(index_dir, "dictionary")
+        self._dict = layout.DICTIONARY.read(spark, index_dir)
+        self._segments = layout.read_segments(
+            spark, index_dir, bool(self.stats.get("positions"))
         )
-        self._segments = spark.read.schema(
-            POS_SEGMENT_SCHEMA if self.stats.get("positions")
-            else SEGMENT_SCHEMA
-        ).parquet(os.path.join(index_dir, "segments"))
         # live-docs mask (delete.py): sorted tombstone ids or None;
         # rides into every scoring kernel's closure
         self._deleted = load_tombstones(index_dir)
@@ -4187,7 +4178,7 @@ class IndexReader(HitStreamModes):
                 import pyarrow.dataset as ds
 
                 tbl = ds.dataset(
-                    os.path.join(index_dir, "dictionary"), format="parquet"
+                    layout.DICTIONARY.path(index_dir), format="parquet"
                 ).to_table(columns=["term", "df", "bucket", "tid"])
                 if tbl.num_rows <= preload_dictionary:
                     cols = [c.to_pylist() for c in tbl.columns]
@@ -4845,7 +4836,7 @@ class IndexReader(HitStreamModes):
             import pyarrow.dataset as ds
 
             self._pa_ds = ds.dataset(
-                os.path.join(self.index_dir, "segments"),
+                layout.SEGMENTS.path(self.index_dir),
                 format="parquet",
                 partitioning="hive",
             )
@@ -4859,7 +4850,7 @@ class IndexReader(HitStreamModes):
                 import pyarrow.dataset as ds
 
                 t = ds.dataset(
-                    os.path.join(self.index_dir, "manifest"),
+                    layout.MANIFEST.path(self.index_dir),
                     format="parquet",
                 ).to_table(columns=["postings_written", "bytes_written"])
                 n = sum(t.column("postings_written").to_pylist())
@@ -4876,9 +4867,7 @@ class IndexReader(HitStreamModes):
         (north-star contract; written by the builder beside the
         per-group manifest). The hot-bucket health signal — a skewed
         term shows up here before it shows up as a straggler."""
-        return self.spark.read.parquet(
-            os.path.join(self.index_dir, "metrics")
-        )
+        return layout.METRICS.read(self.spark, self.index_dir)
 
     def _local_parts(self, info, scorer,
                      fields=SEGMENT_SCHEMA.fields) -> list:
@@ -5082,8 +5071,6 @@ class IndexReader(HitStreamModes):
         and the pending-tombstone count. One column-pruned dictionary
         scan + one manifest read; returns a plain dict (a handful of
         scalars — this is a report, not a data path)."""
-        import os
-
         d = {
             "n_docs": int(self.stats["n_docs"]),
             "avgdl": float(self.stats["avgdl"]),
@@ -5107,10 +5094,9 @@ class IndexReader(HitStreamModes):
         d["n_deleted"] = (
             int(self._deleted.size) if self._deleted is not None else 0
         )
-        man = os.path.join(self.index_dir, "manifest")
         d["n_segment_groups"] = (
-            self.spark.read.parquet(man).count()
-            if os.path.isdir(man)
+            layout.MANIFEST.read(self.spark, self.index_dir).count()
+            if layout.MANIFEST.exists(self.index_dir)
             else 0
         )
         return d
@@ -5127,8 +5113,6 @@ class IndexReader(HitStreamModes):
         Tombstoned docs are not filtered here: the collector
         operators intersect with the hit stream, which masks deletes
         (Lucene live-docs semantics)."""
-        import os
-
         flds = self.stats.get("stored_fields") or []
         if not flds:
             raise ValueError(
@@ -5136,18 +5120,9 @@ class IndexReader(HitStreamModes):
                 "IndexBuilder(..., stored_fields=[...]) or pass an "
                 "external docs table"
             )
-        base = self.spark.read.parquet(
-            os.path.join(self.index_dir, "stored")
+        return layout.read_with_batches(
+            self.spark, self.index_dir, layout.STORED
         )
-        batches = os.path.join(self.index_dir, "stored_batches")
-        if os.path.isdir(batches):
-            for name in sorted(os.listdir(batches)):
-                sub = os.path.join(batches, name)
-                if os.path.isdir(sub):
-                    base = base.unionByName(
-                        self.spark.read.parquet(sub)
-                    )
-        return base
 
     def suggest_phrase(
         self, query_text: str, docs: DataFrame, n: int = 3,

@@ -27,6 +27,8 @@ import os
 import shutil
 import time
 
+from tlhop_library_spark.index.layout import STATS, is_index
+
 SNAPSHOT_META = "snapshot.json"
 
 
@@ -64,8 +66,8 @@ def snapshot_index(
     its manifest) so a restore reproduces the CURRENT commit point.
 
     Returns a summary dict: n_files, bytes_copied, bytes_skipped."""
-    if not os.path.isfile(os.path.join(index_dir, "stats.json")):
-        raise ValueError(f"{index_dir} is not an index (no stats.json)")
+    if not is_index(index_dir):
+        raise ValueError(f"{index_dir} is not an index (no {STATS})")
     # a snap_dir nested inside index_dir would make _walk_files pick
     # up the previous snapshot (manifest + copies) on the next run,
     # growing the snapshot recursively (round-3 ADVICE) — refuse
